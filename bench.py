@@ -75,6 +75,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1)) if match else -1.0
+    # Normalized once, before any timing: a malformed value fails here,
+    # not after the timed passes when the run artifact is written.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
     from data_algorithms_with_pyspark_spark.plans.catalog import all_queries
     from data_algorithms_with_pyspark_spark.session import get_spark
@@ -191,7 +194,6 @@ def main() -> None:
     # (VERDICT r11 next-round #1: "full per-query dict written to a run
     # artifact per run"). Pure measurement output — never read back by
     # any query path.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     art_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "bench_runs")
     try:
         os.makedirs(art_dir, exist_ok=True)
@@ -199,7 +201,7 @@ def main() -> None:
             os.path.join(art_dir, f"queries_sf{sf}_c{cpus}.json"), "w"
         ) as fh:
             json.dump(
-                {"sf": sf, "cpus": int(cpus), "total": total, "core": core,
+                {"sf": sf, "cpus": cpus, "total": total, "core": core,
                  "queries": timings, "rows": rows},
                 fh,
                 indent=1,

@@ -7,15 +7,17 @@ first-k-ids stand-in. The reference has no clustering at all (its README
 stops at graph examples, ``/root/reference/src/chapter_06/README.md``);
 this is a north-star extension shaped for a 100 TB corpus:
 
-* per-iteration data motion is ONE broadcast of k centroids out and ONE
-  hash-aggregate shuffle of (cid, pos) partial sums back — the corpus never
-  shuffles. This is exactly Spark MLlib's KMeans data motion, re-expressed
-  in DataFrame ops.
+* per-iteration data motion is the k centroids out (a plan literal, or a
+  broadcast past ``LITERAL_CELLS_MAX``) and ONE hash-aggregate shuffle of
+  (cid, pos) partial sums back — the corpus never shuffles. This is
+  Spark MLlib's KMeans data motion, re-expressed in DataFrame ops.
 * driver state is k*dim doubles (the centroids) — e.g. 4096 clusters x
   1024 dims = 32 MB, independent of corpus size.
-* assignment reuses the packed-argmax HashAggregate encoding from
-  ``similarity.ivf_assign`` (struct-free aggregation buffer, map-side
-  combine over the broadcast product).
+* assignment is this module's one nearest-centroid primitive,
+  ``with_nearest_centroid``: a row-local packed argmax over a centroid
+  literal (``assign_expr``), or a broadcast product + packed-argmax
+  HashAggregate past ``LITERAL_CELLS_MAX``. IVF lists, SemDeDup clusters
+  and the ANN index builds assign through the same function.
 
 Determinism: init is the k lowest-id vectors; every centroid coordinate is
 quantized to the 1e-6 grid (``CENTROID_QUANT`` dp) before use, so run-to-run
@@ -38,6 +40,7 @@ from data_algorithms_with_pyspark_spark.functions.vectors import (
     l2_norm,
     lit_double_array,
     lit_double_matrix,
+    lit_long_array,
     to_double_array,
 )
 
@@ -46,8 +49,11 @@ __all__ = [
     "LITERAL_CELLS_MAX",
     "assign_expr",
     "assign_to_centroids",
+    "collect_centroids",
     "kmeans_train",
     "kmeans_fit_assign",
+    "literal_fits",
+    "with_nearest_centroid",
 ]
 
 # Decimal places every centroid coordinate is rounded to (both in this
@@ -59,7 +65,7 @@ CENTROID_QUANT = 6
 # analyzer/codegen cost grows with k*dim cells — fine at the catalog
 # operating points (16x64 = 1024 cells), pathological for a 4000x1024
 # quantizer (~4M doubles in the plan). Above this cell count
-# ``assign_to_centroids`` switches to the broadcast-product +
+# ``with_nearest_centroid`` switches to the broadcast-product +
 # packed-argmax HashAggregate form, which degrades gracefully (the
 # payload moves as a broadcast relation, not a plan literal). 1e5 cells
 # ~ 800 KB of doubles ~ well under a second of parse/analysis.
@@ -77,63 +83,167 @@ def l2_norm_py(v: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def assign_expr(
-    centroids: list[list[float]],
-    n_cents: int,
-    vec_col: str = "vec",
-    vn_col: str = "_vn",
-) -> Column:
-    """ROW-LOCAL nearest-centroid (max-cosine) assignment expression.
+def literal_fits(cells: int) -> bool:
+    """The one literal/broadcast switch: True when a centroid matrix of
+    ``cells`` doubles may ride the plan as a literal. Reads
+    ``LITERAL_CELLS_MAX`` at call time."""
+    return cells <= LITERAL_CELLS_MAX
 
-    Same packed-argmax arithmetic as the historical broadcast-product +
-    HashAggregate form (round((cos+1)*1e15)*n + (n-1-cid), max, ties to
-    the lower cid — bit-identical cosine via ``cosine_with_norms`` with
-    the centroid norms pre-folded driver-side by the same IEEE op
-    sequence), but evaluated as ONE projection over the corpus: a
-    ``transform`` over a single nested-array centroid literal + an
-    ``array_max``. No broadcast join, no per-id aggregate exchange, and —
-    decisive at 100 TB — downstream consumers attach ``cid`` in the SAME
-    projection instead of shuffling the corpus through a join-back on id
-    (guide §2.4/§3.3: the join-back was re-keying the corpus by an id it
-    never needed again). The caller must pre-project ``vn_col`` =
-    ``l2_norm(vec_col)`` (one fold per row, not per centroid).
-    """
-    if len(centroids) != n_cents:
-        raise ValueError(f"expected {n_cents} centroids, got {len(centroids)}")
+
+def _check_n_cents(n_cents: int) -> None:
+    # round((cos+1)*1e15) <= 2e15, so the packed key fits a signed long
+    # only while n_cents < ~4611
     if n_cents > 4000:
         raise ValueError(
             f"n_cents={n_cents} exceeds the packed-argmax overflow bound "
             "(4000); use a hierarchical/two-level quantizer instead"
         )
-    cells = sum(len(c) for c in centroids)
-    if cells > LITERAL_CELLS_MAX:
-        # loud guard, not graceful degradation: this EXPRESSION rides the
-        # plan as a literal, so past the bound the right move is the
-        # broadcast form (assign_to_centroids switches automatically)
+
+
+def _check_centroids(
+    cent_pairs: list[tuple[int, list[float]]], n_cents: int
+) -> None:
+    _check_n_cents(n_cents)
+    ids = [c for c, _ in cent_pairs]
+    if not ids or len(set(ids)) != len(ids) or not all(
+        0 <= c < n_cents for c in ids
+    ):
+        raise ValueError(
+            f"need unique centroid ids within 0..{n_cents - 1}, "
+            f"got {sorted(ids)}"
+        )
+
+
+def _packed(cos: Column, cid: Column, n_cents: int) -> Column:
+    """Packed argmax key ``round((cos+1)*1e15)*n + (n-1-cid)``: its max is
+    the best cosine, exact ties going to the lower cid. Quantizing cos at
+    1e-15 is below double's own rounding noise at |cos| <= 1."""
+    grid = F.round((cos + F.lit(1.0)) * F.lit(1e15)).cast("long")
+    return grid * F.lit(n_cents) + (F.lit(n_cents - 1) - cid)
+
+
+def _unpacked_cid(best: Column, n_cents: int) -> Column:
+    return (F.lit(n_cents - 1) - best % n_cents).cast("int")
+
+
+def collect_centroids(
+    vecs: DataFrame,
+    n_cents: int,
+    id_col: str = "vec_id",
+    centroids: DataFrame | None = None,
+) -> list[tuple[int, list[float]]]:
+    """The centroids as a driver-side (cid, cvec) list sorted by cid — a
+    bounded collect of n_cents rows. ``centroids=None`` collects the
+    deterministic first-``n_cents``-ids stand-in from ``vecs``; a (cid,
+    cvec) DataFrame is collected as-is. The list may be SPARSE (fewer than
+    ``n_cents`` entries) when the source is missing low ids: the quantizer
+    is whatever centroid rows exist. The overflow guard runs before the
+    collect; ids are checked where the list is used."""
+    _check_n_cents(n_cents)
+    if centroids is None:
+        centroids = vecs.where(F.col(id_col) < n_cents).select(
+            F.col(id_col).alias("cid"), F.col("vec").alias("cvec")
+        )
+    rows = centroids.select("cid", "cvec").collect()
+    return sorted((int(r["cid"]), [float(x) for x in r["cvec"]]) for r in rows)
+
+
+def assign_expr(
+    cent_pairs: list[tuple[int, list[float]]],
+    n_cents: int,
+    vec_col: str = "vec",
+    vn_col: str = "_vn",
+) -> Column:
+    """ROW-LOCAL nearest-centroid (max-cosine) assignment: ``cid int``.
+
+    ``cent_pairs`` are (cid, cvec) with unique cids in ``0..n_cents-1``
+    (sparse allowed). The packed argmax (``_packed``) is evaluated as ONE
+    projection over the corpus: a ``transform`` over a single nested-array
+    centroid literal + an ``array_max``, with cosine via
+    ``cosine_with_norms`` and the centroid norms pre-folded driver-side by
+    the same IEEE op sequence. No broadcast join, no per-id aggregate
+    exchange, and — decisive at 100 TB — consumers attach ``cid`` in the
+    SAME projection instead of shuffling the corpus through a join-back on
+    id. The caller must pre-project ``vn_col`` = ``l2_norm(vec_col)`` (one
+    fold per row, not per centroid). Raises past ``LITERAL_CELLS_MAX``:
+    this expression rides the plan as a literal, so larger quantizers go
+    through ``with_nearest_centroid``'s broadcast form.
+    """
+    _check_centroids(cent_pairs, n_cents)
+    cells = sum(len(cv) for _, cv in cent_pairs)
+    if not literal_fits(cells):
         raise ValueError(
             f"centroid literal of {cells} cells exceeds LITERAL_CELLS_MAX="
-            f"{LITERAL_CELLS_MAX}; use assign_to_centroids (broadcast form)"
+            f"{LITERAL_CELLS_MAX}; use with_nearest_centroid (broadcast form)"
         )
     # ONE-string SQL literals: F.lit(nested list) costs ~0.5 s of Py4J
     # round trips per construction (functions/vectors.lit_double_matrix)
-    cvecs = lit_double_matrix(centroids)
-    cns = lit_double_array([l2_norm_py(c) for c in centroids])
+    cvecs = lit_double_matrix([cv for _, cv in cent_pairs])
+    cns = lit_double_array([l2_norm_py(cv) for _, cv in cent_pairs])
+    cids = lit_long_array([c for c, _ in cent_pairs])
     packed = F.transform(
         cvecs,
-        lambda cv, i: F.round(
-            (
-                cosine_with_norms(
-                    F.col(vec_col), cv, F.col(vn_col), F.element_at(cns, i + 1)
-                )
-                + F.lit(1.0)
-            )
-            * F.lit(1e15)
-        ).cast("long")
-        * F.lit(n_cents)
-        + (F.lit(n_cents - 1) - i),
+        lambda cv, i: _packed(
+            cosine_with_norms(
+                F.col(vec_col), cv, F.col(vn_col), F.element_at(cns, i + 1)
+            ),
+            F.element_at(cids, i + 1),
+            n_cents,
+        ),
     )
-    best = F.array_max(packed)
-    return (F.lit(n_cents - 1) - best % n_cents).cast("int")
+    return _unpacked_cid(F.array_max(packed), n_cents)
+
+
+def with_nearest_centroid(
+    df: DataFrame,
+    cent_pairs: list[tuple[int, list[float]]],
+    n_cents: int,
+    *cols: str,
+    id_col: str = "vec_id",
+    vec_col: str = "vec",
+    vn_col: str = "_vn",
+) -> DataFrame:
+    """``df`` projected to ``cols`` (default: all of its columns) plus the
+    nearest-centroid ``cid int`` — the one assignment step behind k-means,
+    IVF lists, SemDeDup clusters and the ANN index builds.
+
+    ``vn_col`` is staged as ``l2_norm(vec_col)`` when ``df`` lacks it.
+    Two physical forms, switched on quantizer size (``literal_fits``), both
+    computing the identical packed argmax and tie-break (lower cid), so
+    outputs are bit-equal:
+
+    * ``<= LITERAL_CELLS_MAX`` (every catalog operating point): the
+      row-local ``assign_expr`` in the caller's projection — zero joins,
+      zero exchanges.
+    * above it: a broadcast product against the centroid table + a
+      packed-argmax HashAggregate per ``id_col``, joined back onto ``df``
+      unless ``cols`` is just ``id_col``. The centroids move as a
+      broadcast relation, not a multi-megabyte plan literal that would
+      explode analyzer/codegen cost.
+    """
+    if vn_col not in df.columns:
+        df = df.withColumn(vn_col, l2_norm(F.col(vec_col)))
+    cols = cols or tuple(df.columns)
+    if literal_fits(sum(len(cv) for _, cv in cent_pairs)):
+        return df.select(
+            *cols, assign_expr(cent_pairs, n_cents, vec_col, vn_col).alias("cid")
+        )
+    _check_centroids(cent_pairs, n_cents)
+    cents = df.sparkSession.createDataFrame(
+        cent_pairs, "cid int, cvec array<double>"
+    ).select("cid", "cvec", l2_norm(F.col("cvec")).alias("_cn"))
+    cos = cosine_with_norms(
+        F.col(vec_col), F.col("cvec"), F.col(vn_col), F.col("_cn")
+    )
+    best = (
+        df.crossJoin(F.broadcast(cents))
+        .groupBy(id_col)
+        .agg(F.max(_packed(cos, F.col("cid"), n_cents)).alias("_best"))
+        .select(id_col, _unpacked_cid(F.col("_best"), n_cents).alias("cid"))
+    )
+    if list(cols) == [id_col]:
+        return best
+    return df.join(best, on=id_col).select(*cols, "cid")
 
 
 def assign_to_centroids(
@@ -147,68 +257,13 @@ def assign_to_centroids(
     ``vecs``: (id_col, vec: array<double>); ``cents``: either the trained
     centroid list (``kmeans_train`` output — row i = centroid i) or a
     (cid, cvec) DataFrame with cid in [0, n_cents), which is collected
-    (bounded: n_cents rows — the exact payload the old plan broadcast).
-
-    Two physical forms, switched on quantizer size (``LITERAL_CELLS_MAX``
-    cells — VERDICT r11 #3/#6), both computing the IDENTICAL packed-argmax
-    arithmetic and tie-break (lower cid), so outputs are bit-equal:
-
-    * ``<= LITERAL_CELLS_MAX`` (every catalog operating point): the
-      ROW-LOCAL ``assign_expr`` projection — zero joins, zero exchanges,
-      plan is Scan -> Project; consumers attach cid in the projection.
-    * above it: the broadcast-product + packed-bigint HashAggregate
-      argmax (the pre-r11 form) — the centroid payload moves as a
-      broadcast relation instead of a plan literal, which degrades
-      gracefully where a multi-megabyte literal would explode
-      analyzer/codegen cost.
+    (bounded: n_cents rows). Assignment is ``with_nearest_centroid``.
     """
-    if n_cents > 4000:  # guard BEFORE any collect — same contract as assign_expr
-        raise ValueError(
-            f"n_cents={n_cents} exceeds the packed-argmax overflow bound "
-            "(4000); use a hierarchical/two-level quantizer instead"
-        )
     if isinstance(cents, DataFrame):
-        rows = cents.select("cid", "cvec").collect()
-        by_cid = {int(r["cid"]): [float(x) for x in r["cvec"]] for r in rows}
-        if sorted(by_cid) != list(range(n_cents)):
-            raise ValueError(
-                f"centroid table must carry cid 0..{n_cents - 1} exactly"
-            )
-        centroids = [by_cid[c] for c in range(n_cents)]
+        pairs = collect_centroids(vecs, n_cents, id_col=id_col, centroids=cents)
     else:
-        centroids = [list(c) for c in cents]
-    dim = len(centroids[0]) if centroids else 0
-    if n_cents * dim <= LITERAL_CELLS_MAX:
-        return vecs.withColumn("_vn", l2_norm(F.col("vec"))).select(
-            F.col(id_col),
-            assign_expr(centroids, n_cents).alias("cid"),
-        )
-    # Large-quantizer path: broadcast the centroid table, packed-argmax
-    # HashAggregate per id — same grid, same tie encoding.
-    spark = vecs.sparkSession
-    cdf = spark.createDataFrame(
-        list(enumerate(centroids)), "cid int, cvec array<double>"
-    ).select("cid", "cvec", l2_norm(F.col("cvec")).alias("_cn"))
-    v = vecs.withColumn("_vn", l2_norm(F.col("vec")))
-    cos_vc = cosine_with_norms(
-        F.col("vec"), F.col("cvec"), F.col("_vn"), F.col("_cn")
-    )
-    packed = (
-        F.round((cos_vc + F.lit(1.0)) * F.lit(1e15)).cast("long")
-        * F.lit(n_cents)
-        + (F.lit(n_cents - 1) - F.col("cid"))
-    )
-    return (
-        v.crossJoin(F.broadcast(cdf))
-        .groupBy(id_col)
-        .agg(F.max(packed).alias("best"))
-        .select(
-            F.col(id_col),
-            (F.lit(n_cents - 1) - F.col("best") % n_cents)
-            .cast("int")
-            .alias("cid"),
-        )
-    )
+        pairs = [(c, list(cv)) for c, cv in enumerate(cents)]
+    return with_nearest_centroid(vecs, pairs, n_cents, id_col, id_col=id_col)
 
 
 def kmeans_train(
@@ -238,33 +293,20 @@ def kmeans_train(
     if len(init) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(init)}")
     centroids = [[round(x, CENTROID_QUANT) for x in row["vec"]] for row in init]
-    # Literal form below the cell bound; above it each iteration assigns
-    # via the broadcast form + a join-back on id — the graceful-
-    # degradation shape for quantizers whose matrix would otherwise ride
-    # the plan as a multi-megabyte literal (LITERAL_CELLS_MAX note).
-    use_literal = k * len(centroids[0]) <= LITERAL_CELLS_MAX
 
     for _ in range(max_iter):
-        # Assignment is the row-local assign_expr (identical packed-argmax
-        # arithmetic), so each Lloyd iteration is ONE fused pass over the
-        # persisted corpus — assign + posexplode + (cid, pos) partial means
-        # in a single stage, one k*dim-keyed exchange. The previous shape
-        # paid a broadcast product, a per-id aggregate exchange, AND a
-        # join-back that re-shuffled the corpus vectors by id every
-        # iteration (three exchanges; at 100 TB the join-back alone moved
-        # the full corpus per iteration).
+        # On the literal side (every catalog operating point) assignment
+        # rides the projection over the persisted corpus, so each Lloyd
+        # iteration is ONE fused pass — assign + posexplode + (cid, pos)
+        # partial means in a single stage, one k*dim-keyed exchange.
         # cid MUST be staged as an attribute in its own Project BEFORE the
         # generator: a non-attribute expression in a select alongside
         # posexplode lands in the Project ABOVE the Generate and is
         # re-evaluated once per EXPLODED row — dim x the argmax work
         # (measured 5x on this trainer).
-        if use_literal:
-            assigned = work.select(assign_expr(centroids, k).alias("cid"), "vec")
-        else:
-            assigned = work.join(
-                assign_to_centroids(work, centroids, k, id_col=id_col),
-                on=id_col,
-            ).select("cid", "vec")
+        assigned = with_nearest_centroid(
+            work, list(enumerate(centroids)), k, "vec", id_col=id_col
+        )
         rows = (
             assigned
             .select("cid", F.posexplode("vec").alias("pos", "val"))

@@ -44,6 +44,10 @@ from data_algorithms_with_pyspark_spark.functions.vectors import (
     l2_norm,
     to_double_array,
 )
+from data_algorithms_with_pyspark_spark.operators.clustering import (
+    collect_centroids,
+    with_nearest_centroid,
+)
 
 __all__ = [
     "exact_dedup_groups",
@@ -934,8 +938,9 @@ def semdedup_prune(
     the full corpus. This operator reproduces that shape on Spark:
 
     1. assign every vector to its nearest coarse centroid
-       (``similarity.ivf_assign`` — broadcast product + one HashAggregate;
-       the corpus never shuffles for the assignment);
+       (``clustering.with_nearest_centroid`` — at catalog sizes a row-local
+       packed argmax in the same projection as the vector, so the corpus
+       never shuffles for the assignment);
     2. self-join **on cid only** — pair cost is sum of squared cluster
        sizes, not corpus², and the join is a hash-partition on cid, which
        at 100 TB is the difference between feasible and not;
@@ -959,36 +964,16 @@ def semdedup_prune(
     deterministic first-k-ids stand-in the catalog oracle replays.
     """
     vecs = embeddings.select(F.col(id_col), to_double_array(vec_col).alias("vec"))
-    if centroids is not None:
-        # trained centroids (clustering.kmeans_train) — real SemDeDup runs
-        # on k-means clusters; the deterministic first-k-ids stand-in below
-        # remains the default because the catalog oracle replays it exactly
-        from data_algorithms_with_pyspark_spark.operators.clustering import (
-            assign_expr,
-        )
-
-        k = len(centroids)
-        cid_expr = assign_expr([list(c) for c in centroids], k, vn_col="_n")
+    if centroids is None:
+        cent_pairs = collect_centroids(vecs, n_clusters, id_col=id_col)
     else:
-        from data_algorithms_with_pyspark_spark.operators.similarity import (
-            collect_centroids,
-            ivf_assign_expr,
-        )
-
-        cid_expr = ivf_assign_expr(
-            collect_centroids(vecs, n_clusters, id_col=id_col),
-            n_clusters,
-            vn_col="_n",
-        )
-    # ROW-LOCAL assignment (round 11): cid and the norm land in the SAME
-    # projection as the vector — the old plan computed the assignment
-    # through a broadcast product + per-id aggregate and then JOINED it
-    # back onto the corpus by id (a full-corpus shuffle at 100 TB) before
-    # persisting. Values are bit-identical (same packed-argmax arithmetic,
-    # see assign_expr/ivf_assign_expr); _vn == l2_norm(vec) == the old _n.
-    clustered = (
-        vecs.withColumn("_n", l2_norm(F.col("vec")))
-        .withColumn("cid", cid_expr)
+        # trained centroids (clustering.kmeans_train) — real SemDeDup runs
+        # on k-means clusters; the deterministic first-k-ids stand-in
+        # remains the default because the catalog oracle replays it exactly
+        cent_pairs = [(c, list(cv)) for c, cv in enumerate(centroids)]
+        n_clusters = len(centroids)
+    clustered = with_nearest_centroid(
+        vecs, cent_pairs, n_clusters, id_col=id_col, vn_col="_n"
     )
     if materialize:
         clustered = clustered.persist()

@@ -32,10 +32,15 @@ from data_algorithms_with_pyspark_spark.functions.vectors import (
     cosine_with_norms,
     dot_product,
     l2_norm,
-    lit_double_array,
-    lit_double_matrix,
     lit_long_array,
     to_double_array,
+)
+from data_algorithms_with_pyspark_spark.operators.clustering import (
+    CENTROID_QUANT,
+    collect_centroids,
+    l2_norm_py,
+    literal_fits,
+    with_nearest_centroid,
 )
 
 __all__ = [
@@ -56,9 +61,7 @@ __all__ = [
     "srp_codes",
     "lsh_near_dup_pairs",
     "srp_banded_near_dup_pairs",
-    "collect_centroids",
     "ivf_assign",
-    "ivf_assign_expr",
     "ivf_topk",
     "pq_codebook",
     "pq_train_codebook",
@@ -604,7 +607,7 @@ def ivf_assign(
     id_col: str = "vec_id",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment ``(id_col, cid)`` for IVF / SemDeDup.
+    """Nearest-centroid assignment ``(id_col, cid int)`` for IVF / SemDeDup.
 
     ``vecs`` must carry ``(id_col, vec: array<double>)``; centroids are the
     vectors with the first ``n_lists`` ids (deterministic stand-in for
@@ -614,155 +617,15 @@ def ivf_assign(
     incremental-index case, where deriving centroids from the subset's own
     low ids would silently change the quantizer.
 
-    Scale shape (round 11): ONE projection — the row-local
-    ``ivf_assign_expr`` packed argmax over a bounded centroid literal
-    (``collect_centroids``: the exact rows the historical plan shipped as
-    a BroadcastExchange). The packing — ``round((cos+1)*1e15) * n_lists +
-    (n_lists-1-cid)``, max, ties to the lower cid — is unchanged from the
-    broadcast-product + HashAggregate form this replaces, so assignments
-    are bit-identical; what changed is the data motion: no broadcast
-    product, no per-id aggregate exchange, and consumers attach ``cid``
-    in the same projection instead of join-shuffling the corpus by id.
-    Quantizing cos at 1e-15 is below double's own rounding noise at
-    |cos|<=1; exact ties still break to the lower centroid id via the
-    packed low bits.
+    The centroids are collected (``clustering.collect_centroids``: bounded,
+    n_lists rows) and the list id comes from
+    ``clustering.with_nearest_centroid`` — the same packed argmax and
+    lower-cid tie-break as k-means assignment.
     """
-    # Size-based switch (VERDICT r11 #3/#6, clustering.LITERAL_CELLS_MAX):
-    # the row-local literal form below the cell bound — zero joins, zero
-    # exchanges — and the broadcast-product + packed-argmax HashAggregate
-    # form above it, where a multi-megabyte plan literal would explode
-    # analyzer/codegen cost. Identical packing arithmetic either way.
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        LITERAL_CELLS_MAX,
-    )
-
-    cent_vecs = collect_centroids(
+    cent_pairs = collect_centroids(
         vecs, n_lists, id_col=id_col, centroids=centroids
     )
-    dim = len(cent_vecs[0][1]) if cent_vecs else 0
-    if len(cent_vecs) * dim <= LITERAL_CELLS_MAX:
-        return vecs.withColumn("_vn", l2_norm(F.col("vec"))).select(
-            F.col(id_col),
-            ivf_assign_expr(cent_vecs, n_lists).alias("cid"),
-        )
-    if centroids is None:
-        cents = vecs.where(F.col(id_col) < n_lists).select(
-            F.col(id_col).alias("cid"),
-            F.col("vec").alias("cvec"),
-            l2_norm(F.col("vec")).alias("_cn"),
-        )
-    else:
-        cents = centroids.select(
-            F.col("cid"),
-            F.col("cvec"),
-            l2_norm(F.col("cvec")).alias("_cn"),
-        )
-    vecs = vecs.withColumn("_vn", l2_norm(F.col("vec")))
-    cos_vc = cosine_with_norms(
-        F.col("vec"), F.col("cvec"), F.col("_vn"), F.col("_cn")
-    )
-    packed = (
-        F.round((cos_vc + F.lit(1.0)) * F.lit(1e15)).cast("long")
-        * F.lit(n_lists)
-        + (F.lit(n_lists - 1) - F.col("cid"))
-    )
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .groupBy(id_col)
-        .agg(F.max(packed).alias("best"))
-        .select(
-            F.col(id_col),
-            (F.lit(n_lists - 1) - F.col("best") % n_lists).alias("cid"),
-        )
-    )
-
-
-def collect_centroids(
-    vecs: DataFrame,
-    n_lists: int,
-    id_col: str = "vec_id",
-    centroids: DataFrame | None = None,
-) -> list[tuple[int, list[float]]]:
-    """The coarse-quantizer centroids as a driver-side (cid, cvec) list
-    sorted by cid — a bounded collect of exactly the rows the old plan
-    shipped through a BroadcastExchange (same bytes, same motion; they
-    just land as a literal instead of a broadcast relation).
-    ``centroids=None`` collects the deterministic first-``n_lists``-ids
-    stand-in from ``vecs``; a (cid, cvec) DataFrame is collected as-is.
-    The list may be SPARSE (fewer than ``n_lists`` entries) when the
-    source is missing low ids — the historical broadcast form quantized
-    against whatever centroid rows existed, and this reproduces that."""
-    if centroids is None:
-        rows = vecs.where(F.col(id_col) < n_lists).select(
-            F.col(id_col).alias("cid"), F.col("vec").alias("cvec")
-        ).collect()
-    else:
-        rows = centroids.select("cid", "cvec").collect()
-    by_cid = {int(r["cid"]): [float(x) for x in r["cvec"]] for r in rows}
-    if not by_cid or len(by_cid) != len(rows) or not all(
-        0 <= c < n_lists for c in by_cid
-    ):
-        raise ValueError(
-            f"need unique centroid ids within 0..{n_lists - 1}, "
-            f"got {sorted(by_cid)}"
-        )
-    return [(c, by_cid[c]) for c in sorted(by_cid)]
-
-
-def ivf_assign_expr(
-    cent_pairs: list[tuple[int, list[float]]],
-    n_lists: int,
-    vec_col: str = "vec",
-    vn_col: str = "_vn",
-):
-    """ROW-LOCAL packed-argmax list assignment — the same arithmetic as
-    the historical broadcast-product + HashAggregate form (cosine via
-    ``cosine_with_norms``, round((cos+1)*1e15)*n + (n-1-cid), max, ties
-    to the lower cid; centroid norms pre-folded driver-side with the
-    identical left-to-right IEEE sequence), evaluated as a ``transform``
-    over ONE nested-array centroid literal + ``array_max`` inside a
-    projection. Zero joins, zero exchanges — and every consumer that used
-    to attach ``cid`` with a corpus-shuffling join on id now projects it
-    in place (guide §2.4: remove shuffles outright). The caller must
-    pre-project ``vn_col`` = ``l2_norm(vec_col)``."""
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        l2_norm_py,
-    )
-
-    if not cent_pairs or not all(0 <= c < n_lists for c, _ in cent_pairs):
-        raise ValueError(f"centroid ids must lie in 0..{n_lists - 1}")
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        LITERAL_CELLS_MAX,
-    )
-
-    cells = sum(len(cv) for _, cv in cent_pairs)
-    if cells > LITERAL_CELLS_MAX:
-        # loud guard (VERDICT r11 #3): the literal rides the plan, so
-        # past the bound callers must use ivf_assign's broadcast form
-        raise ValueError(
-            f"centroid literal of {cells} cells exceeds LITERAL_CELLS_MAX="
-            f"{LITERAL_CELLS_MAX}; use ivf_assign (broadcast form)"
-        )
-    # ONE-string SQL literals: F.lit(nested list) costs ~0.5 s of Py4J
-    # round trips per construction (functions/vectors.lit_double_matrix)
-    cvecs = lit_double_matrix([cv for _, cv in cent_pairs])
-    cns = lit_double_array([l2_norm_py(cv) for _, cv in cent_pairs])
-    cids = lit_long_array([c for c, _ in cent_pairs])
-    packed = F.transform(
-        cvecs,
-        lambda cv, i: F.round(
-            (
-                cosine_with_norms(
-                    F.col(vec_col), cv, F.col(vn_col), F.element_at(cns, i + 1)
-                )
-                + F.lit(1.0)
-            )
-            * F.lit(1e15)
-        ).cast("long")
-        * F.lit(n_lists)
-        + (F.lit(n_lists - 1) - F.element_at(cids, i + 1)),
-    )
-    return F.lit(n_lists - 1) - F.array_max(packed) % n_lists
+    return with_nearest_centroid(vecs, cent_pairs, n_lists, id_col, id_col=id_col)
 
 
 def ivf_topk(
@@ -788,13 +651,7 @@ def ivf_topk(
     TRAINED coarse quantizer (``clustering.kmeans_train``) for the
     default first-``n_lists``-ids stand-in — same plan, better lists.
     """
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        l2_norm_py,
-    )
-
-    vecs = embeddings.select(
-        F.col(id_col), to_double_array(vec_col).alias("vec")
-    ).withColumn("_vn", l2_norm(F.col("vec")))
+    vecs = embeddings.select(F.col(id_col), to_double_array(vec_col).alias("vec"))
     if centroids is None:
         # ONE bounded collect for query row + stand-in centroids (both are
         # low-id rows of the same table — two separate collects paid two
@@ -810,14 +667,12 @@ def ivf_topk(
         # sparse-tolerant like collect_centroids: the stand-in quantizer is
         # whatever low-id rows exist
         cent_vecs = [(c, small[c]) for c in sorted(small) if c < n_lists]
-        if not cent_vecs:
-            raise ValueError(f"no centroid rows with {id_col} < {n_lists}")
         qv = small.get(query_id)
         if qv is None:
             raise ValueError(f"query_id {query_id} not found")
     else:
         cent_vecs = collect_centroids(
-            vecs.drop("_vn"), n_lists, id_col=id_col, centroids=centroids
+            vecs, n_lists, id_col=id_col, centroids=centroids
         )
         qrow = vecs.where(F.col(id_col) == query_id).select("vec").collect()
         if not qrow:
@@ -845,9 +700,7 @@ def ivf_topk(
         F.lit(qn),
     )
     return (
-        vecs.withColumn(
-            "cid", ivf_assign_expr(cent_vecs, n_lists)
-        )
+        with_nearest_centroid(vecs, cent_vecs, n_lists, id_col=id_col)
         .where(F.col("cid").isin([int(c) for c in probe_cids]))
         .where(F.col(id_col) != query_id)
         .select(F.col(id_col), F.round(cos_q, 6).alias("cosine"))
@@ -862,10 +715,6 @@ def _cosine_py(a: list[float], b: list[float]) -> float:
     folds, den = na*nb, zero-den guard) on IEEE doubles, so probe ranking
     computed here agrees bit-for-bit with the engine expression it
     replaces."""
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        l2_norm_py,
-    )
-
     acc = 0.0
     for x, y in zip(a, b):
         acc = acc + float(x) * float(y)
@@ -1215,10 +1064,6 @@ def pq_train_codebook(
 
     if ksub < 2 or ksub & (ksub - 1):
         raise ValueError("ksub must be a power of two >= 2 (bit-packed codes)")
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        CENTROID_QUANT,
-    )
-
     grid = 10.0**CENTROID_QUANT
 
     def _fq(x: float) -> float:
@@ -1263,69 +1108,62 @@ def pq_train_codebook(
         .select("vid", F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
         .persist()
     )
-    # Size-based switch (VERDICT r11 #3/#6): the codebook literal is
-    # dim*ksub cells total; above clustering.LITERAL_CELLS_MAX each
-    # iteration assigns via the pre-r11 broadcast join + (vid, s) argmin
-    # + join-back instead of riding a multi-megabyte literal through the
-    # analyzer. Same grid/tie packing either way.
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        LITERAL_CELLS_MAX,
-    )
-
-    use_literal = dim * ksub <= LITERAL_CELLS_MAX
-    spark = vecs.sparkSession
+    # Size-based switch (clustering.literal_fits): the codebook literal is
+    # dim*ksub cells total; past the bound each iteration assigns via a
+    # broadcast join + (vid, s) argmin + join-back instead of riding a
+    # multi-megabyte literal through the analyzer. Same grid/tie packing
+    # either way.
+    use_literal = literal_fits(dim * ksub)
     try:
         for _ in range(max_iter):
-            # ROW-LOCAL packed argmin (round 11): the codebook is a single
-            # nested-array literal indexed by the row's subspace id; per
-            # (vid, s) row a transform computes pq_encode's exact grid/tie
-            # packing (floor(d2*1e12 + 0.5)*ksub + cid, min -> ties to the
-            # lower cid) with the identical index-order left-fold squared
-            # L2, and array_min replaces the per-(vid, s) aggregate. Each
-            # Lloyd iteration is ONE fused pass over the persisted
-            # subvector table — the previous shape paid a broadcast join,
-            # a (vid, s)-keyed exchange, and a join-back that re-shuffled
-            # the subvectors by (vid, s) every iteration.
-            cb_lit = F.expr(
-                "array("
-                + ",".join(
-                    "array("
-                    + ",".join(
-                        "array("
-                        + ",".join(f"{float(x)!r}D" for x in cw)
-                        + ")"
-                        for cw in codebook[s]
-                    )
-                    + ")"
-                    for s in range(m)
-                )
-                + ")"
-            )  # ONE parsed SQL string (lit_double_matrix rationale)
-            cands = F.element_at(cb_lit, F.col("s") + 1)
-            packed_arr = F.transform(
-                cands,
-                lambda cv, c: F.floor(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("sv"), cv, lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    * F.lit(1e12)
-                    + F.lit(0.5)
-                ).cast("long")
-                * F.lit(ksub)
-                + c,
-            )
-            cid = (F.array_min(packed_arr) % ksub).cast("int")
             # cid staged as an attribute BEFORE the generator — an inline
             # expression next to posexplode is re-evaluated per exploded
             # element (the clustering.kmeans_train lesson)
             if use_literal:
+                # ROW-LOCAL packed argmin: the codebook is a single
+                # nested-array literal indexed by the row's subspace id;
+                # per (vid, s) row a transform computes pq_encode's exact
+                # grid/tie packing (floor(d2*1e12 + 0.5)*ksub + cid, min ->
+                # ties to the lower cid) with the identical index-order
+                # left-fold squared L2, and array_min replaces the
+                # per-(vid, s) aggregate — ONE fused pass over the
+                # persisted subvector table per Lloyd iteration.
+                cb_lit = F.expr(
+                    "array("
+                    + ",".join(
+                        "array("
+                        + ",".join(
+                            "array("
+                            + ",".join(f"{float(x)!r}D" for x in cw)
+                            + ")"
+                            for cw in codebook[s]
+                        )
+                        + ")"
+                        for s in range(m)
+                    )
+                    + ")"
+                )  # ONE parsed SQL string (lit_double_matrix rationale)
+                cands = F.element_at(cb_lit, F.col("s") + 1)
+                packed_arr = F.transform(
+                    cands,
+                    lambda cv, c: F.floor(
+                        F.aggregate(
+                            F.zip_with(
+                                F.col("sv"), cv, lambda a, b: (a - b) * (a - b)
+                            ),
+                            F.lit(0.0),
+                            lambda acc, x: acc + x,
+                        )
+                        * F.lit(1e12)
+                        + F.lit(0.5)
+                    ).cast("long")
+                    * F.lit(ksub)
+                    + c,
+                )
+                cid = (F.array_min(packed_arr) % ksub).cast("int")
                 staged = sub.select("s", cid.alias("cid"), "sv")
             else:
-                cents = spark.createDataFrame(
+                cents = vecs.sparkSession.createDataFrame(
                     [
                         (s, c, codebook[s][c])
                         for s in range(m)

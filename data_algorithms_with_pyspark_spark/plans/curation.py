@@ -3574,8 +3574,8 @@ _LABEL_TOP_TERMS = 5
 )
 def embedding_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What each embedding cluster is ABOUT: vectors group under their
-    nearest coarse centroid (``similarity.ivf_assign`` — broadcast
-    product, corpus never shuffles), the paired documents (shared id
+    nearest coarse centroid (``similarity.ivf_assign`` — a row-local
+    projection, corpus never shuffles), the paired documents (shared id
     space) contribute their tokens, and a per-cluster WindowGroupLimit
     keeps the top terms. The cross-modal join is one hash join on the
     id; term counting is the word-count shuffle keyed (cid, term). At

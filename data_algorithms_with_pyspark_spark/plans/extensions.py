@@ -3366,19 +3366,19 @@ def _ivf_pq_topk(spark: SparkSession, sf_dir: str):
     rows the old plan broadcast), probe selection runs on the driver via
     ``_ann_qv_and_probes`` (identical quantized 1e15 cosine grid and
     (qc DESC, cid) order), the list id is the ROW-LOCAL
-    ``ivf_assign_expr`` projected in the SAME select as the PQ encode,
-    and the probe filter is a static IN. One corpus scan, zero joins,
-    zero exchanges before the top-k — the old plan joined codes and
-    assignment by id (a corpus shuffle at scale) and broadcast-joined the
-    probe set."""
+    ``clustering.with_nearest_centroid`` projected in the SAME select as
+    the PQ encode, and the probe filter is a static IN. One corpus scan,
+    zero joins, zero exchanges before the top-k — the old plan joined
+    codes and assignment by id (a corpus shuffle at scale) and
+    broadcast-joined the probe set."""
     from data_algorithms_with_pyspark_spark.functions.vectors import (
-        l2_norm,
         to_double_array,
     )
+    from data_algorithms_with_pyspark_spark.operators.clustering import (
+        with_nearest_centroid,
+    )
     from data_algorithms_with_pyspark_spark.operators.similarity import (
-        ivf_assign_expr,
         pq_adc_topk,
-        pq_codebook,
         pq_encode,
     )
 
@@ -3386,9 +3386,7 @@ def _ivf_pq_topk(spark: SparkSession, sf_dir: str):
     vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
     qv, probe_cids, cent_vecs = _ann_qv_and_probes(vecs)
     cb = _codebook_from_cents(cent_vecs, m=_PQ_M, ksub=_PQ_KSUB)
-    staged = vecs.withColumn("_vn", l2_norm(F.col("vec"))).withColumn(
-        "cid", ivf_assign_expr(cent_vecs, 16)
-    )
+    staged = with_nearest_centroid(vecs, cent_vecs, 16)
     cand = (
         pq_encode(staged, cb, vec_col="vec", keep_cols=("cid",))
         .where(F.col("cid").isin(probe_cids))
@@ -3686,16 +3684,16 @@ def ivf_pq_residual_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math as _math
 
     from data_algorithms_with_pyspark_spark.functions.vectors import (
-        l2_norm,
+        lit_double_matrix,
         to_double_array,
     )
     from data_algorithms_with_pyspark_spark.operators.clustering import (
         kmeans_train,
+        with_nearest_centroid,
     )
     from data_algorithms_with_pyspark_spark.operators.similarity import (
         _cosine_py,
         _sub_d2,
-        ivf_assign_expr,
         pq_adc_topk,
         pq_encode,
         pq_train_codebook,
@@ -3710,21 +3708,13 @@ def ivf_pq_residual_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subvector build AND the encoder — without it the assign+subtract
     # replays once per consumer. Materializing codes once IS how an index
     # build works at scale. Round 11: assignment AND the residual subtract
-    # are ROW-LOCAL (ivf_assign_expr + zip_with against the trained
+    # are ROW-LOCAL (with_nearest_centroid + zip_with against the trained
     # centroid literal indexed by cid) — the old plan shuffled the corpus
     # through a join on id and re-attached the centroid with a second
     # broadcast join; this is one projection, zero exchanges.
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        lit_double_matrix,
-    )
-
     cvecs_lit = lit_double_matrix(trained)
     residuals = (
-        vecs.withColumn("_vn", l2_norm(F.col("vec")))
-        .withColumn(
-            "cid",
-            ivf_assign_expr(list(enumerate(trained)), _IVF_LISTS).cast("int"),
-        )
+        with_nearest_centroid(vecs, list(enumerate(trained)), _IVF_LISTS)
         .select(
             "vec_id",
             "cid",
@@ -3902,14 +3892,14 @@ def ivf_pq_ann_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as in the in-query variant."""
 
     from data_algorithms_with_pyspark_spark.functions.vectors import (
-        l2_norm,
         to_double_array,
+    )
+    from data_algorithms_with_pyspark_spark.operators.clustering import (
+        with_nearest_centroid,
     )
     from data_algorithms_with_pyspark_spark.operators.similarity import (
         _sub_d2,
-        ivf_assign_expr,
         pq_adc_topk,
-        pq_codebook,
         pq_encode,
     )
     from data_algorithms_with_pyspark_spark.sources.writers import (
@@ -3931,9 +3921,7 @@ def ivf_pq_ann_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row-local cid rides the encode projection (no codes<->assignment
         # join at build time); repartition on the list id so each of the
         # 16 lists is owned by one task -> exactly one file per partition
-        staged = vecs.withColumn("_vn", l2_norm(F.col("vec"))).withColumn(
-            "cid", ivf_assign_expr(cent_vecs, 16)
-        )
+        staged = with_nearest_centroid(vecs, cent_vecs, 16)
         codes = pq_encode(staged, cb, vec_col="vec", keep_cols=("cid",))
         write_partitioned_table(
             codes.repartition(F.col("cid")), idx, partition_cols=("cid",)
@@ -4002,14 +3990,14 @@ def ivf_pq_ann_incremental_index(
     loses nothing."""
 
     from data_algorithms_with_pyspark_spark.functions.vectors import (
-        l2_norm,
         to_double_array,
+    )
+    from data_algorithms_with_pyspark_spark.operators.clustering import (
+        with_nearest_centroid,
     )
     from data_algorithms_with_pyspark_spark.operators.similarity import (
         _sub_d2,
-        ivf_assign_expr,
         pq_adc_topk,
-        pq_codebook,
         pq_encode,
     )
     from data_algorithms_with_pyspark_spark.sources.writers import (
@@ -4026,23 +4014,21 @@ def ivf_pq_ann_incremental_index(
     # history/increment subsets are assigned against the same lists the
     # oracle's assign CTE replays — deriving centroids from a subset's own
     # low ids would silently change the quantizer. Row-local assignment
-    # (ivf_assign_expr) rides the encode projection on both the history
-    # build and the daily increment — no codes<->assignment join.
+    # (with_nearest_centroid) rides the encode projection on both the
+    # history build and the daily increment — no codes<->assignment join.
     qv, probe_cids, pinned = _ann_qv_and_probes(vecs)
     cb = _codebook_from_cents(pinned, m=_PQ_M, ksub=_PQ_KSUB)
-
-    def _with_cid(side):
-        return side.withColumn("_vn", l2_norm(F.col("vec"))).withColumn(
-            "cid", ivf_assign_expr(pinned, 16)
-        )
-
     if not spark.catalog.tableExists(idx):
-        hist = _with_cid(vecs.where(F.col("vec_id") % 8 != 0))
+        hist = with_nearest_centroid(
+            vecs.where(F.col("vec_id") % 8 != 0), pinned, 16
+        )
         codes = pq_encode(hist, cb, vec_col="vec", keep_cols=("cid",))
         write_partitioned_table(
             codes.repartition(F.col("cid")), idx, partition_cols=("cid",)
         )
-    increment = _with_cid(vecs.where(F.col("vec_id") % 8 == 0))
+    increment = with_nearest_centroid(
+        vecs.where(F.col("vec_id") % 8 == 0), pinned, 16
+    )
     inc_codes = pq_encode(
         increment, cb, vec_col="vec", keep_cols=("cid",)
     ).where(F.col("cid").isin(probe_cids))

@@ -134,13 +134,22 @@ def test_assign_rejects_overflowing_cluster_count(spark):
     from data_algorithms_with_pyspark_spark.operators.clustering import (
         assign_to_centroids,
     )
+    from data_algorithms_with_pyspark_spark.operators.similarity import (
+        ivf_assign,
+    )
 
     vecs = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, vec array<double>")
     cents = spark.createDataFrame([(0, [1.0, 0.0])], "cid int, cvec array<double>")
     # packed argmax would overflow Long.MAX past ~4611 clusters; the guard
-    # trips at the documented 4000 bound
+    # trips at the documented 4000 bound, in both assignment families and
+    # before any Spark job runs
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
     with pytest.raises(ValueError, match="overflow"):
         assign_to_centroids(vecs, cents, 5000)
+    with pytest.raises(ValueError, match="overflow"):
+        ivf_assign(vecs, 5000)
+    assert set(tracker.getJobIdsForGroup()) == jobs_before
 
 
 def test_assign_literal_and_broadcast_paths_identical(spark, blobs, monkeypatch):
@@ -153,14 +162,13 @@ def test_assign_literal_and_broadcast_paths_identical(spark, blobs, monkeypatch)
 
     k = 4
     cents = kmeans_train(blobs, k=k, max_iter=3)
-    lit_rows = sorted(
-        (r["vec_id"], r["cid"])
-        for r in cl.assign_to_centroids(blobs, cents, k).collect()
-    )
+
+    def assigned():
+        df = cl.assign_to_centroids(blobs, cents, k)
+        return df.dtypes, sorted((r["vec_id"], r["cid"]) for r in df.collect())
+
+    lit_rows = assigned()
     monkeypatch.setattr(cl, "LITERAL_CELLS_MAX", 0)  # force broadcast path
-    bc_rows = sorted(
-        (r["vec_id"], r["cid"])
-        for r in cl.assign_to_centroids(blobs, cents, k).collect()
-    )
+    bc_rows = assigned()
     assert lit_rows == bc_rows
-    assert len({cid for _, cid in lit_rows}) > 1  # non-degenerate
+    assert len({cid for _, cid in lit_rows[1]}) > 1  # non-degenerate

@@ -1350,8 +1350,9 @@ def test_ivf_and_pq_literal_broadcast_paths_identical(spark, monkeypatch):
     """The size-based switch (clustering.LITERAL_CELLS_MAX, VERDICT r11
     #6): ivf_assign and pq_train_codebook must produce bit-identical
     results through the row-local literal form and the broadcast form —
-    same grid, same tie packing — and ivf_assign_expr must refuse a
-    literal past the bound instead of riding it into the analyzer."""
+    same grid, same tie packing, same cid type, which also matches the
+    k-means family's — and the literal expression must refuse a literal
+    past the bound instead of riding it into the analyzer."""
     import pytest as _pytest
 
     import data_algorithms_with_pyspark_spark.operators.clustering as cl
@@ -1362,16 +1363,18 @@ def test_ivf_and_pq_literal_broadcast_paths_identical(spark, monkeypatch):
         for i in range(40)
     ]
     vecs = spark.createDataFrame(rows, ["vec_id", "vec"])
-    lit_assign = sorted(
-        (r["vec_id"], r["cid"]) for r in sim.ivf_assign(vecs, 4).collect()
-    )
+
+    def assigned(df):
+        return df.dtypes, sorted((r["vec_id"], r["cid"]) for r in df.collect())
+
+    lit_assign = assigned(sim.ivf_assign(vecs, 4))
     lit_cb = sim.pq_train_codebook(vecs, m=2, ksub=4, max_iter=2)
+    kmeans_dtypes = cl.assign_to_centroids(vecs, [r[1] for r in rows[:4]], 4).dtypes
     monkeypatch.setattr(cl, "LITERAL_CELLS_MAX", 0)  # force broadcast paths
-    bc_assign = sorted(
-        (r["vec_id"], r["cid"]) for r in sim.ivf_assign(vecs, 4).collect()
-    )
+    bc_assign = assigned(sim.ivf_assign(vecs, 4))
     bc_cb = sim.pq_train_codebook(vecs, m=2, ksub=4, max_iter=2)
     assert lit_assign == bc_assign
     assert lit_cb == bc_cb
+    assert dict(lit_assign[0])["cid"] == dict(kmeans_dtypes)["cid"] == "int"
     with _pytest.raises(ValueError, match="LITERAL_CELLS_MAX"):
-        sim.ivf_assign_expr([(0, [0.0, 1.0])], 1)
+        cl.assign_expr([(0, [0.0, 1.0])], 1)

@@ -128,9 +128,9 @@ def test_sequence_chunks_has_no_exchange(spark):
 
 def test_semdedup_pairs_join_on_cluster_not_cartesian(spark):
     """The SemDeDup pair join must be an equi-join on cid (cost bounded by
-    cluster sizes); the only sanctioned nested-loop is the broadcast
-    product against the n_clusters centroid rows inside ivf_assign, and
-    the persisted clustered table must be reused, not recomputed."""
+    cluster sizes); centroid assignment is the row-local projection of
+    clustering.with_nearest_centroid (no nested loop at catalog sizes),
+    and the persisted clustered table must be reused, not recomputed."""
     df = all_queries()["embedding_semdedup_prune"].fn(spark, SF_SMOKE)
     plan = _executed_plan(df)
     assert "CartesianProduct" not in plan
