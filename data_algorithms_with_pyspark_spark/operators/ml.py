@@ -7,9 +7,9 @@ Training is full-batch gradient descent with the MODEL on the driver and
 the DATA distributed — features pack once into a persisted per-doc array
 and each iteration is ONE fused scan of it (score via an integer array
 fold, gradient via explode + groupBy(j)); only ``dims + 1`` gradient
-cells ever reach the driver. The same topology as ``clustering.kmeans_train`` /
-``bpe.bpe_train``: broadcast tiny state out, aggregate tiny state back,
-never collect the corpus.
+cells ever reach the driver. The same topology as ``clustering.kmeans_train``:
+broadcast tiny state out, aggregate tiny state back, never collect the
+corpus.
 
 Cross-engine replay (the catalog-oracle discipline): all corpus-side
 arithmetic is INTEGER — weights and sigmoid outputs live in micro-units

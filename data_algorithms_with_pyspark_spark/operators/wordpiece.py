@@ -14,20 +14,20 @@ likelihood — and segments NEW text with greedy longest-match-first
 carry the ``##`` continuation prefix, so 'cat' enters training as
 ['c', '##a', '##t'] and a merge of ('##a', '##t') yields '##at'.
 
-Distributed shape (identical to the BPE trainer's, the corpus-scale
+Training shape (identical to the BPE trainer's, the corpus-scale
 analysis in ``operators/bpe.py`` applies verbatim):
 
 1. The corpus collapses ONCE to a (word, frequency) vocabulary.
-2. Each merge round runs ONE vocab-sized hash aggregate carrying both
-   adjacent-pair counts and single-symbol counts (weighted by word
-   frequency; the two families share a key space — pairs contain a
-   space, symbols never do), collects the BOUNDED count table
-   (<= (alphabet*2 + n_merges)^2 keys at any corpus scale — the
-   classical in-memory pair table) and computes the likelihood score +
-   argmax driver-side with the identical IEEE sequence, then rewrites
-   the symbol arrays with the same greedy left-to-right Catalyst fold
-   BPE uses.
-3. ``localCheckpoint()`` per round truncates the growing lineage.
+2. The vocabulary is collected to the driver ONCE
+   (``bpe.collect_vocab``, capped at ``bpe.VOCAB_MAX`` words) — the
+   trainer's only Spark action.
+3. Each merge round runs on the driver in ``bpe.train_merges``, the loop
+   both trainers share: the likelihood score + argmax (``_best_pair``)
+   over adjacent-pair and single-symbol counts weighted by word frequency
+   (exact Python integers), then every word holding the winning pair is
+   rewritten by ``bpe.merge_pair_py`` — the same greedy left-to-right
+   fold BPE uses, with the ``##``-stripped merged token — and the counts
+   are updated for those words only.
 
 Determinism across engines (the DuckDB oracle replays every round): the
 score is quantized to an integer grid ``floor(CAST(p AS DOUBLE) /
@@ -53,6 +53,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_algorithms_with_pyspark_spark.operators.bpe import train_merges
 from data_algorithms_with_pyspark_spark.operators.unigram import WORD_MAX_LEN
 
 __all__ = [
@@ -68,6 +69,9 @@ __all__ = [
 # >= 1/total^2 with total <= ~1e9 even at 100 TB word-vocab scale, so the
 # grid keeps ~metric precision while staying far inside BIGINT.
 SCORE_SCALE = 1_000_000_000_000
+
+# The oracle computes count(l) * count(r) as a BIGINT.
+_I64_MAX = (1 << 63) - 1
 
 # Sentinel cursor for a word greedy matching failed on (possible only if
 # the vocabulary lost a character): far past any real cursor, so the
@@ -107,74 +111,37 @@ def _strip_continuation(sym: str) -> str:
     return sym[2:] if sym.startswith("##") else sym
 
 
-def _fused_counts(vocab: DataFrame) -> DataFrame:
-    """ONE vocab-sized aggregate carrying BOTH count families a WordPiece
-    round needs: adjacent-pair counts and single-symbol counts, each
-    weighted by word frequency. Pair keys contain the ``' '`` separator
-    while symbol keys never do (symbols are characters / merged pieces of
-    ``^[a-z]+$`` words, optionally ``##``-prefixed), so the two families
-    share one key space without collision and the round pays one Generate
-    + one exchange instead of two of each plus two joins (guide §2.4 —
-    the same one-aggregate move as the r11 CMS/bloom rewrites). The
-    ``size >= 2`` guard is an expression, not a filter: ``sequence(1, 0)``
-    counts DOWN (the bpe_pair_counts footgun), and single-symbol words
-    must still contribute their symbol count."""
-    pair_keys = F.when(
-        F.size("syms") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("syms") - 1),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("syms"), i),
-                F.element_at(F.col("syms"), i + 1),
-            ),
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<string>)"))
-    return (
-        vocab.select(
-            "n", F.explode(F.concat(pair_keys, F.col("syms"))).alias("t")
-        )
-        .groupBy("t")
-        .agg(F.sum("n").alias("c"))
-    )
+def _best_pair(
+    pairs: dict[tuple[str, str], int], singles: dict[str, int]
+) -> tuple[str, str, int, int] | None:
+    """The round's argmax: (left, right, pair_count, score_q) maximizing
+    (score_q, -"left right") — the exact total order the DuckDB oracle's
+    ``ORDER BY score DESC, pair LIMIT 1`` uses (ASCII keys, so Python str
+    comparison == byte order). None when no pair is left.
 
-
-def _wrap_i64(x: int) -> int:
-    """Signed-64-bit wrap — mirrors Spark's ``long * long`` overflow
-    semantics exactly, so the driver-side score below stays bit-identical
-    to the retired Column form ``(lc * rc).cast("double")`` even in the
-    (never attested, ~1e13-count) regime where the product overflows."""
-    return ((x + (1 << 63)) % (1 << 64)) - (1 << 63)
-
-
-def _best_pair(counts: dict[str, int]) -> tuple[str, int, int] | None:
-    """The round's argmax over a fused count table: (pair, pair_count,
-    score_q) maximizing (score_q, -pair) — the exact total order the old
-    ``orderBy(score_q DESC, pair ASC).limit(1)`` used (ASCII keys, so
-    Python str comparison == Spark's binary string order).
-
-    The score is the SAME IEEE sequence the old Column expression ran —
-    ``floor(double(p) / double(l*r) * 1e12)``: int→double casts are
-    round-to-nearest in both runtimes, the division and multiplication
-    are single correctly-rounded f64 ops, and the i64 product wrap is
-    mirrored by ``_wrap_i64`` — so the returned ints are bit-identical to
-    the retired plan and the DuckDB oracle keeps replaying them."""
+    ``pairs`` maps adjacent symbol pairs, ``singles`` single symbols, to
+    their frequency-weighted counts. The score is the oracle's IEEE
+    sequence ``floor(double(p) / double(l*r) * 1e12)``: int→double casts
+    are round-to-nearest in both runtimes, and the division and
+    multiplication are single correctly-rounded f64 ops. The oracle's
+    ``l*r`` is a BIGINT, so a product past the signed 64-bit range raises
+    a ``ValueError`` here rather than score a pair the oracle cannot."""
     best: tuple[int, str, int] | None = None  # (-score_q, pair, count)
-    for t, c in counts.items():
-        sp = t.find(" ")
-        if sp < 0:
-            continue
-        l, r = t[:sp], t[sp + 1 :]
-        score_q = math.floor(
-            float(c) / float(_wrap_i64(counts[l] * counts[r]))
-            * float(SCORE_SCALE)
-        )
-        key = (-score_q, t, c)
+    for (l, r), c in pairs.items():
+        denom = singles[l] * singles[r]
+        if denom > _I64_MAX:
+            raise ValueError(
+                f"WordPiece score denominator count({l!r}) * count({r!r}) "
+                f"= {denom} overflows signed 64-bit"
+            )
+        score_q = math.floor(float(c) / float(denom) * float(SCORE_SCALE))
+        key = (-score_q, f"{l} {r}", c)
         if best is None or key < best:
             best = key
     if best is None:
         return None
-    return best[1], best[2], -best[0]
+    left, right = best[1].split(" ", 1)
+    return left, right, best[2], -best[0]
 
 
 def wordpiece_train(
@@ -185,58 +152,15 @@ def wordpiece_train(
 
     Returns (merges, final_vocab): merges as (merge_idx starting at 1,
     left, right, pair_count, score_q) in learned order, and the
-    vocabulary with all merges applied. Ties break on (score_q DESC,
+    vocabulary with all merges applied, built from the trained driver
+    table with the vocabulary's own schema. Ties break on (score_q DESC,
     pair ASC) — the same total order the DuckDB oracle's LIMIT uses.
     Raises on pair exhaustion (same contract as ``bpe_train``: silently
     returning fewer merges would desynchronize a fixed-round replay).
     """
-    from data_algorithms_with_pyspark_spark.operators.bpe import (
-        merge_pair_expr,
+    return train_merges(
+        vocab, n_merges, _best_pair, lambda l, r: l + _strip_continuation(r)
     )
-
-    vocab = vocab.localCheckpoint()
-    merges: list[tuple[int, str, str, int, int]] = []
-    for k in range(1, n_merges + 1):
-        # One fused aggregate per round; the collected table is BOUNDED
-        # driver state — |symbols| + |adjacent pairs| <= (alphabet*2 +
-        # n_merges) + (alphabet*2 + n_merges)^2 keys at ANY corpus scale
-        # (a few thousand rows), the classical trainer's in-memory pair
-        # table. Scoring + argmax move to the driver with the identical
-        # IEEE sequence and tie order (_best_pair docstring); the old
-        # shape paid a second vocab aggregate, two broadcast joins and a
-        # TakeOrdered per round for the same one-row answer.
-        counts = {
-            r["t"]: int(r["c"]) for r in _fused_counts(vocab).collect()
-        }
-        top = _best_pair(counts)
-        if top is None:
-            raise ValueError(
-                f"vocabulary exhausted after {k - 1} merges; "
-                f"asked for {n_merges}"
-            )
-        pair, pair_count, score_q = top
-        left, right = pair.split(" ", 1)
-        merges.append((k, left, right, pair_count, score_q))
-        merged = left + _strip_continuation(right)
-        # LAZY checkpoint (same move as bpe_train): the next round's
-        # argmax materializes the rewrite — one job per round, not two.
-        vocab = vocab.withColumn(
-            "syms",
-            merge_pair_expr(
-                F.col("syms"),
-                left,
-                right,
-                merged=merged,
-                # substring guard on the STRIPPED pair (symbols minus the
-                # ## continuation marker concatenate to the word): only
-                # words that can contain the pair pay the interpreted
-                # rebuild (bpe.merge_pair_expr docstring)
-                guard=F.col("term").contains(
-                    _strip_continuation(left) + _strip_continuation(right)
-                ),
-            ),
-        ).localCheckpoint(eager=False)
-    return merges, vocab
 
 
 def wordpiece_vocab_pieces(

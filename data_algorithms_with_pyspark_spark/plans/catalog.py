@@ -59,6 +59,15 @@ _QUERY_MODULES = (
 # attestation covers every catalog query (scripts/driver_sim.py always
 # verifies all of them regardless of order).
 _SAMPLE_PRIORITY = (
+    # Round 13 rotation: the rows whose BPE/WordPiece trainers now run
+    # every merge on the driver over one collected vocabulary lead, so
+    # the ~50-query sample window re-attests the retrained rows first.
+    "bpe_learned_merges",
+    "bpe_vocab_segmentation",
+    "wordpiece_learned_merges",
+    "wordpiece_greedy_segmentation",
+    "tokenizer_compression_comparison",
+    #
     # Round 12 rotation (VERDICT r11 #2). Ordering rule (unchanged):
     # queries whose code was TOUCHED by the r11/r12 optimizers first —
     # so the driver's ~50-query sf0.01 window re-attests every rewrite —
@@ -87,13 +96,8 @@ _SAMPLE_PRIORITY = (
     "term_count_min_sketch",
     "bloom_term_membership",
     "bm25_search_topk",
-    "bpe_learned_merges",
-    "bpe_vocab_segmentation",
-    "wordpiece_learned_merges",
-    "wordpiece_greedy_segmentation",
     "unigram_lm_vocab",
     "unigram_lm_segmentation",
-    "tokenizer_compression_comparison",
     "prefix_jaccard_near_dups",
     "prefix_jaccard_guarded_near_dups",
     "dedup_degeneracy_preflight",

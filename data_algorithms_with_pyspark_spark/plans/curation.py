@@ -1509,16 +1509,17 @@ def _bpe_segmentation_sql(n_merges: int, top_n: int) -> str:
     bench=True,
     tags=("text", "tokenizer", "iterative"),
     description=f"Full BPE vocabulary training, {_BPE_MERGES} merge rounds "
-    "(operators/bpe.py): corpus collapses once to (word, freq); each round "
-    "is a vocab-sized pair count + one-row argmax to the driver + a greedy "
-    "Catalyst fold rewrite; the oracle replays every round via "
-    "non-overlapping string replacement",
+    "(operators/bpe.py): corpus collapses once to (word, freq), collected "
+    "to the driver once; each round takes the argmax of the frequency-"
+    "weighted pair counts and rewrites the words holding that pair with "
+    "the greedy left-to-right fold on the driver; the oracle replays every "
+    "round via non-overlapping string replacement",
     oracle=_bpe_merges_sql(_BPE_MERGES),
 )
 def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer-training artifact itself: the learned merge table, in
-    order. Driver state is n_merges rows — what BPE training exists to
-    produce; the corpus-scale work happened once in the word count."""
+    order. Driver state is the collected word vocabulary plus n_merges
+    rows; the corpus-scale work happened once in the word count."""
     from data_algorithms_with_pyspark_spark.functions.text_functions import words
     from data_algorithms_with_pyspark_spark.operators.bpe import (
         bpe_train,
@@ -2175,7 +2176,8 @@ def _wordpiece_greedy_sql(n_merges: int, top_n: int) -> str:
     f"{_WORDPIECE_MERGES} merge rounds (operators/wordpiece.py): each "
     "round merges the adjacent ##-marked symbol pair maximizing the "
     "likelihood score count(lr)/(count(l)*count(r)) on an integer 1e12 "
-    "grid — two vocab-sized aggregates + a one-row argmax per round; "
+    "grid — the vocabulary is collected once and every round's counts, "
+    "argmax and rewrite run on the driver; "
     "the oracle replays every round via non-overlapping string "
     "replacement, completing the classical subword trio (BPE, unigram, "
     "WordPiece)",
@@ -2184,8 +2186,8 @@ def _wordpiece_greedy_sql(n_merges: int, top_n: int) -> str:
 def wordpiece_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WordPiece training artifact: the learned merge table in order,
     with each round's winning pair count and quantized likelihood score.
-    Driver state is n_merges rows; the corpus-scale work happened once
-    in the word count."""
+    Driver state is the collected word vocabulary plus n_merges rows;
+    the corpus-scale work happened once in the word count."""
     from data_algorithms_with_pyspark_spark.functions.text_functions import words
     from data_algorithms_with_pyspark_spark.operators.wordpiece import (
         wordpiece_train,

@@ -64,10 +64,10 @@ _SINK_SEQ = itertools.count()
 # Per-prefix state-store telemetry from the MOST RECENT terminated
 # StreamingQuery: {"max_state_rows": N, "max_state_bytes": B,
 # "n_batches": K}, maxed over the run's progress events. Observability
-# only — no query semantics read it; the sf10 scale panel
-# (scripts/sf10_panel_r11.py) uses it to put "state is bounded by the
-# watermark" on the record as a measured number instead of a design
-# claim (VERDICT r10 #5).
+# only — no query semantics read it. It put "state is bounded by the
+# watermark" on the record as measured numbers instead of a design claim
+# (PLANS.md, the sf10 stateful-lane panel; VERDICT r10 #5), and
+# tests/test_streaming.py pins the telemetry.
 STATE_METRICS: dict[str, dict[str, int]] = {}
 
 

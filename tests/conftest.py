@@ -4,6 +4,7 @@ with the testdata tables registered as views (the driver's t2 setup)."""
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import duckdb
@@ -37,6 +38,30 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs run while calling ``fn()``, counted through a fresh job
+    group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the listener bus: drain it first, or the
+    # last jobs may not be recorded yet
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -6,12 +6,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_algorithms_with_pyspark_spark.operators import bpe
 from data_algorithms_with_pyspark_spark.operators.bpe import (
     bpe_apply,
     bpe_train,
     char_vocab,
     merge_pair_expr,
 )
+from data_algorithms_with_pyspark_spark.operators.wordpiece import (
+    wordpiece_train,
+    wordpiece_vocab,
+)
+from tests.conftest import count_jobs, persisted_rdds
 
 
 def _syms(spark, *word_freqs):
@@ -74,3 +80,31 @@ def test_char_vocab_filters_non_alpha(spark):
         [("ok", 1), ("not-ok", 2), ("123", 3), ("Mixed", 4)], ["term", "n"]
     )
     assert [r["term"] for r in char_vocab(wc).collect()] == ["ok"]
+
+
+def test_train_leaves_no_persisted_rdds(spark):
+    spark.catalog.clearCache()  # the baseline: what clearCache cannot free
+    before = persisted_rdds(spark)
+    _, final = bpe_train(_syms(spark, ("abab", 5), ("abc", 3)), n_merges=2)
+    final.collect()
+    spark.catalog.clearCache()
+    assert persisted_rdds(spark) == before
+
+
+def test_train_runs_one_collect_not_jobs_per_merge(spark):
+    vocab = _syms(spark, ("abab", 5), ("abc", 3), ("bcd", 2))
+    assert count_jobs(spark, lambda: bpe_train(vocab, n_merges=3)) <= 2
+
+
+@pytest.mark.parametrize(
+    "train, make_vocab",
+    [(bpe_train, char_vocab), (wordpiece_train, wordpiece_vocab)],
+    ids=["bpe", "wordpiece"],
+)
+def test_train_raises_past_vocab_max_before_any_merge(
+    spark, monkeypatch, train, make_vocab
+):
+    wc = spark.createDataFrame([("ab", 1), ("cd", 1)], ["term", "n"])
+    monkeypatch.setattr(bpe, "VOCAB_MAX", 1)
+    with pytest.raises(ValueError, match="VOCAB_MAX=1"):
+        train(make_vocab(wc), n_merges=1)

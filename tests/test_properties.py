@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import bisect
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -199,13 +200,15 @@ def test_similarity_join_matches_bruteforce_model(spark, names, threshold):
     assert got == expected
 
 
-def _py_bpe_merge(syms: list[str], left: str, right: str) -> list[str]:
+def _py_bpe_merge(
+    syms: list[str], left: str, right: str, merged: str
+) -> list[str]:
     """Reference greedy left-to-right non-overlapping BPE merge."""
     out: list[str] = []
     i = 0
     while i < len(syms):
         if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-            out.append(left + right)
+            out.append(merged)
             i += 2
         else:
             out.append(syms[i])
@@ -213,34 +216,130 @@ def _py_bpe_merge(syms: list[str], left: str, right: str) -> list[str]:
     return out
 
 
-@given(
-    words_=st.lists(
-        st.text(alphabet="ab", min_size=1, max_size=8), min_size=1, max_size=8
-    ),
-    pair=st.tuples(st.sampled_from("ab"), st.sampled_from("ab")),
+_FOLD_WORDS = st.lists(
+    st.text(alphabet="ab", min_size=1, max_size=8), min_size=1, max_size=8
 )
-@_SETTINGS
-def test_bpe_fold_matches_python_reference_merge(spark, words_, pair):
-    """The Catalyst aggregate-fold merge must equal the textbook greedy
-    scan on EVERY input — including overlapping runs (aaa + (a,a)),
-    back-to-back merges (abab + (a,b)), and merged-symbol collisions —
-    over a 2-letter alphabet that maximizes those collisions."""
+_FOLD_PAIR = st.tuples(st.sampled_from("ab"), st.sampled_from("ab"))
+
+
+def _check_folds(spark, words_, left, right, merged, syms_of):
+    """The Catalyst fold and the driver fold both equal the textbook scan
+    on every word."""
     from pyspark.sql import functions as F
 
     from data_algorithms_with_pyspark_spark.operators.bpe import (
         merge_pair_expr,
+        merge_pair_py,
     )
 
-    left, right = pair
-    df = spark.createDataFrame([(w, list(w)) for w in words_], ["w", "syms"])
+    token = left + right if merged is None else merged
+    df = spark.createDataFrame(
+        [(w, syms_of(w)) for w in words_], ["w", "syms"]
+    )
     got = {
         r["w"]: r["m"]
         for r in df.select(
-            "w", merge_pair_expr(F.col("syms"), left, right).alias("m")
+            "w", merge_pair_expr(F.col("syms"), left, right, merged).alias("m")
         ).collect()
     }
     for w in words_:
-        assert got[w] == _py_bpe_merge(list(w), left, right), (w, left, right)
+        want = _py_bpe_merge(syms_of(w), left, right, token)
+        assert got[w] == want, (w, left, right)
+        assert merge_pair_py(syms_of(w), left, right, merged) == want
+
+
+@given(words_=_FOLD_WORDS, pair=_FOLD_PAIR)
+@_SETTINGS
+def test_bpe_fold_matches_python_reference_merge(spark, words_, pair):
+    """The Catalyst aggregate-fold merge and the trainers' driver fold
+    must both equal the textbook greedy scan on EVERY input — including
+    overlapping runs (aaa + (a,a)), back-to-back merges (abab + (a,b)),
+    and merged-symbol collisions — over a 2-letter alphabet that
+    maximizes those collisions."""
+    left, right = pair
+    _check_folds(spark, words_, left, right, None, list)
+
+
+@pytest.mark.parametrize("left_continues", [False, True])
+@given(words_=_FOLD_WORDS, pair=_FOLD_PAIR)
+@_SETTINGS
+def test_wordpiece_fold_matches_python_reference_merge(
+    spark, left_continues, words_, pair
+):
+    """The same three-way agreement for WordPiece's merge: continuation
+    symbols carry ``##`` and the merge produces the ``##``-stripped
+    token, with a word-initial or a continuation left symbol."""
+    left = ("##" if left_continues else "") + pair[0]
+    _check_folds(
+        spark,
+        words_,
+        left,
+        "##" + pair[1],
+        left + pair[1],
+        lambda w: [w[0]] + ["##" + c for c in w[1:]],
+    )
+
+
+def _recount_train(rows, n_merges, pick, merged_of):
+    """Reference trainer: recounts every pair and symbol of the whole
+    table each round and merges with the textbook scan. Returns (merges,
+    final syms by term), or (merges, None) once the pairs run out."""
+    table = {t: s for t, _, s in rows}
+    weight = {t: n for t, n, _ in rows}
+    merges = []
+    for k in range(1, n_merges + 1):
+        pairs, singles = {}, {}
+        for t, s in table.items():
+            for x in s:
+                singles[x] = singles.get(x, 0) + weight[t]
+            for p in zip(s, s[1:]):
+                pairs[p] = pairs.get(p, 0) + weight[t]
+        top = pick(pairs, singles)
+        if top is None:
+            return merges, None
+        merges.append((k, *top))
+        token = merged_of(top[0], top[1])
+        table = {
+            t: _py_bpe_merge(s, top[0], top[1], token)
+            for t, s in table.items()
+        }
+    return merges, table
+
+
+@pytest.mark.parametrize("trainer", ["bpe", "wordpiece"])
+@given(
+    counts=st.dictionaries(
+        st.text(alphabet="abc", min_size=1, max_size=7),
+        st.integers(min_value=1, max_value=5),
+        min_size=1,
+        max_size=10,
+    ),
+    n_merges=st.integers(min_value=1, max_value=10),
+)
+@_SETTINGS
+def test_trainers_match_whole_table_recount(spark, trainer, counts, n_merges):
+    """The trainers update their pair counts incrementally, for the words
+    each merge rewrites; merges, final segmentations and the exhaustion
+    error must equal a trainer that recounts the whole table every round."""
+    from data_algorithms_with_pyspark_spark.operators import bpe, wordpiece
+
+    wc = spark.createDataFrame(list(counts.items()), "term string, n bigint")
+    if trainer == "bpe":
+        vocab, train = bpe.char_vocab(wc), bpe.bpe_train
+        pick, merged_of = bpe._top_pair, lambda l, r: l + r
+    else:
+        vocab, train = wordpiece.wordpiece_vocab(wc), wordpiece.wordpiece_train
+        pick = wordpiece._best_pair
+        merged_of = lambda l, r: l + r.removeprefix("##")  # noqa: E731
+    rows = [tuple(r) for r in vocab.collect()]
+    want_merges, want_table = _recount_train(rows, n_merges, pick, merged_of)
+    if want_table is None:
+        with pytest.raises(ValueError, match="vocabulary exhausted"):
+            train(vocab, n_merges)
+        return
+    merges, final = train(vocab, n_merges)
+    assert merges == want_merges
+    assert {r["term"]: r["syms"] for r in final.collect()} == want_table
 
 
 def _dup_spans_model(docs, window):

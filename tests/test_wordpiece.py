@@ -8,12 +8,14 @@ from pyspark.sql import functions as F
 
 from data_algorithms_with_pyspark_spark.operators.wordpiece import (
     SCORE_SCALE,
+    _best_pair,
     greedy_segment_expr,
     wordpiece_segment,
     wordpiece_train,
     wordpiece_vocab,
     wordpiece_vocab_pieces,
 )
+from tests.conftest import count_jobs, persisted_rdds
 
 
 def _vocab(spark, *word_freqs):
@@ -112,6 +114,31 @@ def test_train_raises_on_exhaustion(spark):
     vocab = _vocab(spark, ("ab", 1))
     with pytest.raises(ValueError, match="exhausted"):
         wordpiece_train(vocab, n_merges=2)
+
+
+def test_best_pair_raises_when_score_denominator_overflows_i64():
+    # count(a) * count(##b) = 2^63: one past the signed 64-bit range the
+    # oracle's BIGINT product holds (a 64-bit wrap would flip its sign)
+    pairs = {("a", "##b"): 3, ("c", "##d"): 1}
+    singles = {"a": 1 << 32, "##b": 1 << 31, "c": 1, "##d": 1}
+    with pytest.raises(ValueError, match="overflows signed 64-bit"):
+        _best_pair(pairs, singles)
+    singles["a"] -= 1  # product 2^63 - 2^31 fits: scored, not raised
+    assert _best_pair(pairs, singles) == ("c", "##d", 1, SCORE_SCALE)
+
+
+def test_train_leaves_no_persisted_rdds(spark):
+    spark.catalog.clearCache()  # the baseline: what clearCache cannot free
+    before = persisted_rdds(spark)
+    _, final = wordpiece_train(_vocab(spark, ("abc", 5)), n_merges=2)
+    final.collect()
+    spark.catalog.clearCache()
+    assert persisted_rdds(spark) == before
+
+
+def test_train_runs_one_collect_not_jobs_per_merge(spark):
+    vocab = _vocab(spark, ("hello", 10), ("hell", 4), ("he", 6))
+    assert count_jobs(spark, lambda: wordpiece_train(vocab, n_merges=3)) <= 2
 
 
 def test_vocab_pieces_alphabet_plus_merges(spark):
