@@ -165,14 +165,17 @@ def _bytes_conf(v: str) -> int:
 
 
 def _scan_partition_estimate(df: DataFrame) -> int | None:
-    """Scan-partition estimate for a plain local-file scan, from file
-    sizes + the session's split config — the same math FilePartition
-    uses (maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    padded_total / defaultParallelism)); parquet is splittable, so the
-    single-large-file case sizes correctly too, which a bare file COUNT
-    could not see). Returns None when the input is not a local file scan
-    (caller falls back to the exact probe). Parquet-footer-free: only
-    file lengths matter for split packing (guide §6; VERDICT r11 #9)."""
+    """Scan-partition count of a plain local-file scan, from file sizes +
+    the session's split config, by replaying Spark's FilePartition
+    packing: maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    padded_total / minPartitionNum)); each file is cut into maxSplitBytes
+    pieces (parquet is splittable), the pieces are sorted by size
+    descending, and each goes into the open partition (its length plus
+    openCostInBytes) unless the partition's bytes plus the piece's length
+    would pass maxSplitBytes, which closes it ("next fit decreasing").
+    Returns None when the input is not a local file scan (caller falls
+    back to the exact probe). Parquet-footer-free: only file lengths
+    matter for split packing (guide §6; VERDICT r11 #9)."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -193,10 +196,27 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
     open_cost = _bytes_conf(
         conf.get("spark.sql.files.openCostInBytes", "4194304")
     )
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or df.sparkSession.sparkContext.defaultParallelism
+    )
     padded = sum(sizes) + open_cost * len(files)
-    max_split = min(max_pb, max(open_cost, padded // max(parallelism, 1)))
-    return max(1, -(-padded // max(max_split, 1)))
+    max_split = max(1, min(max_pb, max(open_cost, padded // max(min_parts, 1))))
+    pieces = sorted(
+        (
+            min(max_split, size - off)
+            for size in sizes
+            for off in range(0, size, max_split)
+        ),
+        reverse=True,
+    )
+    parts, filled = 0, 0
+    for piece in pieces:
+        if parts == 0 or filled + piece > max_split:
+            parts, filled = parts + 1, 0
+        filled += piece + open_cost
+    return parts
 
 
 def spread_partitions(df: DataFrame) -> DataFrame:

@@ -1,31 +1,34 @@
-"""Distributed logistic-regression training (hashed-feature classifier).
+"""Logistic-regression training (hashed-feature classifier).
 
 The fasttext-style quality-classifier shape of LLM data pipelines (e.g.
 the CCNet/GPT-3 "quality filter": a linear model over hashed bag-of-words
 features scores every document, and the corpus is filtered on the score).
-Training is full-batch gradient descent with the MODEL on the driver and
-the DATA distributed — features pack once into a persisted per-doc array
-and each iteration is ONE fused scan of it (score via an integer array
-fold, gradient via explode + groupBy(j)); only ``dims + 1`` gradient
-cells ever reach the driver. The same topology as ``clustering.kmeans_train``:
-broadcast tiny state out, aggregate tiny state back, never collect the
-corpus.
+Training is full-batch gradient descent. The one corpus-scale step is
+packing each document's features into a per-doc array, in Spark; that
+packed table, one row per training document, is collected to the driver
+ONCE through Arrow, and every gradient step runs there over it
+(``logistic_regression_train``). A step touches a table the size of the
+training set, never the corpus, so no per-step Spark job or plan is paid.
+Scoring stays distributed: ``packed_logistic_scores`` is one projection
+over the trainer's persisted packed relation.
 
 Cross-engine replay (the catalog-oracle discipline): all corpus-side
 arithmetic is INTEGER — weights and sigmoid outputs live in micro-units
-(1e6), features are token counts — so every aggregate is exact under any
+(1e6), features are token counts — so every sum is exact under any
 accumulation order and a DuckDB oracle replays the whole training loop as
 an unrolled CTE chain. The only float step is the sigmoid itself, whose
 output is floor-quantized to the micro grid; engines' ``exp`` may differ
-in the last ulp, which flips a quantized value only when the true sigmoid
-sits within ~1e-16 of a grid boundary (measure-zero in practice — the
-same accepted risk as the kmeans cosine grid, plans/curation.py).
+in the last ulp (Spark's ``StrictMath.exp``, DuckDB's, and the driver
+steps' Python ``math.exp``), which flips a quantized value only when the
+true sigmoid sits within ~1e-16 of a grid boundary (measure-zero in
+practice — the same accepted risk as the kmeans cosine grid,
+plans/curation.py).
 
-Scale note (100 TB): gradients are exact int64 sums here; at corpus scale
-``sum((s - y) * x)`` can exceed 2^53 micro-units, so the production
-variant aggregates per-partition means (double) instead — the quantized
-replay is what makes the TEST-scale oracle possible, not a requirement of
-the operator shape.
+Scale note: the training set is bounded by ``TRAIN_DOCS_MAX`` documents
+(measured cost in ``logistic_regression_train``); a larger one must be
+sampled first, while scoring runs at any size. Sums are exact int64 and
+raise a ``ValueError`` past signed 64-bit; the quantized replay is what
+makes the oracle possible, not a requirement of the operator shape.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "MICRO",
+    "TRAIN_DOCS_MAX",
     "embedding_gram_fp",
     "hashed_token_features",
     "logistic_regression_train",
@@ -49,6 +53,14 @@ __all__ = [
 ]
 
 MICRO = 1_000_000  # fixed-point scale for weights / sigmoid outputs
+
+# Most training documents logistic_regression_train collects to the driver
+# (its docstring has the measured cost).
+TRAIN_DOCS_MAX = 1_000_000
+
+_I64_SAFE = 2.0**62  # partial-sum bound under which int64 sums cannot wrap
+# -z/MICRO past this makes exp overflow; the quantized sigmoid is 0 there
+_EXP_MAX = 709.0
 
 
 def hashed_token_features(
@@ -148,6 +160,59 @@ def packed_logistic_scores(
     )
 
 
+def _training_arrays(
+    docs: DataFrame,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The packed training relation ``(y_micro, _fx)`` as driver arrays —
+    the trainer's one Spark action, an Arrow collect through
+    ``limit(TRAIN_DOCS_MAX + 1)``. Returns ``(y, doc, j, x)``: one label
+    per collected row, and one entry per packed feature with the row it
+    belongs to. Rows without features (the LEFT join from labels) count
+    in ``len(y)`` and own no entry."""
+    import pyarrow.compute as pc  # ~20 ms: keep it off catalog set-up
+
+    cap = TRAIN_DOCS_MAX
+    tbl = docs.select("y_micro", "_fx").limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        raise ValueError(
+            f"training set has more than TRAIN_DOCS_MAX={cap} documents; "
+            "the trainer holds it on the driver, so sample it first"
+        )
+    if tbl.num_rows == 0:
+        raise ValueError("empty training set")
+    fx = tbl.column("_fx").combine_chunks()
+    flat = fx.flatten()
+    cols = (tbl.column("y_micro"), flat.field("j"), flat.field("x"))
+    if any(c.null_count for c in cols):
+        raise ValueError("null label or feature in the training set")
+    y, j, x = (c.to_numpy().astype(np.int64) for c in cols)
+    lengths = pc.fill_null(pc.list_value_length(fx), 0).to_numpy()
+    doc = np.repeat(np.arange(tbl.num_rows), lengths)
+    return y, doc, j, x
+
+
+def _sum_by(index: np.ndarray, a: np.ndarray, x: np.ndarray, size: int,
+            bound: float, what: str) -> np.ndarray:
+    """Exact integer sums of ``a * x`` grouped by ``index`` (length
+    ``size``). ``bound`` caps every partial sum in any order; under 2^62
+    the int64 sums cannot wrap, past it they run on Python integers and
+    raise a ``ValueError`` when a sum leaves signed 64-bit (the Spark fold
+    raised on that overflow under ANSI)."""
+    if bound < _I64_SAFE:
+        out = np.zeros(size, np.int64)
+        np.add.at(out, index, a * x)
+        return out
+    out = np.zeros(size, object)
+    np.add.at(out, index, a.astype(object) * x.astype(object))
+    if any(not _in_i64(v) for v in out):
+        raise ValueError(f"logistic regression {what} overflows signed 64-bit")
+    return out
+
+
+def _in_i64(v: int) -> bool:
+    return -(2**63) <= v < 2**63
+
+
 def logistic_regression_train(
     feats: DataFrame,
     labels: DataFrame,
@@ -161,88 +226,95 @@ def logistic_regression_train(
     """Full-batch gradient descent; returns micro-unit weights
     (length ``dims + 1``, bias last).
 
-    ``feats``: (id_col, j, x) sparse rows incl. the bias feature;
-    ``labels``: (id_col, y_micro) with y in {0, MICRO}.
+    ``feats``: (id_col, j, x) sparse rows incl. the bias feature, j in
+    [0, dims]; ``labels``: (id_col, y_micro) with y in [0, MICRO] (0 or
+    MICRO for hard labels). Either outside its range raises.
 
-    The score and gradient computations are FUSED into a single cached
-    scan per iteration (VERDICT r3 #2): features are packed once into a
-    per-doc array ``collect_list(struct(j, x))`` joined with the label
-    (one shuffle, before the loop, persisted), so each iteration is one
-    pass over the packed relation — z via an integer ``F.aggregate``
-    over the array with the weights inlined as a literal, sigmoid
-    quantized to the micro grid, then explode + groupBy(j) for the
-    gradient (``dims + 1`` rows to the driver; the only per-iteration
-    shuffle, map-side combined to ``dims + 1`` keys). The old shape
-    re-aggregated feats by id AND re-joined feats×scores every
-    iteration — three shuffles and two corpus scans per step.
+    Features are packed once into a per-doc array ``collect_list(struct(j,
+    x))``, LEFT-joined from the labels (so the packed relation has one row
+    per label row and n is its row count), and persisted when the caller
+    takes it through ``packed_out``. That relation is collected ONCE
+    through Arrow (``_training_arrays``, capped at ``TRAIN_DOCS_MAX``)
+    and every gradient step runs on the driver: no per-step Spark job or
+    plan. A step is, in exact integers,
 
-    The integer update ``w_j -= floor(lr_num * g_j / (lr_den * n) +
-    0.5)`` and every corpus-side term are unchanged, so the unrolled SQL
-    oracle (plans/curation.doc_quality_classifier) replays bit-for-bit:
-    z is an exact integer sum (order-independent under the array
-    packing's nondeterministic order), the sigmoid quantize is the same
-    expression.
+        z = sum_j w[j] * x                (per document)
+        s = floor(MICRO / (1 + exp(-z / MICRO)) + 0.5)
+        g_j = sum_docs (s - y) * x_j
+        w_j -= floor(lr_num * g_j / (lr_den * n) + 0.5)
+
+    — the same terms the unrolled SQL oracle
+    (plans/curation.doc_quality_classifier) replays, so the weights are
+    bit-identical to a Spark fold of the same expressions (z and g are
+    order-free integer sums; the sigmoid is the one float step, see the
+    module docstring). z, g or w leaving signed 64-bit raises a
+    ``ValueError``.
+
+    Size: the driver holds the collected table and three int64s per
+    packed feature. Measured with ``scripts/classifier_train_scale.py``
+    (``perfbench/gen.py`` documents, ~18 packed features each; 4 vCPU,
+    ``local[4]``, 3 steps): 1e5 documents train in 13 s with a Python
+    peak of 0.25 GB inside Spark's default 1 GB driver heap; 1e6 documents
+    train in 97-115 s with a Python peak of 1.2 GB and need a 3 GB driver
+    heap (2 GB runs out of memory in the collect). ``TRAIN_DOCS_MAX`` is
+    that largest measured size; a larger training set must be sampled
+    before it reaches the trainer. Scoring (``packed_logistic_scores``)
+    stays distributed at any size.
     """
     if dims < 1 or iters < 1:
         raise ValueError("dims and iters must be >= 1")
-    n = labels.count()
-    if n == 0:
-        raise ValueError("empty training set")
-    docs = (
-        feats.groupBy(id_col)
-        .agg(F.collect_list(F.struct(F.col("j"), F.col("x"))).alias("_fx"))
-        .join(labels, on=id_col)
-        .persist()
+    docs = labels.join(
+        feats.groupBy(id_col).agg(
+            F.collect_list(F.struct(F.col("j"), F.col("x"))).alias("_fx")
+        ),
+        on=id_col,
+        how="left",
     )
+    if packed_out is not None:  # else the one collect is its only reader
+        docs = docs.persist()
     try:
+        y, doc, j, x = _training_arrays(docs)
+        if j.size and not (0 <= j.min() and j.max() <= dims):
+            raise ValueError(f"feature index j outside [0, {dims}]")
+        if not (0 <= y.min() and y.max() <= MICRO):
+            raise ValueError(f"label y_micro outside [0, {MICRO}]")
+        n = len(y)
+        ax = np.abs(x.astype(np.float64))
+        doc_mass = np.bincount(doc, ax, n).max()  # largest sum_j |x| of a doc
+        j_mass = np.bincount(j, ax, dims + 1).max()  # ... of a feature
         w = [0] * (dims + 1)
         for _ in range(iters):
-            w_lit = _w_lit(w)
-            z_micro = F.aggregate(
-                "_fx",
-                F.lit(0).cast("long"),
-                lambda acc, e: acc
-                + F.element_at(w_lit, (e["j"] + 1).cast("int")) * e["x"],
+            z = _sum_by(doc, np.array(w, np.int64)[j], x, n,
+                        max(map(abs, w)) * doc_mass, "score z")
+            zf = np.minimum(-z.astype(np.float64) / MICRO, _EXP_MAX)
+            s = np.array(
+                [math.floor(MICRO / (1.0 + math.exp(v)) + 0.5)
+                 for v in zf.tolist()],
+                np.int64,
             )
-            z = z_micro.cast("double") / F.lit(float(MICRO))
-            s_micro = F.floor(
-                F.lit(float(MICRO)) / (F.lit(1.0) + F.exp(-z)) + F.lit(0.5)
-            ).cast("long")
-            grad_rows = (
-                docs.select(
-                    s_micro.alias("_s"),
-                    F.col("y_micro"),
-                    F.explode("_fx").alias("_e"),
-                )
-                .groupBy(F.col("_e.j").alias("j"))
-                .agg(
-                    F.sum(
-                        (F.col("_s") - F.col("y_micro")) * F.col("_e.x")
-                    ).alias("g")
-                )
-                .collect()  # dims + 1 rows — driver state is weights only
-            )
-            grad = {int(r["j"]): int(r["g"]) for r in grad_rows}
+            d = s - y  # |d| <= MICRO
+            g = _sum_by(j, d[doc], x, dims + 1, MICRO * j_mass, "gradient g")
             w = [
-                wj
-                - math.floor((lr_num * grad.get(j, 0)) / (lr_den * n) + 0.5)
-                for j, wj in enumerate(w)
+                wj - math.floor((lr_num * int(gj)) / (lr_den * n) + 0.5)
+                for wj, gj in zip(w, g)
             ]
+            if not all(map(_in_i64, w)):
+                raise ValueError(
+                    "logistic regression weight w overflows signed 64-bit"
+                )
     except BaseException:
         # the caller gets no usable handle on the failure path, so the
         # persisted relation must not outlive the exception (ADVICE r11)
         docs.unpersist()
         raise
     # packed_out (cache_registry convention, see bm25_topk): on SUCCESS
-    # the caller receives the persisted packed relation to score from
-    # (packed_logistic_scores) instead of recomputing features + one more
-    # per-id shuffle; docs is then NOT unpersisted here — the caller's
-    # returned plan still reads it, and the caller (or session/bench
-    # clearCache) owns the unpersist.
+    # the caller receives the persisted packed relation, restricted to
+    # the rows that have features, to score from (packed_logistic_scores)
+    # instead of recomputing features + one more per-id shuffle; docs is
+    # NOT unpersisted here — the caller's returned plan still reads it,
+    # and the caller (or session/bench clearCache) owns the unpersist.
     if packed_out is not None:
-        packed_out.append(docs)
-    else:
-        docs.unpersist()
+        packed_out.append(docs.where(F.col("_fx").isNotNull()))
     return w
 
 

@@ -59,6 +59,13 @@ _QUERY_MODULES = (
 # attestation covers every catalog query (scripts/driver_sim.py always
 # verifies all of them regardless of order).
 _SAMPLE_PRIORITY = (
+    # Round 14 rotation: the quality-classifier rows, whose trainer now
+    # collects its packed table once and runs every gradient step (and
+    # its sigmoid) on the driver, lead so the sample window re-attests
+    # them first; the round-13 tokenizer rows follow.
+    "doc_quality_classifier",
+    "doc_quality_classifier_eval",
+    #
     # Round 13 rotation: the rows whose BPE/WordPiece trainers now run
     # every merge on the driver over one collected vocabulary lead, so
     # the ~50-query sample window re-attests the retrained rows first.
@@ -91,8 +98,6 @@ _SAMPLE_PRIORITY = (
     "ivf_pq_ann_incremental_index",
     "ivf_pq_residual_ann_topk",
     "ivf_pq_recall_report",
-    "doc_quality_classifier",
-    "doc_quality_classifier_eval",
     "term_count_min_sketch",
     "bloom_term_membership",
     "bm25_search_topk",

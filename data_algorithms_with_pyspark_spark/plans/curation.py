@@ -3267,9 +3267,9 @@ def _lr_eval_oracle_sql() -> str:
     tags=("ml", "curation", "iterative"),
     description="Trains a hashed-feature logistic-regression quality "
     "classifier (fasttext-filter shape) by full-batch gradient descent — "
-    "model on the driver, data distributed, integer micro-unit "
-    "quantization — and scores every document; oracle RETRAINS via an "
-    "unrolled CTE chain",
+    "features packed per document in Spark and collected once, every "
+    "step on the driver, integer micro-unit quantization — and scores "
+    "every document in Spark; oracle RETRAINS via an unrolled CTE chain",
     oracle=_lr_oracle_sql(),
 )
 def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3277,10 +3277,11 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     features (md5 lane % dims + bias), label = deterministic length rule
     (a stand-in for human/LM labels, chosen so the oracle can replay it),
     3 gradient-descent iterations via ``ml.logistic_regression_train``
-    (per iteration: one score aggregate, one (dims+1)-row gradient
-    aggregate to the driver — the corpus never collects), then one final
-    scoring pass. Output: per-doc label, micro-unit sigmoid score, and
-    the >= 0.5 prediction."""
+    (features packed per document and collected once through Arrow, every
+    step on the driver — bounded by ``ml.TRAIN_DOCS_MAX`` documents), then
+    one distributed scoring pass over the trainer's persisted packed
+    relation. Output: per-doc label, micro-unit sigmoid score, and the
+    >= 0.5 prediction."""
     from data_algorithms_with_pyspark_spark.functions.text_functions import words
     from data_algorithms_with_pyspark_spark.operators.ml import (
         hashed_token_features,
@@ -3306,17 +3307,12 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-id re-aggregation + labels join from the returned query
     # (guide §2.4: one pass, one shuffle, already paid during training).
     feats = hashed_token_features(toks, _LR_DIMS)
-    labels = labels.persist()  # count + packed-build join
+    # labels feeds only the packed build, read once — no persist
     packed_reg: list = []
-    try:
-        w = logistic_regression_train(
-            feats, labels, dims=_LR_DIMS, iters=_LR_ITERS, packed_out=packed_reg
-        )
-        scored = packed_logistic_scores(packed_reg[0], w)
-    finally:
-        # must not leak if training raises (ADVICE r11); the returned
-        # plan reads only the packed relation, not labels
-        labels.unpersist()
+    w = logistic_regression_train(
+        feats, labels, dims=_LR_DIMS, iters=_LR_ITERS, packed_out=packed_reg
+    )
+    scored = packed_logistic_scores(packed_reg[0], w)
     return (
         base.drop("_t")
         .join(scored, on="doc_id")
@@ -3398,9 +3394,10 @@ def incremental_hourly_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_quality_classifier_eval",
     tags=("ml", "curation", "iterative"),
     description="Held-out evaluation of the quality classifier: train on "
-    "the 7/8 split, score the unseen 1/8, report the confusion matrix "
-    "(tp/fp/fn/tn) — the oracle retrains on the same split and must "
-    "reproduce every count",
+    "the 7/8 split (collected once, gradient steps on the driver), score "
+    "the unseen 1/8 in Spark, report the confusion matrix (tp/fp/fn/tn) — "
+    "the oracle retrains on the same split and must reproduce every "
+    "count",
     oracle=_lr_eval_oracle_sql(),
 )
 def doc_quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3409,8 +3406,9 @@ def doc_quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays it), training sees only the rest, and the report is the
     held-out confusion matrix — generalization measured on documents the
     gradient never touched. Same engine pieces as
-    ``doc_quality_classifier``; only the feats/labels feeding the train
-    loop are filtered.
+    ``doc_quality_classifier``; only the feats/labels feeding the trainer
+    are filtered (its one Arrow collect holds the 7/8 split, bounded by
+    ``ml.TRAIN_DOCS_MAX``), and the held-out slice is scored in Spark.
 
     Honest-eval note: at this corpus + 3 full-batch iterations the model
     is still in the majority-class regime (all-positive predictions —
@@ -3436,22 +3434,18 @@ def doc_quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("y_micro"),
     )
     is_eval = F.col("doc_id") % 8 == 0
-    feats = hashed_token_features(toks, _LR_DIMS).persist()
-    labels = labels.persist()  # joined once per iteration + final report
-    try:
-        w = logistic_regression_train(
-            feats.where(~is_eval),
-            labels.where(~is_eval),
-            dims=_LR_DIMS,
-            iters=_LR_ITERS,
-        )
-        # score ONLY the held-out slice — the report filters to is_eval
-        # anyway, and per-doc scoring commutes with the filter, so this
-        # drops 7/8 of the scoring aggregate for identical counts
-        scored = logistic_scores(feats.where(is_eval), w)
-    finally:
-        feats.unpersist()
-        labels.unpersist()
+    # feats and labels each feed the trainer's one collect — no persist
+    feats = hashed_token_features(toks, _LR_DIMS)
+    w = logistic_regression_train(
+        feats.where(~is_eval),
+        labels.where(~is_eval),
+        dims=_LR_DIMS,
+        iters=_LR_ITERS,
+    )
+    # score ONLY the held-out slice — the report filters to is_eval
+    # anyway, and per-doc scoring commutes with the filter, so this
+    # drops 7/8 of the scoring aggregate for identical counts
+    scored = logistic_scores(feats.where(is_eval), w)
     n_train = labels.where(~is_eval).count()
     pred = F.col("s_micro") >= 500_000
     truth = F.col("y_micro") == 1_000_000

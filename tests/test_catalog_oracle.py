@@ -48,11 +48,18 @@ def test_entry_contract(spark):
 _EMPTY_AT_SMOKE = ("events_seasonal_anomalies", "customers_without_orders")
 
 
-def test_empty_at_smoke_queries_are_vacuous_only_where_expected(spark):
+def test_empty_at_smoke_queries_are_vacuous_only_where_expected(
+    spark, duck_smoke
+):
     """If a NEW query joins this club, add it to the sf0.01 re-check below
-    (this assertion is the tripwire)."""
+    (this assertion is the tripwire). An oracle-backed query's row count
+    comes from its DuckDB oracle, which test_matches_duckdb_oracle pins
+    equal to Spark's; only rows-only queries run in Spark here."""
     for name, q in all_queries().items():
-        n = q.fn(spark, SF_SMOKE).count()
+        if q.oracle:
+            n = len(duck_smoke.execute(q.oracle).fetchall())
+        else:
+            n = q.fn(spark, SF_SMOKE).count()
         if n == 0:
             assert name in _EMPTY_AT_SMOKE, (
                 f"{name} is empty at SF_SMOKE: its value oracle is vacuous "
