@@ -12,6 +12,9 @@ Two tiers, mirroring how ANN is deployed on real clusters:
                   number of hyperplanes / probes.
 
 All vector math is JVM-side (functions/vectors.py). Deterministic seeds.
+The IVF search and the catalog's ANN search path (query fetch, probe
+ranking, audits) live in ``operators/ann.py``, built on the PQ/SQ8
+primitives here.
 """
 
 from __future__ import annotations
@@ -38,7 +41,6 @@ from data_algorithms_with_pyspark_spark.functions.vectors import (
 from data_algorithms_with_pyspark_spark.operators.clustering import (
     CENTROID_QUANT,
     collect_centroids,
-    l2_norm_py,
     literal_fits,
     with_nearest_centroid,
 )
@@ -62,8 +64,8 @@ __all__ = [
     "lsh_near_dup_pairs",
     "srp_banded_near_dup_pairs",
     "ivf_assign",
-    "ivf_topk",
     "pq_codebook",
+    "pq_codebook_from_rows",
     "pq_train_codebook",
     "pq_encode",
     "pq_adc_topk",
@@ -628,100 +630,6 @@ def ivf_assign(
     return with_nearest_centroid(vecs, cent_pairs, n_lists, id_col, id_col=id_col)
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: the third ANN tier.
-
-    Index: every vector is assigned to its nearest of ``n_lists`` coarse
-    centroids (``ivf_assign``). Search: score the query against centroids
-    only, probe the best ``n_probe`` lists, and run exact cosine on those
-    candidates — at query time only ~n_probe/n_lists of the corpus is
-    scored. Ties broken by centroid/vector id everywhere -> fully
-    deterministic.
-
-    ``centroids`` (``(cid, cvec)`` rows, cid in [0, n_lists)) swaps in a
-    TRAINED coarse quantizer (``clustering.kmeans_train``) for the
-    default first-``n_lists``-ids stand-in — same plan, better lists.
-    """
-    vecs = embeddings.select(F.col(id_col), to_double_array(vec_col).alias("vec"))
-    if centroids is None:
-        # ONE bounded collect for query row + stand-in centroids (both are
-        # low-id rows of the same table — two separate collects paid two
-        # scan jobs for one predicate's worth of data)
-        small = {
-            int(r[id_col]): [float(x) for x in r["vec"]]
-            for r in vecs.where(
-                (F.col(id_col) < n_lists) | (F.col(id_col) == query_id)
-            )
-            .select(id_col, "vec")
-            .collect()
-        }
-        # sparse-tolerant like collect_centroids: the stand-in quantizer is
-        # whatever low-id rows exist
-        cent_vecs = [(c, small[c]) for c in sorted(small) if c < n_lists]
-        qv = small.get(query_id)
-        if qv is None:
-            raise ValueError(f"query_id {query_id} not found")
-    else:
-        cent_vecs = collect_centroids(
-            vecs, n_lists, id_col=id_col, centroids=centroids
-        )
-        qrow = vecs.where(F.col(id_col) == query_id).select("vec").collect()
-        if not qrow:
-            raise ValueError(f"query_id {query_id} not found")
-        qv = [float(x) for x in qrow[0]["vec"]]
-    qn = l2_norm_py(qv)
-    # Probe selection is pure driver math over the bounded centroid list:
-    # the same cosine fold (left-to-right, zero-norm guarded) and the same
-    # (qc DESC, cid ASC) order the old 16-row Spark job computed — two
-    # whole job/stage pairs (centroid scan + sort) gone per query.
-    probe_cids = [
-        cid
-        for _, cid in sorted(
-            ((-_cosine_py(cv, qv), cid) for cid, cv in cent_vecs)
-        )[:n_probe]
-    ]
-    # Row-local list id + static IN probe filter + query literal: the scan
-    # is ONE projection -> Filter -> TakeOrderedAndProject. The historical
-    # plan attached cid with a corpus join on id (a full-corpus shuffle at
-    # scale) and the probe set with a broadcast join; both are gone.
-    cos_q = cosine_with_norms(
-        F.col("vec"),
-        F.lit(qv),
-        F.col("_vn"),
-        F.lit(qn),
-    )
-    return (
-        with_nearest_centroid(vecs, cent_vecs, n_lists, id_col=id_col)
-        .where(F.col("cid").isin([int(c) for c in probe_cids]))
-        .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(cos_q, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def _cosine_py(a: list[float], b: list[float]) -> float:
-    """Driver-side twin of ``functions.vectors.cosine_similarity``: the
-    identical op sequence (left-to-right dot fold, left-to-right norm
-    folds, den = na*nb, zero-den guard) on IEEE doubles, so probe ranking
-    computed here agrees bit-for-bit with the engine expression it
-    replaces."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + float(x) * float(y)
-    den = l2_norm_py(a) * l2_norm_py(b)
-    return 0.0 if den == 0.0 else acc / den
-
-
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -993,26 +901,34 @@ def pq_codebook(
     catalog oracle can replay it — swap in ``clustering.kmeans_train``
     per subspace for trained codebooks). Driver state: m * ksub * (d/m)
     doubles = k*d, independent of corpus size."""
-    if ksub < 2 or ksub & (ksub - 1):
-        raise ValueError(
-            f"ksub={ksub} must be a power of two >= 2: codes are packed "
-            "into log2(ksub)-bit lanes and decoded with a ksub-1 bitmask"
-        )
     rows = (
         vecs.select(F.col(id_col), to_double_array(vec_col).alias("v"))
         .orderBy(id_col)
         .limit(ksub)
         .collect()
     )
+    return pq_codebook_from_rows([r["v"] for r in rows], m, ksub)
+
+
+def pq_codebook_from_rows(
+    rows: list[list[float]], m: int, ksub: int
+) -> list[list[list[float]]]:
+    """The codebook slicing: ``codebook[s][c]`` = subvector ``s`` of
+    ``rows[c]`` for the first ``ksub`` already-collected vectors. Raises
+    unless ``ksub`` is a power of two, at least ``ksub`` rows are given
+    and ``m`` divides the dimension."""
+    if ksub < 2 or ksub & (ksub - 1):
+        raise ValueError(
+            f"ksub={ksub} must be a power of two >= 2: codes are packed "
+            "into log2(ksub)-bit lanes and decoded with a ksub-1 bitmask"
+        )
     if len(rows) < ksub:
         raise ValueError(f"need at least ksub={ksub} vectors, got {len(rows)}")
-    dim = len(rows[0]["v"])
+    dim = len(rows[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     w = dim // m
-    return [
-        [list(r["v"][s * w : (s + 1) * w]) for r in rows] for s in range(m)
-    ]
+    return [[list(v[s * w : (s + 1) * w]) for v in rows[:ksub]] for s in range(m)]
 
 
 def pq_train_codebook(

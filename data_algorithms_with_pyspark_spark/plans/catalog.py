@@ -59,6 +59,25 @@ _QUERY_MODULES = (
 # attestation covers every catalog query (scripts/driver_sim.py always
 # verifies all of them regardless of order).
 _SAMPLE_PRIORITY = (
+    # Round 15 rotation: the 14 ANN rows, whose query fetch, probe
+    # ranking, codebook slicing and audits now run through one search
+    # path (operators/ann.py), lead so the sample window re-attests them
+    # first; the round-14 classifier and round-13 tokenizer rows follow.
+    "ivf_ann_topk",
+    "ivf_trained_recall_report",
+    "ivf_nprobe_recall_curve",
+    "pq_ann_topk",
+    "pq_recall_report",
+    "pq_ann_trained_codebook",
+    "pq_trained_recall_report",
+    "ivf_pq_ann_topk",
+    "ivf_pq_recall_report",
+    "ivf_pq_ann_persisted_index",
+    "ivf_pq_ann_incremental_index",
+    "ivf_pq_residual_ann_topk",
+    "sq8_ann_topk",
+    "sq8_recall_report",
+    #
     # Round 14 rotation: the quality-classifier rows, whose trainer now
     # collects its packed table once and runs every gradient step (and
     # its sigmoid) on the driver, lead so the sample window re-attests
@@ -88,16 +107,6 @@ _SAMPLE_PRIORITY = (
     # driver-argmax, literal/broadcast switch, single-collect ivf_pq):
     "embedding_kmeans_assign",
     "embedding_semdedup_prune",
-    "ivf_ann_topk",
-    "pq_ann_topk",
-    "pq_ann_trained_codebook",
-    "pq_recall_report",
-    "sq8_ann_topk",
-    "ivf_pq_ann_topk",
-    "ivf_pq_ann_persisted_index",
-    "ivf_pq_ann_incremental_index",
-    "ivf_pq_residual_ann_topk",
-    "ivf_pq_recall_report",
     "term_count_min_sketch",
     "bloom_term_membership",
     "bm25_search_topk",

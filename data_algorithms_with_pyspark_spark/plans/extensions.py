@@ -11,9 +11,13 @@ those approximations are validated against in tests).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_algorithms_with_pyspark_spark.functions.vectors import to_double_array
+from data_algorithms_with_pyspark_spark.operators import ann
 from data_algorithms_with_pyspark_spark.operators.dedup import (
     embedding_near_dup_pairs,
     exact_dedup_groups,
@@ -38,6 +42,8 @@ from data_algorithms_with_pyspark_spark.operators.multimodal import (
 from data_algorithms_with_pyspark_spark.operators.similarity import (
     choose_lsh_params,
     cosine_topk,
+    pq_codebook,
+    pq_train_codebook,
     random_hyperplanes,
     srp_banded_near_dup_pairs,
 )
@@ -82,6 +88,13 @@ def _sf_cache_key(sf_dir: str) -> str:
     )
 
     return table_fingerprint(sf_dir, "embeddings")
+
+
+def _ann_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings as ``(vec_id, vec array<double>)``, every ANN row's
+    input."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.select("vec_id", to_double_array("embedding").alias("vec"))
 
 
 def _marker_sql(markers: tuple[str, ...]) -> str:
@@ -2105,7 +2118,7 @@ def multimodal_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
     tags=("similarity", "ann"),
     description=f"IVF approximate top-{_ANN_K}: nearest-centroid inverted lists, "
-    "4-of-16 probe, exact re-rank on candidates (operators/similarity.py:ivf_topk)",
+    "4-of-16 probe, exact re-rank on candidates (operators/ann.py:ivf_topk)",
     oracle=f"""
         WITH v AS MATERIALIZED (
             SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
@@ -2146,10 +2159,8 @@ def multimodal_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_algorithms_with_pyspark_spark.operators.similarity import ivf_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, query_id=_ANN_QUERY_ID, k=_ANN_K, n_lists=16, n_probe=4)
+    return ann.ivf_topk(emb, query_id=_ANN_QUERY_ID, k=_ANN_K, n_lists=16, n_probe=4)
 
 
 @register(
@@ -2405,38 +2416,10 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the true distance joins back for the k winners only (a broadcast of
     k ids). Codebook + query + LUT are driver state (k*d doubles),
     exactly like the kmeans centroid loop."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-        pq_adc_topk,
-        pq_codebook,
-        pq_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
     cb = pq_codebook(vecs, m=_PQ_M, ksub=_PQ_KSUB, vec_col="vec")
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    enc = pq_encode(vecs, cb, vec_col="vec")
-    topk = pq_adc_topk(
-        enc.where(F.col("vec_id") != _ANN_QUERY_ID), cb, qv, k=_ANN_K
-    )
-    true_nano = (
-        F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    return (
-        topk.join(vecs, on="vec_id")
-        .select("vec_id", "pq_code", "adc_nano", true_nano)
-        .orderBy("adc_nano", "vec_id")
-    )
+    return ann.with_true_nano(ann.pq_search(vecs, cb, q, _ANN_K), vecs, q, "adc_nano")
 
 
 @register(
@@ -2528,43 +2511,11 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report exists to surface: on this data you ship IVF/SRP (whose
     recall tests pass planted-neighbor checks), or train real codebooks
     per subspace (``clustering.kmeans_train``) on clustered embeddings."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-        pq_adc_topk,
-        pq_codebook,
-        pq_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
     cb = pq_codebook(vecs, m=_PQ_M, ksub=_PQ_KSUB, vec_col="vec")
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    corpus = vecs.where(F.col("vec_id") != _ANN_QUERY_ID)
-    pq10 = pq_adc_topk(pq_encode(corpus, cb, vec_col="vec"), cb, qv, k=_ANN_K)
-    exact10 = (
-        corpus.select(
-            "vec_id",
-            F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-            .cast("long")
-            .alias("true_nano"),
-        )
-        .orderBy("true_nano", "vec_id")
-        .limit(_ANN_K)
-    )
-    return pq10.join(exact10, on="vec_id").agg(
-        F.lit(_ANN_K).cast("long").alias("k"),
-        F.count("*").alias("n_overlap"),
-        floor_round(F.count("*").cast("double") / F.lit(_ANN_K), 4).alias(
-            "recall"
-        ),
+    return ann.recall_report(
+        ann.pq_search(vecs, cb, q, _ANN_K), ann.exact_topk(vecs, q, _ANN_K), _ANN_K
     )
 
 
@@ -2716,6 +2667,12 @@ def _standin_cb_as_lists_cte() -> str:
         )"""
 
 
+def _pq_trained(vecs: DataFrame) -> list[list[list[float]]]:
+    return pq_train_codebook(
+        vecs, m=_PQ_M, ksub=_PQ_KSUB, max_iter=_PQ_TRAIN_ITERS, tol=0.0, vec_col="vec"
+    )
+
+
 @register(
     "pq_ann_trained_codebook",
     tags=("similarity", "ann", "iterative"),
@@ -2753,45 +2710,10 @@ def pq_ann_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, closing the 'trained path has no value oracle' gap. tol=0.0
     so early-stop fires only on an exact fixpoint (which replays
     identically)."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-        pq_adc_topk,
-        pq_encode,
-        pq_train_codebook,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    cb = pq_train_codebook(
-        vecs,
-        m=_PQ_M,
-        ksub=_PQ_KSUB,
-        max_iter=_PQ_TRAIN_ITERS,
-        tol=0.0,
-        vec_col="vec",
-    )
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    enc = pq_encode(vecs, cb, vec_col="vec")
-    topk = pq_adc_topk(
-        enc.where(F.col("vec_id") != _ANN_QUERY_ID), cb, qv, k=_ANN_K
-    )
-    true_nano = (
-        F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    return (
-        topk.join(vecs, on="vec_id")
-        .select("vec_id", "pq_code", "adc_nano", true_nano)
-        .orderBy("adc_nano", "vec_id")
-    )
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
+    topk = ann.pq_search(vecs, _pq_trained(vecs), q, _ANN_K)
+    return ann.with_true_nano(topk, vecs, q, "adc_nano")
 
 
 @register(
@@ -2841,71 +2763,13 @@ def pq_trained_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the unit-test regime); on this uniform-random synthetic data the gain
     is small-to-zero — that finding is the point of the audit, and PLANS.md
     records the measured values per SF."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-        pq_adc_topk,
-        pq_codebook,
-        pq_encode,
-        pq_train_codebook,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    corpus = vecs.where(F.col("vec_id") != _ANN_QUERY_ID)
-    exact10 = (
-        corpus.select(
-            "vec_id",
-            F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-            .cast("long")
-            .alias("true_nano"),
-        )
-        .orderBy("true_nano", "vec_id")
-        .limit(_ANN_K)
-        .select("vec_id")
-    )
-    cb_t = pq_train_codebook(
-        vecs,
-        m=_PQ_M,
-        ksub=_PQ_KSUB,
-        max_iter=_PQ_TRAIN_ITERS,
-        tol=0.0,
-        vec_col="vec",
-    )
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
+    trained = ann.pq_search(vecs, _pq_trained(vecs), q, _ANN_K)
     cb_s = pq_codebook(vecs, m=_PQ_M, ksub=_PQ_KSUB, vec_col="vec")
-    t10 = pq_adc_topk(
-        pq_encode(corpus, cb_t, vec_col="vec"), cb_t, qv, k=_ANN_K
-    ).select("vec_id")
-    s10 = pq_adc_topk(
-        pq_encode(corpus, cb_s, vec_col="vec"), cb_s, qv, k=_ANN_K
-    ).select("vec_id")
-    nt = t10.join(exact10, on="vec_id").agg(
-        F.count("*").alias("n_overlap_trained")
-    )
-    ns = s10.join(exact10, on="vec_id").agg(
-        F.count("*").alias("n_overlap_standin")
-    )
-    return nt.crossJoin(ns).select(
-        F.lit(_ANN_K).cast("long").alias("k"),
-        F.col("n_overlap_trained"),
-        floor_round(
-            F.col("n_overlap_trained").cast("double") / F.lit(_ANN_K), 4
-        ).alias("recall_trained"),
-        F.col("n_overlap_standin"),
-        floor_round(
-            F.col("n_overlap_standin").cast("double") / F.lit(_ANN_K), 4
-        ).alias("recall_standin"),
-        (F.col("n_overlap_trained") - F.col("n_overlap_standin"))
-        .cast("long")
-        .alias("trained_gain"),
+    standin = ann.pq_search(vecs, cb_s, q, _ANN_K)
+    return ann.trained_vs_standin(
+        trained, standin, ann.exact_topk(vecs, q, _ANN_K), _ANN_K
     )
 
 
@@ -3039,68 +2903,26 @@ def ivf_trained_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric closure of the trained-ANN story (trained PQ landed r8):
     the IVF tier's coarse quantizer is the other place the catalog used a
     deterministic stand-in where production would train. kmeans_train's
-    centroids drop into the UNCHANGED ivf_topk plan via the centroids
-    parameter — index and search shapes, broadcast pattern, and probe
-    count are identical; only the list geometry improves. tol=0.0 so
-    early-stop fires only on an exact fixpoint (replays identically in
-    the unrolled oracle)."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
+    centroids drop into the UNCHANGED ``ann.ivf_search`` plan — index and
+    search shapes, probe order and probe count are identical; only the
+    list geometry improves. One bounded collect fetches the query and the
+    stand-in centroids for both searches. tol=0.0 so early-stop fires
+    only on an exact fixpoint (replays identically in the unrolled
+    oracle)."""
     from data_algorithms_with_pyspark_spark.operators.clustering import (
         kmeans_train,
     )
-    from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-    )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    trained = kmeans_train(
-        vecs, k=_IVF_LISTS, max_iter=_IVF_TRAIN_ITERS, tol=0.0
-    )
-    cents_df = spark.createDataFrame(
-        list(enumerate(trained)), "cid int, cvec array<double>"
-    )
-    t10 = ivf_topk(
-        emb,
-        query_id=_ANN_QUERY_ID,
-        k=_ANN_K,
-        n_lists=_IVF_LISTS,
-        n_probe=_IVF_PROBE,
-        centroids=cents_df,
-    ).select("vec_id")
-    s10 = ivf_topk(
-        emb,
-        query_id=_ANN_QUERY_ID,
-        k=_ANN_K,
-        n_lists=_IVF_LISTS,
-        n_probe=_IVF_PROBE,
-    ).select("vec_id")
-    exact10 = cosine_topk(emb, query_id=_ANN_QUERY_ID, k=_ANN_K).select(
-        "vec_id"
-    )
-    nt = t10.join(exact10, on="vec_id").agg(
-        F.count("*").alias("n_overlap_trained")
-    )
-    ns = s10.join(exact10, on="vec_id").agg(
-        F.count("*").alias("n_overlap_standin")
-    )
-    return nt.crossJoin(ns).select(
-        F.lit(_ANN_K).cast("long").alias("k"),
-        F.col("n_overlap_trained"),
-        floor_round(
-            F.col("n_overlap_trained").cast("double") / F.lit(_ANN_K), 4
-        ).alias("recall_trained"),
-        F.col("n_overlap_standin"),
-        floor_round(
-            F.col("n_overlap_standin").cast("double") / F.lit(_ANN_K), 4
-        ).alias("recall_standin"),
-        (F.col("n_overlap_trained") - F.col("n_overlap_standin"))
-        .cast("long")
-        .alias("trained_gain"),
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID, _IVF_LISTS)
+    trained = kmeans_train(vecs, k=_IVF_LISTS, max_iter=_IVF_TRAIN_ITERS, tol=0.0)
+
+    def search(cents):
+        return ann.ivf_search(vecs, q, cents, _IVF_LISTS, _IVF_PROBE, _ANN_K)
+
+    exact = cosine_topk(vecs, query_id=_ANN_QUERY_ID, k=_ANN_K, vec_col="vec")
+    return ann.trained_vs_standin(
+        search(list(enumerate(trained))), search(q.low), exact, _ANN_K
     )
 
 
@@ -3186,43 +3008,20 @@ def _ivf_nprobe_curve_oracle() -> str:
 def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What the recall reports pin at ONE operating point, as the full
     curve: each additional probed list scans more of the corpus and
-    recovers more of the exact top-k. Five bounded searches (the audited
-    broadcast-probe ivf_topk plan, corpus never shuffles) + one exact
+    recovers more of the exact top-k. One bounded collect (query +
+    stand-in centroids), then five bounded searches (the row-local
+    ``ann.ivf_search`` plan, corpus never shuffles) + one exact
     baseline; each point is a 1-row overlap aggregate, unioned."""
-    from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact10 = cosine_topk(emb, query_id=_ANN_QUERY_ID, k=_ANN_K).select(
-        "vec_id"
-    )
-    points = []
-    for p in _NPROBE_CURVE:
-        topk = ivf_topk(
-            emb,
-            query_id=_ANN_QUERY_ID,
-            k=_ANN_K,
-            n_lists=_IVF_LISTS,
-            n_probe=p,
-        ).select("vec_id")
-        points.append(
-            topk.join(exact10, on="vec_id")
-            .agg(F.count("*").alias("n_overlap"))
-            .select(
-                F.lit(p).cast("long").alias("n_probe"),
-                F.col("n_overlap").cast("long").alias("n_overlap"),
-                floor_round(
-                    F.col("n_overlap").cast("double") / F.lit(_ANN_K), 4
-                ).alias("recall"),
-            )
-        )
-    out = points[0]
-    for part in points[1:]:
-        out = out.unionAll(part)
-    return out.orderBy("n_probe")
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID, _IVF_LISTS)
+    exact = cosine_topk(vecs, query_id=_ANN_QUERY_ID, k=_ANN_K, vec_col="vec")
+    points = [
+        ann.recall_report(
+            ann.ivf_search(vecs, q, q.low, _IVF_LISTS, p, _ANN_K), exact, _ANN_K
+        ).select(F.lit(p).cast("long").alias("n_probe"), "n_overlap", "recall")
+        for p in _NPROBE_CURVE
+    ]
+    return reduce(DataFrame.unionAll, points).orderBy("n_probe")
 
 
 _IVF_PQ_TOPK_CTES = f"""
@@ -3309,6 +3108,18 @@ _IVF_PQ_TOPK_CTES = f"""
             ORDER BY adc_nano, c.vec_id LIMIT {_ANN_K}
         )"""
 
+# the in-query, persisted and incremental IVF-PQ rows share one result
+_IVF_PQ_TOPK_ORACLE = f"""{_IVF_PQ_TOPK_CTES}
+        SELECT t.vec_id, t.cid, t.adc_nano,
+               CAST(floor(list_aggregate(list_transform(
+                   range(1, {_PQ_M * _PQ_W} + 1),
+                   i -> (v.vec[i] - q.qvec[i]) * (v.vec[i] - q.qvec[i])),
+                   'sum') * 1e9 + 0.5) AS BIGINT) AS true_nano
+        FROM topk t JOIN v USING (vec_id), q
+        ORDER BY t.adc_nano, t.vec_id
+    """
+
+
 
 @register(
     "ivf_pq_ann_topk",
@@ -3318,84 +3129,30 @@ _IVF_PQ_TOPK_CTES = f"""
     "corpus to 4-of-16 probed lists, PQ/ADC integer-LUT scoring ranks "
     "only the candidates — the compute x memory composition production "
     "ANN (FAISS IVF,PQ) ships; true squared-L2 rides along as audit",
-    oracle=f"""{_IVF_PQ_TOPK_CTES}
-        SELECT t.vec_id, t.cid, t.adc_nano,
-               CAST(floor(list_aggregate(list_transform(
-                   range(1, {_PQ_M * _PQ_W} + 1),
-                   i -> (v.vec[i] - q.qvec[i]) * (v.vec[i] - q.qvec[i])),
-                   'sum') * 1e9 + 0.5) AS BIGINT) AS true_nano
-        FROM topk t JOIN v USING (vec_id), q
-        ORDER BY t.adc_nano, t.vec_id
-    """,
+    oracle=_IVF_PQ_TOPK_ORACLE,
 )
 def ivf_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production ANN composition (FAISS's IVF,PQ index): the coarse
     quantizer prunes COMPUTE (only ~n_probe/n_lists of the corpus is
     scored per query) while PQ prunes MEMORY (the scored table is 32-bit
     codes, 64x under the raw vectors) — at 100 TB the scan is
-    probed-lists x packed-codes, never the full float corpus. Composes
-    ``ivf_assign`` + ``pq_encode`` + ``pq_adc_topk`` unchanged; the
-    oracle replays coarse assignment, probes, codebooks, encoding, and
-    the ADC ranking end-to-end."""
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-    )
-
-    topk, vecs, qv = _ivf_pq_topk(spark, sf_dir)
-    true_nano = (
-        F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    # cid now rides the candidate projection through the top-k
-    # (pq_adc_topk keep_cols) — the old plan joined the k-row result back
-    # onto a SECOND full assignment pass to recover it
-    return (
-        topk.join(vecs, on="vec_id")
-        .select("vec_id", "cid", "adc_nano", true_nano)
-        .orderBy("adc_nano", "vec_id")
-    )
+    probed-lists x packed-codes, never the full float corpus. One corpus
+    projection carries the row-local list id and the PQ code
+    (``ann.IvfPq.encode``), the probe filter is a static IN and cid rides
+    the ADC top-k; the oracle replays coarse assignment, probes,
+    codebooks, encoding, and the ADC ranking end-to-end."""
+    vecs = _ann_vecs(spark, sf_dir)
+    ix = _ivf_pq_standin(vecs)
+    topk = ix.search(ix.encode(vecs), _ANN_K)
+    return ann.with_true_nano(topk, vecs, ix.query, "adc_nano")
 
 
-def _ivf_pq_topk(spark: SparkSession, sf_dir: str):
-    """Shared IVF-PQ pipeline (coarse assign -> quantized probe pick ->
-    PQ encode -> ADC top-k over probed lists); returns ``(topk, vecs,
-    qv)`` for the ships-candidates query and the recall audit.
-
-    Round-11 shape: the 16 coarse centroids collect once (bounded — the
-    rows the old plan broadcast), probe selection runs on the driver via
-    ``_ann_qv_and_probes`` (identical quantized 1e15 cosine grid and
-    (qc DESC, cid) order), the list id is the ROW-LOCAL
-    ``clustering.with_nearest_centroid`` projected in the SAME select as
-    the PQ encode, and the probe filter is a static IN. One corpus scan,
-    zero joins, zero exchanges before the top-k — the old plan joined
-    codes and assignment by id (a corpus shuffle at scale) and
-    broadcast-joined the probe set."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        with_nearest_centroid,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    qv, probe_cids, cent_vecs = _ann_qv_and_probes(vecs)
-    cb = _codebook_from_cents(cent_vecs, m=_PQ_M, ksub=_PQ_KSUB)
-    staged = with_nearest_centroid(vecs, cent_vecs, 16)
-    cand = (
-        pq_encode(staged, cb, vec_col="vec", keep_cols=("cid",))
-        .where(F.col("cid").isin(probe_cids))
-        .where(F.col("vec_id") != _ANN_QUERY_ID)
-    )
-    return (
-        pq_adc_topk(cand, cb, qv, k=_ANN_K, keep_cols=("cid",)),
-        vecs,
-        qv,
+def _ivf_pq_standin(vecs: DataFrame) -> ann.IvfPq:
+    """The IVF-PQ rows' quantizers: query, probes, the 16 stand-in
+    centroids and the codebook sliced from them, from ONE bounded collect
+    (``ann.ivf_pq_standin``; ids 0..15 must exist)."""
+    return ann.ivf_pq_standin(
+        vecs, _ANN_QUERY_ID, _IVF_LISTS, _IVF_PROBE, _PQ_M, _PQ_KSUB
     )
 
 
@@ -3435,32 +3192,12 @@ def ivf_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     are LOW by construction (see pq_recall_report's rationale); the
     audit's job is to report it, and at 100 TB it runs on a sampled
     query panel with the same plan."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-    )
-
-    topk, vecs, qv = _ivf_pq_topk(spark, sf_dir)
-    exact10 = (
-        vecs.where(F.col("vec_id") != _ANN_QUERY_ID)
-        .select(
-            "vec_id",
-            F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-            .cast("long")
-            .alias("true_nano"),
-        )
-        .orderBy("true_nano", "vec_id")
-        .limit(_ANN_K)
-    )
-    return topk.join(exact10, on="vec_id").agg(
-        F.lit(_ANN_K).cast("long").alias("k"),
-        F.count("*").alias("n_overlap"),
-        floor_round(F.count("*").cast("double") / F.lit(_ANN_K), 4).alias(
-            "recall"
-        ),
+    vecs = _ann_vecs(spark, sf_dir)
+    ix = _ivf_pq_standin(vecs)
+    return ann.recall_report(
+        ix.search(ix.encode(vecs), _ANN_K),
+        ann.exact_topk(vecs, ix.query, _ANN_K),
+        _ANN_K,
     )
 
 
@@ -3681,179 +3418,17 @@ def ivf_pq_residual_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     list) — n_probe small constant LUTs of m*ksub longs each, still
     driver-bounded. Scale shape is unchanged from ivf_pq_ann_topk:
     probed-lists x packed-codes scans, broadcasts only."""
-    import math as _math
-
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        lit_double_matrix,
-        to_double_array,
-    )
     from data_algorithms_with_pyspark_spark.operators.clustering import (
         kmeans_train,
-        with_nearest_centroid,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _cosine_py,
-        _sub_d2,
-        pq_adc_topk,
-        pq_encode,
-        pq_train_codebook,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    trained = kmeans_train(
-        vecs, k=_IVF_LISTS, max_iter=_IVF_TRAIN_ITERS, tol=0.0
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
+    trained = kmeans_train(vecs, k=_IVF_LISTS, max_iter=_IVF_TRAIN_ITERS, tol=0.0)
+    topk = ann.ivf_pq_residual_search(
+        vecs, q, trained, _IVF_PROBE, _PQ_M, _PQ_KSUB, _PQ_TRAIN_ITERS, _ANN_K
     )
-    # persisted: the residual table feeds the PQ trainer's exploded
-    # subvector build AND the encoder — without it the assign+subtract
-    # replays once per consumer. Materializing codes once IS how an index
-    # build works at scale. Round 11: assignment AND the residual subtract
-    # are ROW-LOCAL (with_nearest_centroid + zip_with against the trained
-    # centroid literal indexed by cid) — the old plan shuffled the corpus
-    # through a join on id and re-attached the centroid with a second
-    # broadcast join; this is one projection, zero exchanges.
-    cvecs_lit = lit_double_matrix(trained)
-    residuals = (
-        with_nearest_centroid(vecs, list(enumerate(trained)), _IVF_LISTS)
-        .select(
-            "vec_id",
-            "cid",
-            F.zip_with(
-                F.col("vec"),
-                F.element_at(cvecs_lit, F.col("cid") + 1),
-                lambda a, b: a - b,
-            ).alias("vec"),
-        )
-        .persist()
-    )
-    rcb = pq_train_codebook(
-        residuals.select("vec_id", "vec"),
-        m=_PQ_M,
-        ksub=_PQ_KSUB,
-        max_iter=_PQ_TRAIN_ITERS,
-        tol=0.0,
-        vec_col="vec",
-    )
-    # cid rides the encode projection (keep_cols) — no join-back onto the
-    # assignment by id
-    renc = pq_encode(
-        residuals, rcb, vec_col="vec", keep_cols=("cid",)
-    ).persist()
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    # probe ranking on the ivf_pq 1e15 quantized-cosine grid (near-tied
-    # lists must not flip cross-engine) — pure driver math over the
-    # trained centroids, same folds/order as the 16-row Spark job it
-    # replaces (_ann_qv_and_probes rationale)
-    probe_cids = [
-        cid
-        for _, cid in sorted(
-            (
-                (-_math.floor((_cosine_py(cv, qv) + 1.0) * 1e15 + 0.5), cid)
-                for cid, cv in enumerate(trained)
-            )
-        )[:_IVF_PROBE]
-    ]
-    per_list = []
-    for c in probe_cids:
-        qr = [qv[i] - trained[c][i] for i in range(len(qv))]
-        part = renc.where(
-            (F.col("cid") == c) & (F.col("vec_id") != _ANN_QUERY_ID)
-        ).select("vec_id", "pq_code")
-        per_list.append(
-            pq_adc_topk(part, rcb, qr, k=_ANN_K).select(
-                "vec_id", F.lit(c).cast("long").alias("cid"), "adc_nano"
-            )
-        )
-    union = per_list[0]
-    for df in per_list[1:]:
-        union = union.unionByName(df)
-    topk = union.orderBy("adc_nano", "vec_id").limit(_ANN_K)
-    true_nano = (
-        F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    return (
-        topk.join(vecs, on="vec_id")
-        .select("vec_id", "cid", "adc_nano", true_nano)
-        .orderBy("adc_nano", "vec_id")
-    )
-
-
-def _codebook_from_cents(
-    cent_vecs: list, m: int, ksub: int
-) -> list[list[list[float]]]:
-    """``pq_codebook`` built from the ALREADY-collected centroid pairs —
-    in these lanes the PQ codebook source (the ``ksub`` lowest-id
-    vectors) and the 16 IVF stand-in centroids are the SAME rows of the
-    same table, which ``_ann_qv_and_probes`` validates as exactly ids
-    0..15 and returns cid-sorted. Identical values and slicing to
-    ``pq_codebook`` (same doubles — both read the cast ``vec`` column),
-    one fewer bounded-collect job per invocation (the r11 single-collect
-    move finished: query vector + probes + assignment literal + codebook
-    now all come from ONE collect)."""
-    if ksub < 2 or ksub & (ksub - 1):
-        raise ValueError(
-            f"ksub={ksub} must be a power of two >= 2: codes are packed "
-            "into log2(ksub)-bit lanes and decoded with a ksub-1 bitmask"
-        )
-    if len(cent_vecs) < ksub:
-        raise ValueError(
-            f"need at least ksub={ksub} vectors, got {len(cent_vecs)}"
-        )
-    rows = [cv for _, cv in cent_vecs[:ksub]]
-    dim = len(rows[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    w = dim // m
-    return [[list(v[s * w : (s + 1) * w]) for v in rows] for s in range(m)]
-
-
-def _ann_qv_and_probes(vecs, cent_vecs: list | None = None):
-    """Query vector + the 4 probe list ids (+ the centroid pairs) for the
-    ANN queries. When the caller has not already collected the centroids,
-    query row AND the 16 stand-in centroids come back in ONE bounded
-    collect (they are low-id rows of the same table — two collects paid
-    two scan jobs for one predicate's worth of data); probe ranking is
-    then pure driver math on the same quantized 1e15 cosine grid
-    ivf_assign and the oracle's probes CTE use —
-    ``floor((cos+1)*1e15 + 0.5)`` with the identical left-to-right IEEE
-    folds (``similarity._cosine_py``), ranked (qc_q DESC, cid ASC).
-    Replaces a 16-row Spark job (crossJoin + sort) per invocation; probe
-    sets are bit-identical. Returns ``(qv, probe_cids, cent_pairs)``."""
-    import math as _math
-
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _cosine_py,
-    )
-
-    if cent_vecs is None:
-        small = {
-            int(r["vec_id"]): [float(x) for x in r["vec"]]
-            for r in vecs.where(
-                (F.col("vec_id") < 16) | (F.col("vec_id") == _ANN_QUERY_ID)
-            )
-            .select("vec_id", "vec")
-            .collect()
-        }
-        cent_vecs = [(c, small[c]) for c in sorted(small) if c < 16]
-        if sorted(c for c, _ in cent_vecs) != list(range(16)):
-            raise ValueError("need centroid ids 0..15 in the corpus")
-        qv = small[_ANN_QUERY_ID]
-    else:
-        qrow = vecs.where(F.col("vec_id") == _ANN_QUERY_ID).collect()[0]
-        qv = [float(x) for x in qrow["vec"]]
-    ranked = sorted(
-        (
-            (-_math.floor((_cosine_py(cv, qv) + 1.0) * 1e15 + 0.5), cid)
-            for cid, cv in cent_vecs
-        )
-    )
-    return qv, [cid for _, cid in ranked[:4]], cent_vecs
+    return ann.with_true_nano(topk, vecs, q, "adc_nano")
 
 
 @register(
@@ -3867,88 +3442,26 @@ def _ann_qv_and_probes(vecs, cent_vecs: list | None = None):
     "static IN filter on 4-of-16 list partitions prunes 3/4 of the "
     "codes table at planning time and the raw float corpus is never "
     "re-encoded; result identical to ivf_pq_ann_topk (same oracle)",
-    oracle=f"""{_IVF_PQ_TOPK_CTES}
-        SELECT t.vec_id, t.cid, t.adc_nano,
-               CAST(floor(list_aggregate(list_transform(
-                   range(1, {_PQ_M * _PQ_W} + 1),
-                   i -> (v.vec[i] - q.qvec[i]) * (v.vec[i] - q.qvec[i])),
-                   'sum') * 1e9 + 0.5) AS BIGINT) AS true_nano
-        FROM topk t JOIN v USING (vec_id), q
-        ORDER BY t.adc_nano, t.vec_id
-    """,
+    oracle=_IVF_PQ_TOPK_ORACLE,
 )
 def ivf_pq_ann_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pay-once ANN index VERDICT r5 #3 ordered: ``ivf_pq_ann_topk``
     re-derives codes + assignment inside every query run — a plan nobody
     would run at 100 TB, where index CONSTRUCTION (one full-corpus Arrow
-    encode pass + one broadcast assign) is paid at build time and
+    encode pass + one row-local assign) is paid at build time and
     queries touch only the probed inverted lists. Here the index is a
     hive-partitioned table (partition = IVF list id ``cid``; rows =
-    ``vec_id, pq_code``), built at most once per (session, corpus);
-    query time collects the 4 probe list ids (bounded driver state, 4
-    rows — the same quantized 1e15 cosine grid the oracle replays) and
-    scans ONLY those partitions via a static IN filter, then ADC-ranks
-    the 64x-compressed codes. true squared-L2 rides along as audit,
-    exactly as in the in-query variant."""
-
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        with_nearest_centroid,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-        pq_adc_topk,
-        pq_encode,
-    )
-    from data_algorithms_with_pyspark_spark.sources.writers import (
-        write_partitioned_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    key = _sf_cache_key(sf_dir)
-    idx = f"ann_ivfpq_idx_{key}"
-    # one bounded collect serves query row, probe ranking, the
-    # assignment literal AND the codebook (the ksub lowest-id vectors ==
-    # the centroid rows — deterministic, identical at build and query
-    # time; persisting the codebook would save nothing, the codes table
-    # is the expensive artifact)
-    qv, probe_cids, cent_vecs = _ann_qv_and_probes(vecs)
-    cb = _codebook_from_cents(cent_vecs, m=_PQ_M, ksub=_PQ_KSUB)
-    if not spark.catalog.tableExists(idx):
-        # row-local cid rides the encode projection (no codes<->assignment
-        # join at build time); repartition on the list id so each of the
-        # 16 lists is owned by one task -> exactly one file per partition
-        staged = with_nearest_centroid(vecs, cent_vecs, 16)
-        codes = pq_encode(staged, cb, vec_col="vec", keep_cols=("cid",))
-        write_partitioned_table(
-            codes.repartition(F.col("cid")), idx, partition_cols=("cid",)
-        )
-    cand = (
-        spark.table(idx)
-        .where(F.col("cid").isin(probe_cids))
-        .where(F.col("vec_id") != _ANN_QUERY_ID)
-    )
-    topk = pq_adc_topk(cand, cb, qv, k=_ANN_K)
-    true_nano = (
-        F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    return (
-        # cid joins back from the PROBED candidate scan (not a second
-        # full-index pass); hive partition discovery types cid as INT,
-        # cast back to the oracle's BIGINT
-        topk.join(cand.select("vec_id", "cid"), on="vec_id")
-        .join(vecs, on="vec_id")
-        .select(
-            "vec_id", F.col("cid").cast("long").alias("cid"), "adc_nano",
-            true_nano,
-        )
-        .orderBy("adc_nano", "vec_id")
-    )
+    ``vec_id, pq_code``), built at most once per (session, corpus)
+    (``ann.ivf_pq_index_search``); query time ranks the 4 probe list ids
+    on the driver (the same quantized 1e15 cosine grid the oracle
+    replays) and scans ONLY those partitions via a static IN filter,
+    then ADC-ranks the 64x-compressed codes. true squared-L2 rides along
+    as audit, exactly as in the in-query variant."""
+    vecs = _ann_vecs(spark, sf_dir)
+    ix = _ivf_pq_standin(vecs)
+    table = f"ann_ivfpq_idx_{_sf_cache_key(sf_dir)}"
+    topk = ann.ivf_pq_index_search(vecs, ix, table, _ANN_K)
+    return ann.with_true_nano(topk, vecs, ix.query, "adc_nano")
 
 
 @register(
@@ -3961,15 +3474,7 @@ def ivf_pq_ann_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "probed scan — the day-2 operating shape of a production ANN "
     "deployment (frozen quantizers, incremental list appends); result "
     "identical to the full-corpus ivf_pq_ann_topk (same oracle)",
-    oracle=f"""{_IVF_PQ_TOPK_CTES}
-        SELECT t.vec_id, t.cid, t.adc_nano,
-               CAST(floor(list_aggregate(list_transform(
-                   range(1, {_PQ_M * _PQ_W} + 1),
-                   i -> (v.vec[i] - q.qvec[i]) * (v.vec[i] - q.qvec[i])),
-                   'sum') * 1e9 + 0.5) AS BIGINT) AS true_nano
-        FROM topk t JOIN v USING (vec_id), q
-        ORDER BY t.adc_nano, t.vec_id
-    """,
+    oracle=_IVF_PQ_TOPK_ORACLE,
 )
 def ivf_pq_ann_incremental_index(
     spark: SparkSession, sf_dir: str
@@ -3979,82 +3484,23 @@ def ivf_pq_ann_incremental_index(
     ANN): the HISTORY (vec_id % 8 != 0) is encoded + assigned once into
     a list-partitioned table; the daily increment (vec_id % 8 == 0) is
     encoded per run with the SAME FROZEN codebook and centroids (the
-    first-16-ids vectors of the full corpus — production codebooks are
+    first-16-ids vectors of the FULL corpus — production codebooks are
     trained once and pinned, which is exactly what makes incremental
-    encoding valid), filtered to the probe lists, and unioned with the
-    probed history partitions before ADC ranking. Per-run cost: encode
-    1/8 of the corpus + scan 4-of-16 history partitions; the 7/8
-    history is NEVER re-encoded. The top-k over history ∪ increment
-    equals the full-corpus top-k, so the oracle is ivf_pq_ann_topk's,
-    unchanged — a cross-engine proof that the incremental composition
-    loses nothing."""
-
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
+    encoding valid; deriving them from a subset's own low ids would
+    silently change the quantizer), filtered to the probe lists, and
+    unioned with the probed history partitions before ADC ranking.
+    Per-run cost: encode 1/8 of the corpus + scan 4-of-16 history
+    partitions; the 7/8 history is NEVER re-encoded. The top-k over
+    history ∪ increment equals the full-corpus top-k, so the oracle is
+    ivf_pq_ann_topk's, unchanged — a cross-engine proof that the
+    incremental composition loses nothing."""
+    vecs = _ann_vecs(spark, sf_dir)
+    ix = _ivf_pq_standin(vecs)
+    table = f"ann_ivfpq_hist_{_sf_cache_key(sf_dir)}"
+    topk = ann.ivf_pq_index_search(
+        vecs, ix, table, _ANN_K, increment=F.col("vec_id") % 8 == 0
     )
-    from data_algorithms_with_pyspark_spark.operators.clustering import (
-        with_nearest_centroid,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        _sub_d2,
-        pq_adc_topk,
-        pq_encode,
-    )
-    from data_algorithms_with_pyspark_spark.sources.writers import (
-        write_partitioned_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    key = _sf_cache_key(sf_dir)
-    idx = f"ann_ivfpq_hist_{key}"
-    # the PINNED quantizer: FULL-corpus centroids (vec_id < 16), collected
-    # once (ONE bounded collect shared with the query row / probe ranking
-    # / codebook — the ksub lowest-id vectors are the same rows) so
-    # history/increment subsets are assigned against the same lists the
-    # oracle's assign CTE replays — deriving centroids from a subset's own
-    # low ids would silently change the quantizer. Row-local assignment
-    # (with_nearest_centroid) rides the encode projection on both the
-    # history build and the daily increment — no codes<->assignment join.
-    qv, probe_cids, pinned = _ann_qv_and_probes(vecs)
-    cb = _codebook_from_cents(pinned, m=_PQ_M, ksub=_PQ_KSUB)
-    if not spark.catalog.tableExists(idx):
-        hist = with_nearest_centroid(
-            vecs.where(F.col("vec_id") % 8 != 0), pinned, 16
-        )
-        codes = pq_encode(hist, cb, vec_col="vec", keep_cols=("cid",))
-        write_partitioned_table(
-            codes.repartition(F.col("cid")), idx, partition_cols=("cid",)
-        )
-    increment = with_nearest_centroid(
-        vecs.where(F.col("vec_id") % 8 == 0), pinned, 16
-    )
-    inc_codes = pq_encode(
-        increment, cb, vec_col="vec", keep_cols=("cid",)
-    ).where(F.col("cid").isin(probe_cids))
-    hist_cand = (
-        spark.table(idx)
-        .where(F.col("cid").isin(probe_cids))
-        .select("vec_id", "pq_code", F.col("cid").cast("long").alias("cid"))
-    )
-    cand = hist_cand.unionByName(inc_codes).where(
-        F.col("vec_id") != _ANN_QUERY_ID
-    )
-    topk = pq_adc_topk(cand, cb, qv, k=_ANN_K)
-    true_nano = (
-        F.floor(_sub_d2(F.col("vec"), 0, qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    return (
-        topk.join(cand.select("vec_id", "cid"), on="vec_id")
-        .join(vecs, on="vec_id")
-        .select(
-            "vec_id", F.col("cid").cast("long").alias("cid"), "adc_nano",
-            true_nano,
-        )
-        .orderBy("adc_nano", "vec_id")
-    )
+    return ann.with_true_nano(topk, vecs, ix.query, "adc_nano")
 
 
 @register(
@@ -4396,17 +3842,6 @@ def documents_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQ8_DIM = _PQ_M * _PQ_W  # 64
 
 
-def _sq8_dot_lit(vec_col, qv: list[float]):
-    """Unrolled index-order dot product against a literal query — the
-    left-assoc term chain replays DuckDB's list_aggregate(...,'sum')
-    sequential fold bit-for-bit (the _sub_d2 convention)."""
-    terms = None
-    for i, c in enumerate(qv):
-        t = F.element_at(vec_col, i + 1) * F.lit(float(c))
-        terms = t if terms is None else terms + t
-    return terms
-
-
 _SQ8_ENC_CTES = f"""
         v AS MATERIALIZED (
             SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
@@ -4479,34 +3914,14 @@ def sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the TakeOrderedAndProject top-k combine). The query's
     codes are driver state (d ints + one scale), exactly like the PQ
     LUT. True inner product joins back for the k winners only."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        sq8_dot_topk,
-        sq8_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    enc = sq8_encode(vecs)
-    topk = sq8_dot_topk(
-        enc.where(F.col("vec_id") != _ANN_QUERY_ID), qv, k=_ANN_K
-    )
-    true_nano = (
-        F.floor(_sq8_dot_lit(F.col("vec"), qv) * F.lit(1e9) + F.lit(0.5))
-        .cast("long")
-        .alias("true_nano")
-    )
-    return (
-        topk.join(vecs, on="vec_id")
-        .select("vec_id", "idot", "score_nano", true_nano)
-        .orderBy(F.col("score_nano").desc(), "vec_id")
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
+    return ann.with_true_nano(
+        ann.sq8_search(vecs, q, _ANN_K),
+        vecs,
+        q,
+        F.col("score_nano").desc(),
+        metric="ip",
     )
 
 
@@ -4546,40 +3961,12 @@ def sq8_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserve inner products to ~0.4% per dimension regardless of
     cluster structure — the architectural contrast with
     pq_recall_report's uniform-data pathology."""
-    from data_algorithms_with_pyspark_spark.functions.vectors import (
-        to_double_array,
-    )
-    from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
-    from data_algorithms_with_pyspark_spark.operators.similarity import (
-        sq8_dot_topk,
-        sq8_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", to_double_array("embedding").alias("vec"))
-    qv = [
-        float(x)
-        for x in vecs.where(F.col("vec_id") == _ANN_QUERY_ID)
-        .collect()[0]["vec"]
-    ]
-    corpus = vecs.where(F.col("vec_id") != _ANN_QUERY_ID)
-    sq8_top = sq8_dot_topk(sq8_encode(corpus), qv, k=_ANN_K)
-    exact_top = (
-        corpus.select(
-            "vec_id",
-            F.floor(_sq8_dot_lit(F.col("vec"), qv) * F.lit(1e9) + F.lit(0.5))
-            .cast("long")
-            .alias("true_nano"),
-        )
-        .orderBy(F.col("true_nano").desc(), "vec_id")
-        .limit(_ANN_K)
-    )
-    return sq8_top.select("vec_id").join(exact_top, on="vec_id").agg(
-        F.lit(_ANN_K).cast("long").alias("k"),
-        F.count("*").alias("n_overlap"),
-        floor_round(F.count("*").cast("double") / F.lit(_ANN_K), 4).alias(
-            "recall"
-        ),
+    vecs = _ann_vecs(spark, sf_dir)
+    q = ann.fetch_query(vecs, _ANN_QUERY_ID)
+    return ann.recall_report(
+        ann.sq8_search(vecs, q, _ANN_K),
+        ann.exact_topk(vecs, q, _ANN_K, metric="ip"),
+        _ANN_K,
     )
 
 

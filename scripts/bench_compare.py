@@ -3,6 +3,11 @@ per-query ratios over the common set, total/geomean, and the worst
 movers — the round-over-round regression check VERDICT grades.
 
 Usage: python scripts/bench_compare.py OLD.json NEW.json [threshold]
+
+OLD and NEW may each be comma-joined records (``a_1.json,a_2.json``):
+the side is then the per-query minimum over its runs, the convention of
+an interleaved A/B. The frozen ``bench.CORE_QUERIES`` total is printed
+beside the total over the common set.
 """
 
 from __future__ import annotations
@@ -42,8 +47,15 @@ def load(path: str) -> dict[str, float]:
         return {k: float(v) for k, v in pairs if k not in drop}
 
 
+def load_min(arg: str) -> dict[str, float]:
+    """One record, or the per-query minimum over comma-joined records."""
+    runs = [load(p) for p in arg.split(",")]
+    common = set.intersection(*(set(r) for r in runs))
+    return {q: min(r[q] for r in runs) for q in common}
+
+
 def main() -> None:
-    old, new = load(sys.argv[1]), load(sys.argv[2])
+    old, new = load_min(sys.argv[1]), load_min(sys.argv[2])
     thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.2
     common = sorted(set(old) & set(new))
     if not common:
@@ -56,6 +68,16 @@ def main() -> None:
     print(
         f"common={len(common)} total {tot_old:.2f}s -> {tot_new:.2f}s "
         f"({tot_new / tot_old:.2f}x) geomean {geo:.2f}"
+    )
+    sys.path.insert(0, __file__.rsplit("/", 2)[0])
+    from bench import CORE_QUERIES
+
+    core = [q for q in CORE_QUERIES if q in ratios]
+    core_old = sum(old[q] for q in core)
+    core_new = sum(new[q] for q in core)
+    print(
+        f"core={len(core)} total {core_old:.2f}s -> {core_new:.2f}s "
+        f"({core_new / core_old - 1:+.1%})"
     )
     movers = sorted(ratios.items(), key=lambda kv: kv[1])
     print("-- improved --")

@@ -952,9 +952,9 @@ def test_ivf_trained_centroids_beat_first_ids_on_clustered_data(spark):
     from data_algorithms_with_pyspark_spark.operators.clustering import (
         kmeans_train,
     )
+    from data_algorithms_with_pyspark_spark.operators.ann import ivf_topk
     from data_algorithms_with_pyspark_spark.operators.similarity import (
         cosine_topk,
-        ivf_topk,
     )
 
     rng = np.random.RandomState(7)
