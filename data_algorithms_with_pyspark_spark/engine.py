@@ -22,15 +22,26 @@ corpus_vocabulary_coverage: range-exchange + persist + one collected row
 per partition, see operators/ordering.py), the iterative operators
 (embedding_kmeans_assign, graph components/pagerank: one scalar action
 per round), and the persisted-index build (incremental_near_dup_persisted_index:
-writes the bucketed band table once per session/sf). The ordering
-operators' caches can be released via their ``cache_registry`` hook;
-``Engine.run`` itself never collects result rows.
+writes the bucketed band table once per session/sf). ``Engine.run``
+itself never collects result rows.
+
+Relations a query persists or checkpoints for its lazy result belong to
+the open ``operators.state.scope()``, which releases them when it exits;
+run the action inside it (the result is valid only there):
+
+    with scope():
+        eng.run("near_dup_clusters").write.parquet(out)
+
+``verify`` and ``explain`` open that scope themselves. Outside any scope
+the relations stay pinned until the session's ``clearCache()`` (persists)
+or its end (checkpoints).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_algorithms_with_pyspark_spark.operators.state import scope
 from data_algorithms_with_pyspark_spark.plans.catalog import (
     CatalogQuery,
     all_queries,
@@ -81,15 +92,20 @@ class Engine:
 
     # -- execution --------------------------------------------------------
     def run(self, name: str) -> DataFrame:
-        """Build the query's DataFrame (lazy — caller decides the action)."""
+        """Build the query's DataFrame (lazy — caller decides the action).
+
+        Run the action inside ``operators.state.scope()`` to release what
+        the query pinned: ``with scope(): eng.run(name).write…``.
+        """
         return self.get(name).fn(self.spark, self.sf_dir)
 
     def explain(self, name: str) -> str:
         """Formatted physical plan without executing the query."""
-        df = self.run(name)
-        return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
+        with scope():
+            df = self.run(name)
+            return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
+                df._jdf.queryExecution(), "formatted"
+            )
 
     # -- raw data ---------------------------------------------------------
     def table(self, name: str) -> DataFrame:
@@ -109,6 +125,8 @@ class Engine:
         whole catalog). Returns a small report dict; raises AssertionError
         with the first differing rows on mismatch. Queries without an
         oracle (``approx_distinct_users_hll``) get a rows-only report.
+        The query runs inside ``state.scope()``: what it pinned is
+        released before this returns.
         """
         import os
 
@@ -116,22 +134,23 @@ class Engine:
 
         from data_algorithms_with_pyspark_spark.schemas import TABLE_NAMES
 
-        q = self.get(name)
-        df = q.fn(self.spark, self.sf_dir)
-        if q.oracle is None:
-            return {"query": name, "mode": "rows_only", "rows": df.count()}
-        con = duckdb.connect()
-        for t in TABLE_NAMES:
-            path = os.path.join(self.sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-                )
         from data_algorithms_with_pyspark_spark.verify import (
             compare_spark_duckdb,
         )
 
-        compare_spark_duckdb(df, con, q.oracle)
+        q = self.get(name)
+        with scope():
+            df = q.fn(self.spark, self.sf_dir)
+            if q.oracle is None:
+                return {"query": name, "mode": "rows_only", "rows": df.count()}
+            con = duckdb.connect()
+            for t in TABLE_NAMES:
+                path = os.path.join(self.sf_dir, f"{t}.parquet")
+                if os.path.exists(path):
+                    con.execute(
+                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+                    )
+            compare_spark_duckdb(df, con, q.oracle)
         return {"query": name, "mode": "oracle", "match": True}
 
     def verify_all(
@@ -143,7 +162,9 @@ class Engine:
         directory, with row-count / column-name / order-insensitive
         value comparison. Returns ``{"passed": [...], "rows_only":
         [...], "failed": {name: error}}``; with ``fail_fast`` the first
-        mismatch re-raises instead. Use before shipping an engine or
+        mismatch re-raises instead. Each query runs in its own
+        ``state.scope()`` (through ``verify``), so what one query pinned is
+        released before the next starts. Use before shipping an engine or
         data change:
 
             Engine.local("/root/testdata/sf0.01").verify_all()

@@ -46,6 +46,7 @@ from data_algorithms_with_pyspark_spark.operators.similarity import (
     sq8_dot_topk,
     sq8_encode,
 )
+from data_algorithms_with_pyspark_spark.operators.state import persist
 from data_algorithms_with_pyspark_spark.sources.writers import (
     write_partitioned_table,
 )
@@ -305,9 +306,8 @@ def ivf_pq_residual_search(
     # subvector build AND the encoder. Assignment and the residual
     # subtract are ROW-LOCAL (with_nearest_centroid + zip_with against
     # the centroid literal indexed by cid): one projection, no exchange.
-    residuals = (
-        with_nearest_centroid(vecs, pairs, len(cents))
-        .select(
+    residuals = persist(
+        with_nearest_centroid(vecs, pairs, len(cents)).select(
             "vec_id",
             "cid",
             F.zip_with(
@@ -316,7 +316,6 @@ def ivf_pq_residual_search(
                 lambda a, b: a - b,
             ).alias("vec"),
         )
-        .persist()
     )
     rcb = pq_train_codebook(
         residuals.select("vec_id", "vec"),
@@ -326,7 +325,7 @@ def ivf_pq_residual_search(
         tol=0.0,
         vec_col="vec",
     )
-    renc = pq_encode(residuals, rcb, vec_col="vec", keep_cols=("cid",)).persist()
+    renc = persist(pq_encode(residuals, rcb, vec_col="vec", keep_cols=("cid",)))
     per_list = []
     for c in probe_lists(pairs, q.vec, n_probe, grid=True):
         qr = [x - y for x, y in zip(q.vec, cents[c])]

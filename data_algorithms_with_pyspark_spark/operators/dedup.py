@@ -48,6 +48,7 @@ from data_algorithms_with_pyspark_spark.operators.clustering import (
     collect_centroids,
     with_nearest_centroid,
 )
+from data_algorithms_with_pyspark_spark.operators.state import persist
 
 __all__ = [
     "exact_dedup_groups",
@@ -379,7 +380,6 @@ def minhash_candidate_pairs(
     id_col: str = "doc_id",
     bands: int = 16,
     min_jaccard: float = 0.0,
-    materialize: bool = True,
     hash_fn: str = "xxhash64",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -389,10 +389,11 @@ def minhash_candidate_pairs(
     fraction of matching signature components. The band equi-join is the
     scale move — buckets shuffle by (band, band_hash), never all-pairs.
 
-    ``materialize`` persists the signature table (MEMORY_AND_DISK): it is
-    referenced three times (banding + both sides of the estimate join), and
-    recomputing the shingle/hash pass per reference costs far more than
-    storing ~(8 + 8*num_perm) bytes/doc — at 100 TB this is the standard
+    The signature table is persisted (``state.persist``, released when the
+    caller's ``state.scope()`` exits): it is referenced three times
+    (banding + both sides of the estimate join), and recomputing the
+    shingle/hash pass per reference costs far more than storing
+    ~(8 + 8*num_perm) bytes/doc — at 100 TB this is the standard
     "checkpoint the sketch, not the corpus" move.
 
     ``max_bucket_size``: skew guard for real corpora. A group of g EXACT
@@ -406,8 +407,7 @@ def minhash_candidate_pairs(
     pairs lost to a capped bucket are overwhelmingly exact dups already
     handled upstream. None (default) disables the guard.
     """
-    if materialize:
-        signatures = signatures.persist()
+    signatures = persist(signatures)
     # Narrow-shuffle design for the 100 TB case: the banded self-join carries
     # only (id, band, band_hash) — 24 bytes/row — never the signatures
     # themselves; signatures are joined back exactly once per surviving
@@ -542,20 +542,19 @@ def simhash_candidate_pairs(
     bands: int = 4,
     n_bits: int = 64,
     max_bucket: int | None = None,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-dup candidates: docs sharing any (n_bits/bands)-bit band of
     their SimHash (catches pairs within small hamming distance), plus
     exact hamming. ``n_bits`` must match the ``simhash`` hash family
     (64 for xxhash64, 60 for md5).
 
-    The signature table is PERSISTED here (``cache_registry`` contract,
-    see ``prefix_jaccard_pairs``): both self-join sides — and the bucket
-    aggregate when ``max_bucket`` is set — consume it, and AQE turns the
-    banded join into a broadcast join at bench scale, so ReusedExchange
-    never covers the sides and the whole signature computation (corpus
-    tokenize + per-feature hash + the n_bits-vote aggregate) would
-    otherwise run once PER CONSUMER (observed in
+    The signature table is PERSISTED here (``state.persist``, released
+    when the caller's ``state.scope()`` exits): both self-join sides — and
+    the bucket aggregate when ``max_bucket`` is set — consume it, and AQE
+    turns the banded join into a broadcast join at bench scale, so
+    ReusedExchange never covers the sides and the whole signature
+    computation (corpus tokenize + per-feature hash + the n_bits-vote
+    aggregate) would otherwise run once PER CONSUMER (observed in
     plans/r12/simhash_near_dup_candidates_before.txt: the subtree appears
     verbatim under both join sides). Signatures are one row per doc —
     the sketch, not the corpus.
@@ -575,9 +574,7 @@ def simhash_candidate_pairs(
     Default None preserves exact uncapped semantics (the oracle-attested
     catalog configuration)."""
     band_width = n_bits // bands
-    hashes = hashes.persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(hashes)
+    hashes = persist(hashes, StorageLevel.MEMORY_AND_DISK)
     band_vals = F.array(
         *[
             F.shiftright(F.col("simhash"), b * band_width).bitwiseAND(
@@ -729,7 +726,6 @@ def prefix_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
-    cache_registry: list[DataFrame] | None = None,
     max_posting: int | None = None,
 ) -> DataFrame:
     """EXACT Jaccard similarity join via prefix filtering (PPJoin-style,
@@ -806,21 +802,19 @@ def prefix_jaccard_pairs(
     import math as _math
 
     t_bp = int(_math.floor(threshold * 10000))
-    sh = (
+    # persisted because THREE consumers need it (the inverted index and
+    # both verification sides) and the tokenizer+shingler is the dominant
+    # cost — without this the corpus re-tokenizes 3x. MEMORY_AND_DISK,
+    # same trade as ordering.global_row_index; the caller's
+    # state.scope() releases it.
+    sh = persist(
         spread_partitions(docs.select(id_col, text_col))
         .select(F.col(id_col), words(text_col).alias("_w"))
         .select(
             F.col(id_col), token_shingles(F.col("_w"), shingle_n).alias("shingles")
-        )
-        # persisted because THREE consumers need it (the inverted index
-        # and both verification sides) and the tokenizer+shingler is the
-        # dominant cost — without this the corpus re-tokenizes 3x.
-        # MEMORY_AND_DISK, same trade as ordering.global_row_index; the
-        # cache is freed via cache_registry by long-lived callers.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    if cache_registry is not None:
-        cache_registry.append(sh)
     # The prefix-postings index feeds BOTH sides of the candidate
     # self-join (and, under max_posting, the cap aggregate too). The two
     # sides cannot share work any other way: AQE turns the self-join into
@@ -833,11 +827,9 @@ def prefix_jaccard_pairs(
     # sized, ~(1-t)|S|+1 entries per doc, far smaller than the corpus —
     # is the "persist the sketch, not the corpus" move (guide §2.4);
     # VERDICT r11 next-round #3.
-    pre = prefix_postings(sh, threshold, id_col=id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    pre = persist(
+        prefix_postings(sh, threshold, id_col=id_col), StorageLevel.MEMORY_AND_DISK
     )
-    if cache_registry is not None:
-        cache_registry.append(pre)
     if max_posting is not None:
         # one count aggregate over the prefix postings (same key the
         # self-join shuffles on); shingles hotter than the cap generate
@@ -947,7 +939,6 @@ def semdedup_prune(
     n_clusters: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: cluster, then prune within clusters.
@@ -973,7 +964,7 @@ def semdedup_prune(
     decision table the caller semi-joins against, so the corpus itself is
     never materialized through the operator.
 
-    ``materialize`` persists the clustered table (MEMORY_AND_DISK): it is
+    The clustered table is persisted (``state.persist``): it is
     referenced three times (both sides of the pair join + the verdict
     join), and each reference would otherwise replay the centroid
     assignment from the scan — the same "checkpoint the sketch, not the
@@ -995,8 +986,7 @@ def semdedup_prune(
     clustered = with_nearest_centroid(
         vecs, cent_pairs, n_clusters, id_col=id_col, vn_col="_n"
     )
-    if materialize:
-        clustered = clustered.persist()
+    clustered = persist(clustered)
     left = clustered.select(
         F.col("cid"),
         F.col(id_col).alias("id_1"),

@@ -6,7 +6,9 @@ connected components as "beyond these basics"); this module supplies them
 with the canonical Spark pattern: a driver-side loop over DataFrame
 transformations with ``localCheckpoint()`` every iteration to truncate the
 lineage (without it, plan depth grows linearly and both planning time and
-recovery cost blow up — the classic iterative-Spark failure mode).
+recovery cost blow up — the classic iterative-Spark failure mode). The
+checkpoints go through ``state.local_checkpoint``: the caller's
+``state.scope()`` frees their blocks when it exits.
 
 Scale notes: each iteration is one shuffle keyed on vertex id. Ranks and
 labels are (id, value) pairs — the 100 TB-scale state is O(V), never O(E);
@@ -17,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_algorithms_with_pyspark_spark.operators.state import local_checkpoint
 
 __all__ = [
     "connected_components",
@@ -41,23 +45,22 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     Convergence is detected from the strictly-decreasing global label sum —
     one cheap scalar action per round, no full-table comparison join.
     """
-    und = _undirected(edges).localCheckpoint()
-    labels = (
+    und = local_checkpoint(_undirected(edges))
+    labels = local_checkpoint(
         und.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("component"))
-        .localCheckpoint()
     )
     prev_sum = labels.agg(F.sum("component")).collect()[0][0]
     for _ in range(max_iter):
         neighbor_labels = und.join(
             labels, und.src == labels.id, "inner"
         ).select(F.col("dst").alias("id"), "component")
-        labels = (
+        labels = local_checkpoint(
             labels.union(neighbor_labels)
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("component").alias("component")),
+            eager=False,
         )
         # the convergence scalar below materializes the lazy checkpoint:
         # one job per round instead of checkpoint-pass + collect-pass
@@ -77,12 +80,11 @@ def pagerank(
     + dangling mass / N). Deterministic up to float addition order; fixed
     iteration count (no tolerance test) so results are reproducible.
     """
-    edges = edges.select("src", "dst").localCheckpoint()
-    vertices = (
+    edges = local_checkpoint(edges.select("src", "dst"))
+    vertices = local_checkpoint(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
     n = vertices.count()
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
@@ -108,7 +110,7 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("contrib").alias("in_rank"))
         )
-        ranks = (
+        ranks = local_checkpoint(
             vertices.join(contribs, on="id", how="left")
             .fillna(0.0, subset=["in_rank"])
             .select(
@@ -118,8 +120,8 @@ def pagerank(
                     + F.lit(damping)
                     * (F.col("in_rank") + F.lit(dangling / n))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return ranks
 
@@ -138,22 +140,21 @@ def shortest_paths(
     hop bound makes the result deterministic and oracle-reproducible
     even on cyclic graphs.
     """
-    e = edges.select("src", "dst").localCheckpoint()
-    dist = (
+    e = local_checkpoint(edges.select("src", "dst"))
+    dist = local_checkpoint(
         e.sparkSession.createDataFrame([(source, 0)], ["id", "distance"])
         .select(F.col("id").cast("long"), F.col("distance").cast("long"))
-        .localCheckpoint()
     )
     signature = (1, 0)
     for _ in range(max_hops):
         relaxed = dist.join(e, dist["id"] == e["src"]).select(
             F.col("dst").alias("id"), (F.col("distance") + 1).alias("distance")
         )
-        dist = (
+        dist = local_checkpoint(
             dist.union(relaxed)
             .groupBy("id")
-            .agg(F.min("distance").alias("distance"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("distance").alias("distance")),
+            eager=False,
         )
         row = dist.agg(
             F.count("*").alias("n"), F.sum("distance").alias("s")
@@ -191,18 +192,17 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     # distinct() matters here (unlike min-label CC): when both (a,b) and
     # (b,a) exist as directed edges, the symmetrized view would hold the
     # pair twice and the neighbor would get TWO votes.
-    und = _undirected(edges).distinct().localCheckpoint()
-    labels = (
+    und = local_checkpoint(_undirected(edges).distinct())
+    labels = local_checkpoint(
         und.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
     )
     for _ in range(iterations):
         votes = und.join(labels, und["dst"] == labels["id"], "inner").select(
             F.col("src").alias("id"), "label"
         )
-        labels = (
+        labels = local_checkpoint(
             votes.groupBy("id", "label")
             .agg(F.count("*").alias("cnt"))
             .groupBy("id")
@@ -211,8 +211,8 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
                     F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
                 ).alias("m")
             )
-            .select("id", (-F.col("m.neg")).alias("label"))
-            .localCheckpoint(eager=False)
+            .select("id", (-F.col("m.neg")).alias("label")),
+            eager=False,
         )
     return labels
 
@@ -242,7 +242,7 @@ def connected_components_star(
     the result. Self-loops produced by contraction are dropped each
     round; localCheckpoint truncates lineage.
     """
-    sym = (
+    sym = local_checkpoint(
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .select(
@@ -250,13 +250,11 @@ def connected_components_star(
             F.least("src", "dst").alias("lo"),
         )
         .distinct()
-        .localCheckpoint()
     )
-    all_ids = (
+    all_ids = local_checkpoint(
         sym.select(F.col("hi").alias("id"))
         .union(sym.select(F.col("lo").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
 
     def signature(e: DataFrame):
@@ -294,7 +292,7 @@ def connected_components_star(
         m2 = und2.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
-        small = (
+        small = local_checkpoint(
             und2.join(m2, on="u")
             .select("u", "v", "m")
             .select(
@@ -314,8 +312,8 @@ def connected_components_star(
                 F.least("p.a", "p.b").alias("lo"),
             )
             .where(F.col("hi") != F.col("lo"))
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            eager=False,
         )
         new_sig = signature(small)
         e = small

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_algorithms_with_pyspark_spark.operators.state import persist
+
 __all__ = [
     "MICRO",
     "TRAIN_DOCS_MAX",
@@ -271,7 +273,7 @@ def logistic_regression_train(
         how="left",
     )
     if packed_out is not None:  # else the one collect is its only reader
-        docs = docs.persist()
+        docs = persist(docs)
     try:
         y, doc, j, x = _training_arrays(docs)
         if j.size and not (0 <= j.min() and j.max() <= dims):
@@ -307,12 +309,12 @@ def logistic_regression_train(
         # persisted relation must not outlive the exception (ADVICE r11)
         docs.unpersist()
         raise
-    # packed_out (cache_registry convention, see bm25_topk): on SUCCESS
-    # the caller receives the persisted packed relation, restricted to
-    # the rows that have features, to score from (packed_logistic_scores)
-    # instead of recomputing features + one more per-id shuffle; docs is
-    # NOT unpersisted here — the caller's returned plan still reads it,
-    # and the caller (or session/bench clearCache) owns the unpersist.
+    # packed_out: on SUCCESS the caller receives the persisted packed
+    # relation, restricted to the rows that have features, to score from
+    # (packed_logistic_scores) instead of recomputing features + one more
+    # per-id shuffle; docs is NOT unpersisted here — the caller's
+    # returned plan still reads it, and the caller's state.scope()
+    # releases it.
     if packed_out is not None:
         packed_out.append(docs.where(F.col("_fx").isNotNull()))
     return w

@@ -33,9 +33,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from data_algorithms_with_pyspark_spark.operators.state import persist
+
 __all__ = ["global_row_index", "global_ranked_prefix_sum"]
 
 _MONO_PARTITION_SHIFT = 33  # monotonically_increasing_id() = pid << 33 | idx
+
+
+def _range_persisted(
+    df: DataFrame, order_cols: list[str | Column], num_partitions: int | None
+) -> DataFrame:
+    """One range exchange on ``order_cols``, persisted (MEMORY_AND_DISK) so
+    every downstream job sees the same sampled boundaries; the caller's
+    ``state.scope()`` releases it."""
+    return persist(
+        df.repartitionByRange(num_partitions, *order_cols)
+        if num_partitions
+        else df.repartitionByRange(*order_cols),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 def global_row_index(
@@ -43,7 +59,6 @@ def global_row_index(
     order_cols: list[str | Column],
     index_col: str = "row_idx",
     num_partitions: int | None = None,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Add ``index_col``: contiguous 0-based global row numbers under the
     total order given by ``order_cols``.
@@ -56,23 +71,13 @@ def global_row_index(
     (the per-partition counts — one collected row per partition) and
     persists the range-partitioned input (MEMORY_AND_DISK) so the count
     pass and the numbering pass see identical sampled range boundaries.
-    That cache must outlive the returned DataFrame's consumption, so this
-    function cannot unpersist it; a long-lived session should pass
-    ``cache_registry`` (any list) — the persisted relation is appended,
-    and the caller unpersists after materializing the result:
+    That cache must outlive the returned DataFrame's consumption, so it is
+    owned by the caller's ``state.scope()`` and released when it exits:
 
-        caches: list[DataFrame] = []
-        out = global_row_index(df, ["k", "id"], cache_registry=caches)
-        out.write.parquet(...)
-        for c in caches: c.unpersist()
+        with scope():
+            global_row_index(df, ["k", "id"]).write.parquet(...)
     """
-    parted = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(parted)
+    parted = _range_persisted(df, order_cols, num_partitions)
 
     counts = (
         parted.groupBy(F.spark_partition_id().alias("_pid"))
@@ -110,7 +115,6 @@ def global_ranked_prefix_sum(
     cum_col: str = "cum_value",
     total_col: str | None = "total_value",
     num_partitions: int | None = None,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Global rank + inclusive running total of ``value_col`` under a total
     order, without funneling the relation through one partition.
@@ -135,16 +139,10 @@ def global_ranked_prefix_sum(
 
     EAGER + CACHING like ``global_row_index`` (driver job for the
     per-partition stats; the range-partitioned input stays persisted) —
-    pass ``cache_registry`` to receive the persisted relation and release
-    it once the result is materialized.
+    the persisted relation is released when the caller's
+    ``state.scope()`` exits.
     """
-    parted = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(parted)
+    parted = _range_persisted(df, order_cols, num_partitions)
 
     stats = (
         parted.groupBy(F.spark_partition_id().alias("_pid"))

@@ -44,6 +44,7 @@ from data_algorithms_with_pyspark_spark.operators.clustering import (
     literal_fits,
     with_nearest_centroid,
 )
+from data_algorithms_with_pyspark_spark.operators.state import persist
 
 __all__ = [
     "LshPlan",
@@ -504,7 +505,6 @@ def srp_banded_near_dup_pairs(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Banded SRP-LSH cosine near-dup pairs — the multi-probe recall fix
@@ -526,11 +526,12 @@ def srp_banded_near_dup_pairs(
     surviving candidate id, carrying a pre-computed norm so verification
     does one fold (the dot) per pair instead of three.
 
-    ``materialize`` persists the coded table (id, vec, srp_code): it is
-    referenced four times (both band-join sides, both verify sides), and
-    the n_planes*dim-fma projection pass costs far more to recompute per
-    reference than the ~(16 + 8*dim) bytes/vector it occupies — the same
-    "checkpoint the sketch, not the corpus" move as the MinHash path
+    The coded table (id, vec, srp_code) is persisted (``state.persist``):
+    it is referenced four times (both band-join sides, both verify
+    sides), and the n_planes*dim-fma projection pass costs far more to
+    recompute per reference than the ~(16 + 8*dim) bytes/vector it
+    occupies — the same "checkpoint the sketch, not the corpus" move as
+    the MinHash path
     (measured 2x end-to-end on the warm benchmark).
 
     ``max_bucket`` excludes band buckets holding more than that many ids
@@ -548,9 +549,7 @@ def srp_banded_near_dup_pairs(
         raise ValueError("n_planes must divide evenly into bands")
     width = n_planes // bands
     mask = (1 << width) - 1
-    coded = srp_codes(embeddings, dim, n_planes, seed, id_col, vec_col)
-    if materialize:
-        coded = coded.persist()
+    coded = persist(srp_codes(embeddings, dim, n_planes, seed, id_col, vec_col))
     band_vals = F.array(
         *[
             F.shiftright(F.col("srp_code"), b * width).bitwiseAND(

@@ -16,6 +16,7 @@ from data_algorithms_with_pyspark_spark.functions.text_functions import (
     word_ngrams,
     words,
 )
+from data_algorithms_with_pyspark_spark.operators.state import persist
 
 __all__ = [
     "LANG_MARKERS",
@@ -624,7 +625,6 @@ def bm25_topk(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """BM25 ranked retrieval: top-k documents per query (Robertson/Spärck
     Jones probabilistic ranking, the classic IR scoring function).
@@ -721,17 +721,13 @@ def bm25_topk(
     # re-runs the whole tokenize+filter+aggregate corpus pass for the df
     # branch (no common-subplan reuse across joins). tf is the postings
     # relation for query terms only — orders of magnitude smaller than
-    # the corpus. Same cache_registry contract as ordering.py: pass a
-    # list to receive the persisted relation and unpersist after
-    # materializing; the one-shot catalog/driver path lets session
-    # teardown reclaim it.
+    # the corpus. The caller's state.scope() releases it.
     from pyspark import StorageLevel
 
-    tf = hits.groupBy(id_col, "dl", "term").agg(
-        F.count("*").alias("tf")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(tf)
+    tf = persist(
+        hits.groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
 
     idf = F.log(

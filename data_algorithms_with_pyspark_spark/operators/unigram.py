@@ -38,6 +38,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_algorithms_with_pyspark_spark.operators.state import local_checkpoint
+
 __all__ = [
     "WORD_MAX_LEN",
     "PIECE_MAX_LEN",
@@ -251,7 +253,7 @@ def unigram_train(
     would desynchronize the fixed-round oracle replay (same contract as
     ``bpe_train``'s exhaustion guard).
     """
-    vocab = vocab.localCheckpoint()
+    vocab = local_checkpoint(vocab)
     pieces = piece_costs(seed_pieces(vocab, max_piece_len, top_multi))
     for _ in range(iters):
         seg = vocab.select(

@@ -59,6 +59,49 @@ _QUERY_MODULES = (
 # attestation covers every catalog query (scripts/driver_sim.py always
 # verifies all of them regardless of order).
 _SAMPLE_PRIORITY = (
+    # Round 16 rotation: the rows whose persisted or checkpointed state
+    # the caller's scope (operators/state.py) now releases lead, so the
+    # sample window re-attests them first; the round-15 ANN, round-14
+    # classifier and round-13 tokenizer rows follow (minus the names
+    # already listed here).
+    "minhash_near_dup_candidates",
+    "minhash_lsh_recall_report",
+    "simhash_near_dup_candidates",
+    "simhash_guarded_near_dups",
+    "simhash_shingle_near_dups",
+    "prefix_jaccard_near_dups",
+    "prefix_jaccard_guarded_near_dups",
+    "auto_routed_near_dups",
+    "srp_lsh_cosine_near_dups",
+    "srp_guarded_cosine_near_dups",
+    "embedding_semdedup_prune",
+    "near_dup_clusters",
+    "near_dup_keep_best",
+    "incremental_near_dup_candidates",
+    "incremental_near_dup_persisted_index",
+    "graph_connected_components",
+    "graph_pagerank",
+    "graph_shortest_paths",
+    "graph_cc_star_contraction",
+    "graph_label_propagation",
+    "documents_global_row_index",
+    "corpus_vocabulary_coverage",
+    "bm25_search_topk",
+    "term_count_min_sketch",
+    "bloom_term_membership",
+    "corpus_dataset_card",
+    "corpus_curation_v2",
+    "concurrent_session_pairs",
+    "wordpiece_greedy_segmentation",
+    "tokenizer_compression_comparison",
+    "unigram_lm_vocab",
+    "unigram_lm_segmentation",
+    "unigram_corpus_compression",
+    "unigram_persisted_tokenizer_encode",
+    "doc_quality_classifier",
+    "ivf_pq_residual_ann_topk",
+    "streaming_cdc_sink_parity",
+    #
     # Round 15 rotation: the 14 ANN rows, whose query fetch, probe
     # ranking, codebook slicing and audits now run through one search
     # path (operators/ann.py), lead so the sample window re-attests them
@@ -74,7 +117,6 @@ _SAMPLE_PRIORITY = (
     "ivf_pq_recall_report",
     "ivf_pq_ann_persisted_index",
     "ivf_pq_ann_incremental_index",
-    "ivf_pq_residual_ann_topk",
     "sq8_ann_topk",
     "sq8_recall_report",
     #
@@ -82,7 +124,6 @@ _SAMPLE_PRIORITY = (
     # collects its packed table once and runs every gradient step (and
     # its sigmoid) on the driver, lead so the sample window re-attests
     # them first; the round-13 tokenizer rows follow.
-    "doc_quality_classifier",
     "doc_quality_classifier_eval",
     #
     # Round 13 rotation: the rows whose BPE/WordPiece trainers now run
@@ -91,8 +132,6 @@ _SAMPLE_PRIORITY = (
     "bpe_learned_merges",
     "bpe_vocab_segmentation",
     "wordpiece_learned_merges",
-    "wordpiece_greedy_segmentation",
-    "tokenizer_compression_comparison",
     #
     # Round 12 rotation (VERDICT r11 #2). Ordering rule (unchanged):
     # queries whose code was TOUCHED by the r11/r12 optimizers first —
@@ -106,20 +145,7 @@ _SAMPLE_PRIORITY = (
     # postings/simhash/session persists, bm25 row-local filter, trainer
     # driver-argmax, literal/broadcast switch, single-collect ivf_pq):
     "embedding_kmeans_assign",
-    "embedding_semdedup_prune",
-    "term_count_min_sketch",
-    "bloom_term_membership",
-    "bm25_search_topk",
-    "unigram_lm_vocab",
-    "unigram_lm_segmentation",
-    "prefix_jaccard_near_dups",
-    "prefix_jaccard_guarded_near_dups",
     "dedup_degeneracy_preflight",
-    "simhash_near_dup_candidates",
-    "simhash_guarded_near_dups",
-    "concurrent_session_pairs",
-    "minhash_near_dup_candidates",
-    "auto_routed_near_dups",
     # r7-stale block (staleness.py "last green r7"), alphabetical, minus
     # the touched names above; the window cut lands inside this block
     # and the remainder leads the r13 rotation.
@@ -134,7 +160,6 @@ _SAMPLE_PRIORITY = (
     "doc_quality_scores",
     "doc_tfidf_top_terms",
     "doc_token_counts",
-    "documents_global_row_index",
     "documents_leakage_safe_split",
     "documents_per_source_sample",
     "documents_vocab_encode",
@@ -158,7 +183,6 @@ _SAMPLE_PRIORITY = (
     "events_value_stats",
     "events_value_trend",
     "orders_compaction_audit",
-    "streaming_cdc_sink_parity",
     "streaming_hourly_windows_parity",
     "streaming_session_windows_parity",
     "streaming_sliding_windows_parity",

@@ -32,6 +32,10 @@ from data_algorithms_with_pyspark_spark.operators.sampling import (
 )
 from data_algorithms_with_pyspark_spark.operators.sketches import kmv_distinct
 from data_algorithms_with_pyspark_spark.operators.skew import salted_join
+from data_algorithms_with_pyspark_spark.operators.state import (
+    local_checkpoint,
+    persist,
+)
 from data_algorithms_with_pyspark_spark.operators.text import (
     gopher_rules,
     repetition_scores,
@@ -1267,9 +1271,9 @@ def incremental_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(
-        docs, num_perm=64, shingle_n=3, hash_fn="md5"
-    ).persist()
+    sigs = persist(
+        minhash_signatures(docs, num_perm=64, shingle_n=3, hash_fn="md5")
+    )
     new_sigs = sigs.where(F.col("doc_id") % 8 == 0)
     hist_sigs = sigs.where(F.col("doc_id") % 8 != 0)
     return incremental_minhash_candidates(
@@ -1350,12 +1354,14 @@ def incremental_near_dup_persisted_index(
     # persisted: the increment signatures feed BOTH the banding and the
     # Jaccard join-back — without this the 1/8 increment is shingled and
     # min-hashed twice per run (the history side never recomputes at all)
-    new_sigs = minhash_signatures(
-        docs.where(F.col("doc_id") % 8 == 0),
-        num_perm=64,
-        shingle_n=3,
-        hash_fn="md5",
-    ).persist()
+    new_sigs = persist(
+        minhash_signatures(
+            docs.where(F.col("doc_id") % 8 == 0),
+            num_perm=64,
+            shingle_n=3,
+            hash_fn="md5",
+        )
+    )
     return incremental_minhash_candidates(
         new_sigs,
         hist_sigs,
@@ -2250,9 +2256,7 @@ def wordpiece_greedy_segmentation(
     # greedy fold (projection collapse), tripling a deliberately large
     # expression's one-time planning/codegen cost (see
     # greedy_segment_expr's expression-size note).
-    seg = wordpiece_segment(
-        vocab.select("term", "n"), pieces
-    ).localCheckpoint()
+    seg = local_checkpoint(wordpiece_segment(vocab.select("term", "n"), pieces))
     return (
         seg.where(F.col("v").isNotNull())
         .orderBy(F.col("n").desc(), "term")
@@ -2343,11 +2347,11 @@ def tokenizer_compression_comparison(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    wc = (
+    wc = local_checkpoint(
         docs.select(F.explode(words("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
-    ).localCheckpoint()
+    )
 
     def metrics(df: DataFrame, n_pieces: F.Column, label: str) -> DataFrame:
         return df.agg(
@@ -2547,9 +2551,7 @@ def term_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab-sized — persisting it is the standard sketch-not-corpus move;
     # the old shape re-ran the corpus tokenize for each of the two
     # aggregates.
-    truec = (
-        terms.groupBy("term").agg(F.count("*").alias("true_count")).persist()
-    )
+    truec = persist(terms.groupBy("term").agg(F.count("*").alias("true_count")))
 
     def with_cells(df: DataFrame) -> DataFrame:
         return df.select(
@@ -3109,13 +3111,11 @@ def bloom_term_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # membership with a third join. Persisted: vocab-sized (the
     # sketch-not-corpus move); feeds the filter build, the probe, and the
     # final projection.
-    base = (
-        grams.groupBy("term")
-        .agg(
+    base = persist(
+        grams.groupBy("term").agg(
             F.count("*").alias("freq"),
             F.max((F.col("doc_id") % 10 == 0).cast("int")).alias("_bm"),
         )
-        .persist()
     )
     bench = base.where(F.col("_bm") == 1).select("term")
     bloom = bloom_build(bench, "term", m=_BLOOM_M, k=_BLOOM_K)
@@ -4078,28 +4078,30 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     u = F.conv(F.substring("content_hash", 1, 6), 16, 10).cast("long")
-    featured = curation_features(
-        docs,
-        keep_cols=("lang", "source"),
-        features=("n_tokens", "n_chars", "quality_score", "content_hash"),
-    ).select(
-        "lang",
-        "source",
-        "n_tokens",
-        "n_chars",
-        # 1e4 grid — the repo's established quality quantization; 1e6 is
-        # finer than the double expression's cross-engine agreement (one
-        # flipped floor per ~1e5 docs bit the sf0.1 check)
-        F.floor(F.col("quality_score") * 10_000 + F.lit(0.5))
-        .cast("long")
-        .alias("q_e4"),
-        "content_hash",
-        F.when(
-            u * F.lit(_CARD_SPLIT_DEN) < F.lit(16**6 * _CARD_SPLIT_NUM), 1
+    featured = persist(
+        curation_features(
+            docs,
+            keep_cols=("lang", "source"),
+            features=("n_tokens", "n_chars", "quality_score", "content_hash"),
+        ).select(
+            "lang",
+            "source",
+            "n_tokens",
+            "n_chars",
+            # 1e4 grid — the repo's established quality quantization; 1e6 is
+            # finer than the double expression's cross-engine agreement (one
+            # flipped floor per ~1e5 docs bit the sf0.1 check)
+            F.floor(F.col("quality_score") * 10_000 + F.lit(0.5))
+            .cast("long")
+            .alias("q_e4"),
+            "content_hash",
+            F.when(
+                u * F.lit(_CARD_SPLIT_DEN) < F.lit(16**6 * _CARD_SPLIT_NUM), 1
+            )
+            .otherwise(0)
+            .alias("is_test"),
         )
-        .otherwise(0)
-        .alias("is_test"),
-    ).persist()
+    )
     g = featured.agg(
         F.count("*").alias("n_docs"),
         F.countDistinct("content_hash").alias("n_distinct_hashes"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from data_algorithms_with_pyspark_spark.operators.windows import sessionize
 from data_algorithms_with_pyspark_spark.operators.dedup import floor_round
+from data_algorithms_with_pyspark_spark.operators.state import persist
 from data_algorithms_with_pyspark_spark.plans.catalog import cents_sum, register
 from data_algorithms_with_pyspark_spark.sources.readers import load_table
 
@@ -797,14 +798,14 @@ def concurrent_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate) runs once PER SIDE (observed in plans/r12/
     # concurrent_session_pairs_before.txt). Sessions are one row per
     # (user, session) — the sketch, not the event stream.
-    sess = (
+    sess = persist(
         sessionize(events, gap_minutes=30)
         .groupBy("user_id", "session_id")
         .agg(
             F.min(F.unix_micros("ts")).alias("st"),
             F.max(F.unix_micros("ts")).alias("en"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     left = sess.select(
         F.col("user_id").alias("u1"),

@@ -47,6 +47,7 @@ from data_algorithms_with_pyspark_spark.operators.similarity import (
     random_hyperplanes,
     srp_banded_near_dup_pairs,
 )
+from data_algorithms_with_pyspark_spark.operators.state import persist
 from data_algorithms_with_pyspark_spark.operators.text import (
     LANG_MARKERS,
     fingerprint,
@@ -1358,16 +1359,15 @@ def auto_routed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # by id, not ship the corpus to every task.
         from pyspark import StorageLevel
 
-        sh = (
+        sh = persist(
             spread_partitions(docs.select("doc_id", "text"))
             .select(F.col("doc_id"), words("text").alias("_w"))
             .select(
                 F.col("doc_id"),
                 token_shingles(F.col("_w"), _NGRAM_N).alias("shingles"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-            .hint("merge")
-        )
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        ).hint("merge")
         pairs = ngram_jaccard_pairs(
             docs, t, shingle_n=_NGRAM_N, candidates=cand, shingles_df=sh
         )

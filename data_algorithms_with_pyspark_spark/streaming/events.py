@@ -20,9 +20,15 @@ widen the key).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_algorithms_with_pyspark_spark.operators.state import (
+    local_checkpoint,
+    scope,
+)
 from data_algorithms_with_pyspark_spark.schemas import TABLE_SCHEMAS
 
 __all__ = [
@@ -318,6 +324,50 @@ def streaming_user_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _merge_sink(
+    stream: DataFrame,
+    target_path: str,
+    checkpoint_dir: str,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> None:
+    """The one ``foreachBatch`` body of the merge sinks: each micro-batch
+    overwrites the parquet ``target_path`` with ``merge(batch, target)``,
+    where ``target`` is the stored table (None before the first batch).
+
+    Target existence is probed explicitly rather than by catching a read
+    error: a transient read failure or a merge schema mismatch must FAIL
+    the batch (the checkpoint replays it), not silently overwrite the
+    target with only the current micro-batch. The merged result is
+    ``localCheckpoint``-materialized before the overwrite so the write
+    never reads the files it is replacing (on a real deployment the
+    target would be a transactional table format and ``merge`` its MERGE
+    INTO); a ``state.scope()`` per micro-batch frees that checkpoint once
+    it is written.
+
+    Runs with ``trigger(availableNow=True)``: drains available input and
+    returns; calling it again after new files arrive processes only the
+    delta.
+    """
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        session = batch_df.sparkSession
+        jvm_path = session._jvm.org.apache.hadoop.fs.Path(target_path)
+        fs = jvm_path.getFileSystem(session._jsc.hadoopConfiguration())
+        target = session.read.parquet(target_path) if fs.exists(jvm_path) else None
+        with scope():
+            local_checkpoint(merge(batch_df, target)).write.mode(
+                "overwrite"
+            ).parquet(target_path)
+
+    (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_upsert_sink(
     streaming_df: DataFrame,
     target_path: str,
@@ -330,44 +380,20 @@ def stream_upsert_sink(
     native MERGE.
 
     The checkpoint gives exactly-once batch replay; the upsert makes
-    re-applied batches idempotent, so the pair survives restarts. The
-    merged result is ``localCheckpoint``-materialized before the
-    overwrite so the write never reads the files it is replacing (on a
-    real deployment the target would be a transactional table format and
-    this function body becomes its MERGE INTO).
-
-    Runs with ``trigger(availableNow=True)``: drains available input and
-    returns; calling it again after new files arrive processes only the
-    delta (the test's two-run scenario).
+    re-applied batches idempotent, so the pair survives restarts. Batch
+    mechanics (target probe, checkpoint-before-overwrite, availableNow
+    drain) are ``_merge_sink``'s.
     """
     from data_algorithms_with_pyspark_spark.operators.merge import upsert
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        # Probe target existence explicitly rather than catching broadly:
-        # a transient read error or an upsert schema-mismatch must FAIL the
-        # batch (checkpoint replays it), not silently overwrite the target
-        # with only the current micro-batch.
-        jvm_path = session._jvm.org.apache.hadoop.fs.Path(target_path)
-        fs = jvm_path.getFileSystem(
-            session._jsc.hadoopConfiguration()
-        )
-        if fs.exists(jvm_path):
-            target = session.read.parquet(target_path)
-            merged = upsert(target, batch_df, keys)
-        else:  # first batch: no target yet
-            merged = batch_df
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            target_path
-        )
-
-    q = (
-        streaming_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _merge_sink(
+        streaming_df,
+        target_path,
+        checkpoint_dir,
+        lambda batch, target: (
+            batch if target is None else upsert(target, batch, keys)
+        ),
     )
-    q.awaitTermination()
 
 
 def stream_cdc_sink(
@@ -393,31 +419,16 @@ def stream_cdc_sink(
     only and never reach the target schema."""
     from data_algorithms_with_pyspark_spark.operators.merge import apply_cdc
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        value_cols = [
-            c for c in batch_df.columns if c not in (op_col, order_col)
-        ]
-        jvm_path = session._jvm.org.apache.hadoop.fs.Path(target_path)
-        fs = jvm_path.getFileSystem(session._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            target = session.read.parquet(target_path)
-        else:  # first batch: empty target with the value schema
-            target = batch_df.select(*value_cols).limit(0)
-        merged = apply_cdc(
-            target, batch_df, keys, op_col=op_col, order_col=order_col
-        )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            target_path
+    def merge(batch: DataFrame, target: DataFrame | None) -> DataFrame:
+        if target is None:  # first batch: empty target with the value schema
+            target = batch.select(
+                *[c for c in batch.columns if c not in (op_col, order_col)]
+            ).limit(0)
+        return apply_cdc(
+            target, batch, keys, op_col=op_col, order_col=order_col
         )
 
-    q = (
-        changelog_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _merge_sink(changelog_stream, target_path, checkpoint_dir, merge)
 
 
 def stream_scd2_sink(
@@ -452,55 +463,32 @@ def stream_scd2_sink(
     than the key's current open version and without the newer changes
     beside it, is not defended — Spark's offset-tracked sources cannot
     produce that ordering."""
-    from pyspark.sql import functions as F
-
     from data_algorithms_with_pyspark_spark.operators.merge import (
         latest_change_per_key,
         scd2_apply,
     )
 
-    def _apply(raw_batch: DataFrame, batch_id: int) -> None:
+    def merge(raw_batch: DataFrame, current: DataFrame | None) -> DataFrame:
         batch_df = latest_change_per_key(raw_batch, keys, change_ts_col)
-        session = batch_df.sparkSession
-        value_cols = [c for c in batch_df.columns if c != change_ts_col]
-        jvm_path = session._jvm.org.apache.hadoop.fs.Path(target_path)
-        fs = jvm_path.getFileSystem(session._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            current = session.read.parquet(target_path)
-            already = (
-                current.where(F.col("valid_to").isNull())
-                .select(*keys, F.col("valid_from").alias(change_ts_col))
-            )
-            fresh = batch_df.join(
-                already, on=[*keys, change_ts_col], how="left_anti"
-            )
-            merged = scd2_apply(
-                current, fresh, keys, change_ts_col=change_ts_col
-            )
-        else:  # first batch: every change opens version 1 of its key
-            merged = (
-                batch_df.withColumn(
-                    "valid_from", F.col(change_ts_col)
-                )
+        if current is None:  # first batch: every change opens version 1
+            value_cols = [c for c in batch_df.columns if c != change_ts_col]
+            return (
+                batch_df.withColumn("valid_from", F.col(change_ts_col))
                 .withColumn(
                     "valid_to",
-                    F.lit(None).cast(
-                        batch_df.schema[change_ts_col].dataType
-                    ),
+                    F.lit(None).cast(batch_df.schema[change_ts_col].dataType),
                 )
                 .select(*value_cols, "valid_from", "valid_to")
             )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            target_path
+        already = current.where(F.col("valid_to").isNull()).select(
+            *keys, F.col("valid_from").alias(change_ts_col)
         )
+        fresh = batch_df.join(
+            already, on=[*keys, change_ts_col], how="left_anti"
+        )
+        return scd2_apply(current, fresh, keys, change_ts_col=change_ts_col)
 
-    q = (
-        changes_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _merge_sink(changes_stream, target_path, checkpoint_dir, merge)
 
 
 def streaming_ttl_dedup(
@@ -597,7 +585,7 @@ def stream_continuous_aggregate(
     TimescaleDB/Druid continuous-aggregate contract, driven by a stream.
 
     Checkpointed exactly-once replay + the localCheckpoint-before-
-    overwrite discipline of ``stream_upsert_sink``. NOTE the merge is
+    overwrite discipline of ``_merge_sink``. NOTE the merge is
     NOT idempotent under batch replay (sums double-count a re-applied
     batch, unlike the keyed upsert) — which is exactly why the
     checkpoint matters here, and why a transactional sink would pair the
@@ -620,33 +608,19 @@ def stream_continuous_aggregate(
             ).alias("max_fp"),
         )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        delta = hourly(batch_df)
-        jvm_path = session._jvm.org.apache.hadoop.fs.Path(target_path)
-        fs = jvm_path.getFileSystem(session._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            stored = session.read.parquet(target_path)
-            merged = merge_partial_aggs(
-                stored,
-                delta,
-                keys=["hour", "event_type"],
-                sum_cols=["n_events", "value_fp"],
-                max_cols=["max_fp"],
-            )
-        else:
-            merged = delta
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            target_path
+    def merge(batch: DataFrame, stored: DataFrame | None) -> DataFrame:
+        delta = hourly(batch)
+        if stored is None:
+            return delta
+        return merge_partial_aggs(
+            stored,
+            delta,
+            keys=["hour", "event_type"],
+            sum_cols=["n_events", "value_fp"],
+            max_cols=["max_fp"],
         )
 
-    q = (
-        streaming_events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _merge_sink(streaming_events, target_path, checkpoint_dir, merge)
 
 
 def streaming_timer_sessions(

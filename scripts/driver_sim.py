@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from data_algorithms_with_pyspark_spark.operators.state import scope  # noqa: E402
 from data_algorithms_with_pyspark_spark.schemas import TABLE_NAMES  # noqa: E402
 
 
@@ -87,12 +88,14 @@ def main() -> int:
 
     failures = []
     for name, fn in sorted(queries.items()):
-        sdf = fn(spark, sf_dir)
-        if name not in oracles:
-            print(f"  {name}: rows-only, {sdf.count()} rows")
-            continue
-        scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
+        # the scope releases what the query pinned once its rows are in
+        with scope():
+            sdf = fn(spark, sf_dir)
+            if name not in oracles:
+                print(f"  {name}: rows-only, {sdf.count()} rows")
+                continue
+            scols = sdf.columns
+            srows = [tuple(r) for r in sdf.collect()]
         res = con.execute(oracles[name])
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()

@@ -64,6 +64,12 @@ def persisted_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the persisted RDDs. Compare id SETS across a scope, not
+    counts: the ContextCleaner frees older RDDs concurrently."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for name in TABLE_NAMES:

@@ -1,13 +1,15 @@
 """Differential test of EVERY oracle-backed catalog query against DuckDB —
 the in-repo mirror of the driver's t2 correctness gate (at sf0.001 for
-speed; the driver runs the same comparison at sf0.01)."""
+speed; the driver runs the same comparison at sf0.01). Every row runs
+inside ``state.scope()`` and must leave no persisted RDD behind it."""
 
 from __future__ import annotations
 
 import pytest
 
+from data_algorithms_with_pyspark_spark.operators.state import scope
 from data_algorithms_with_pyspark_spark.plans.catalog import all_queries
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, persisted_rdd_ids
 from tests.oracle import compare_spark_duckdb
 
 CATALOG = all_queries()
@@ -18,16 +20,23 @@ ROWS_ONLY = sorted(name for name, q in CATALOG.items() if not q.oracle)
 @pytest.mark.parametrize("name", ORACLE_BACKED)
 def test_matches_duckdb_oracle(spark, duck_smoke, name):
     q = CATALOG[name]
-    df = q.fn(spark, SF_SMOKE)
-    compare_spark_duckdb(df, duck_smoke, q.oracle)
+    before = persisted_rdd_ids(spark)
+    with scope():
+        compare_spark_duckdb(q.fn(spark, SF_SMOKE), duck_smoke, q.oracle)
+    left = persisted_rdd_ids(spark) - before
+    assert not left, f"{name} left persisted RDDs {sorted(left)}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_queries_run(spark, name):
     q = CATALOG[name]
-    df = q.fn(spark, SF_SMOKE)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
+    before = persisted_rdd_ids(spark)
+    with scope():
+        df = q.fn(spark, SF_SMOKE)
+        assert df.count() >= 0
+        assert len(df.columns) > 0
+    left = persisted_rdd_ids(spark) - before
+    assert not left, f"{name} left persisted RDDs {sorted(left)}"
 
 
 def test_entry_contract(spark):

@@ -540,6 +540,7 @@ def test_bm25_topk_known_answers(spark):
     be total (score desc, doc_id asc)."""
     import math
 
+    from data_algorithms_with_pyspark_spark.operators.state import scope
     from data_algorithms_with_pyspark_spark.operators.text import bm25_topk
 
     rows = [
@@ -549,15 +550,8 @@ def test_bm25_topk_known_answers(spark):
         (3, "durian"),
     ]
     docs = _docs(spark, rows)
-    caches: list = []
-    out = bm25_topk(
-        docs,
-        [(0, "apple banana"), (1, "durian")],
-        k=3,
-        cache_registry=caches,
-    ).collect()
-    for c in caches:
-        c.unpersist()
+    with scope():
+        out = bm25_topk(docs, [(0, "apple banana"), (1, "durian")], k=3).collect()
 
     toks = {d: t.split() for d, t in rows}
     n_docs = float(len(rows))

@@ -85,18 +85,21 @@ def test_hll_error_within_bound(spark):
         assert abs(approx[k] - n) <= max(2, 0.05 * n), (k, approx[k], n)
 
 
-def test_global_row_index_cache_registry_releases(spark):
+def test_global_row_index_scope_releases(spark):
     from data_algorithms_with_pyspark_spark.operators.ordering import (
         global_row_index,
     )
+    from data_algorithms_with_pyspark_spark.operators.state import scope
+    from tests.conftest import persisted_rdd_ids
 
     df = spark.range(100).withColumnRenamed("id", "k")
-    caches = []
-    out = global_row_index(df, ["k"], cache_registry=caches)
-    assert out.count() == 100
-    assert len(caches) == 1 and caches[0].is_cached
-    caches[0].unpersist()
-    assert not caches[0].is_cached
+    before = persisted_rdd_ids(spark)
+    with scope():
+        out = global_row_index(df, ["k"])
+        assert out.count() == 100
+        # the range-partitioned input is pinned while the result is live
+        assert persisted_rdd_ids(spark) - before
+    assert persisted_rdd_ids(spark) <= before
 
 
 def test_interval_overlap_join_known_answers(spark):

@@ -207,6 +207,31 @@ def test_stream_upsert_sink_two_run_incremental(spark, tmp_path):
     }
 
 
+def test_stream_upsert_sink_runs_leave_no_persisted_rdd(spark, tmp_path):
+    """Each micro-batch checkpoints its merged table before the overwrite;
+    the sink's per-batch scope frees it, so repeated runs pin nothing."""
+    from data_algorithms_with_pyspark_spark.streaming.events import (
+        stream_upsert_sink,
+    )
+    from tests.conftest import persisted_rdd_ids
+
+    src = str(tmp_path / "src")
+    target = str(tmp_path / "target")
+    ckpt = str(tmp_path / "ckpt")
+    before = persisted_rdd_ids(spark)
+    for run in range(3):
+        rows = [(run, f"v{run}")] + ([(0, f"w{run}")] if run else [])
+        spark.createDataFrame(rows, ["k", "v"]).write.mode("append").parquet(src)
+        stream = spark.readStream.schema("k LONG, v STRING").parquet(src)
+        stream_upsert_sink(stream, target, ["k"], ckpt)
+    assert {(r.k, r.v) for r in spark.read.parquet(target).collect()} == {
+        (0, "w2"),
+        (1, "v1"),
+        (2, "v2"),
+    }
+    assert persisted_rdd_ids(spark) <= before
+
+
 def test_stream_cdc_sink_insert_update_delete_across_runs(spark, tmp_path):
     """Run 1 seeds from an I/U batch (latest seq per key wins inside the
     batch); run 2 applies U and D deltas — updated keys replaced,
