@@ -60,6 +60,9 @@ __all__ = [
     "token_shingles",
     "minhash_signatures",
     "minhash_bands",
+    "shingle_table",
+    "band_codes",
+    "banded_pairs",
     "minhash_candidate_pairs",
     "incremental_minhash_candidates",
     "duplicated_window_spans",
@@ -375,13 +378,125 @@ def minhash_bands(
     ).select(F.col(id_col), F.col("band"), band_hash.alias("band_hash"))
 
 
+def shingle_table(
+    docs: DataFrame, shingle_n: int, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """``(id, shingles)``: each document's distinct word n-gram shingles
+    (``token_shingles`` semantics) over a partition-spread scan — the one
+    shingle projection the exact-Jaccard lanes, the PPJoin index and the
+    pre-flight audits read. The token array is projected before the
+    shingle lambdas (the ``token_shingles`` performance contract)."""
+    return (
+        spread_partitions(docs.select(id_col, text_col))
+        .select(F.col(id_col), words(text_col).alias("_w"))
+        .select(
+            F.col(id_col),
+            token_shingles(F.col("_w"), shingle_n).alias("shingles"),
+        )
+    )
+
+
+def band_codes(code: Column, n_bits: int, bands: int) -> Column:
+    """The ``bands`` contiguous ``n_bits / bands``-bit slices of a packed
+    bit code (SimHash, SRP) as ``array<long>``, band 0 holding the lowest
+    bits; ``posexplode`` it into ``(band, value)`` rows. ``bands`` must
+    divide ``n_bits``: a remainder would silently drop the top bits from
+    every band."""
+    if n_bits % bands:
+        raise ValueError(f"bands ({bands}) must divide n_bits ({n_bits}) evenly")
+    width = n_bits // bands
+    mask = F.lit((1 << width) - 1).cast("long")
+    return F.array(
+        *[F.shiftright(code, b * width).bitwiseAND(mask) for b in range(bands)]
+    )
+
+
+def banded_pairs(
+    banded: DataFrame,
+    key: str,
+    id_col: str = "doc_id",
+    max_bucket: int | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The candidate step every banded-LSH lane shares: ``banded`` holds
+    one ``(id, band, key)`` row per document per band; documents agreeing
+    on any ``(band, key)`` bucket become ONE ``(id_1, id_2)`` row with
+    ``id_1 < id_2``. The self-join is keyed on the bucket, so the shuffle
+    carries band rows, never all-pairs. Each ``carry`` column rides the
+    join as ``<c>_1`` / ``<c>_2`` (SimHash's 8-byte sketch: no join-back).
+
+    ``max_bucket`` is the degeneracy guard: buckets holding more than that
+    many ids generate no candidates (one count aggregate on the join's
+    own key). A group of g exact duplicates, or a corpus whose sketches
+    collapse, puts g ids in one bucket and g^2/2 pairs into the join; an
+    oversized bucket carries no discriminative signal, and a document
+    still pairs through its other bands. None keeps exact uncapped
+    semantics."""
+    on = ["band", key]
+    if max_bucket is not None:
+        small = (
+            banded.groupBy(*on)
+            .count()
+            .where(F.col("count") <= max_bucket)
+            .select(*on)
+        )
+        banded = banded.join(small, on=on)
+
+    def side(i: int) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(f"id_{i}"),
+            *[F.col(c).alias(f"{c}_{i}") for c in carry],
+            *on,
+        )
+
+    carried = [f"{c}_{i}" for i in (1, 2) for c in carry]
+    return (
+        side(1)
+        .join(side(2), on=on, how="inner")
+        .where(F.col("id_1") < F.col("id_2"))
+        .select("id_1", "id_2", *carried)
+        .dropDuplicates(["id_1", "id_2"])
+    )
+
+
+def _with_estimate(
+    pairs: DataFrame,
+    sigs_1: DataFrame,
+    sigs_2: DataFrame,
+    id_col: str,
+    min_jaccard: float,
+) -> DataFrame:
+    """Join each side's signature back to a two-column pair table once
+    and keep the pairs whose estimated Jaccard (the fraction of equal
+    signature components, on the 4dp floor grid) reaches
+    ``min_jaccard``."""
+    a, b = pairs.columns
+    s1 = sigs_1.select(F.col(id_col).alias(a), F.col("signature").alias("sig_1"))
+    s2 = sigs_2.select(F.col(id_col).alias(b), F.col("signature").alias("sig_2"))
+    est = (
+        F.size(
+            F.filter(
+                F.zip_with(F.col("sig_1"), F.col("sig_2"), lambda x, y: x == y),
+                lambda eq: eq,
+            )
+        ).cast("double")
+        / F.size(F.col("sig_1"))
+    )
+    return (
+        pairs.join(s1, on=a)
+        .join(s2, on=b)
+        .select(a, b, floor_round(est, 4).alias("est_jaccard"))
+        .where(F.col("est_jaccard") >= F.lit(min_jaccard))
+    )
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     bands: int = 16,
     min_jaccard: float = 0.0,
     hash_fn: str = "xxhash64",
-    max_bucket_size: int | None = None,
+    max_bucket: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs agreeing on any band become a candidate pair.
 
@@ -396,16 +511,13 @@ def minhash_candidate_pairs(
     ~(8 + 8*num_perm) bytes/doc — at 100 TB this is the standard
     "checkpoint the sketch, not the corpus" move.
 
-    ``max_bucket_size``: skew guard for real corpora. A group of g EXACT
-    duplicates agrees on every band, so one bucket holds all g ids and
-    the band join emits g^2/2 pairs — boilerplate pages with millions of
-    copies turn the "banded, never all-pairs" promise back into a
-    quadratic hot key. Buckets larger than the cap are dropped from
-    candidate generation (one extra count aggregate over the 24-byte band
-    rows). The documented contract: run EXACT dedup first (its groupBy
-    collapses those same groups linearly), then near-dup with a cap —
-    pairs lost to a capped bucket are overwhelmingly exact dups already
-    handled upstream. None (default) disables the guard.
+    ``max_bucket``: the ``banded_pairs`` skew guard. A group of g EXACT
+    duplicates agrees on every band, so boilerplate pages with millions
+    of copies would turn one bucket into a quadratic hot key. The
+    documented contract: run EXACT dedup first (its groupBy collapses
+    those same groups linearly), then near-dup with a cap — pairs lost
+    to a capped bucket are overwhelmingly exact dups already handled
+    upstream. None (default) disables the guard.
     """
     signatures = persist(signatures)
     # Narrow-shuffle design for the 100 TB case: the banded self-join carries
@@ -415,43 +527,8 @@ def minhash_candidate_pairs(
     # aggregation's exchange across the three references (ReusedExchange),
     # so the expensive shingle/hash pass still runs once.
     banded = minhash_bands(signatures, bands, id_col=id_col, hash_fn=hash_fn)
-    if max_bucket_size is not None:
-        small = (
-            banded.groupBy("band", "band_hash")
-            .count()
-            .where(F.col("count") <= max_bucket_size)
-            .select("band", "band_hash")
-        )
-        banded = banded.join(small, on=["band", "band_hash"])
-    left = banded.select(F.col(id_col).alias("id_1"), "band", "band_hash")
-    right = banded.select(F.col(id_col).alias("id_2"), "band", "band_hash")
-    pairs = (
-        left.join(right, on=["band", "band_hash"], how="inner")
-        .where(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .dropDuplicates(["id_1", "id_2"])
-    )
-    s1 = signatures.select(
-        F.col(id_col).alias("id_1"), F.col("signature").alias("sig_1")
-    )
-    s2 = signatures.select(
-        F.col(id_col).alias("id_2"), F.col("signature").alias("sig_2")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_1"), F.col("sig_2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / F.size(F.col("sig_1"))
-    )
-    return (
-        pairs.join(s1, on="id_1")
-        .join(s2, on="id_2")
-        .select("id_1", "id_2", floor_round(est, 4).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= F.lit(min_jaccard))
-    )
+    pairs = banded_pairs(banded, "band_hash", id_col, max_bucket)
+    return _with_estimate(pairs, signatures, signatures, id_col, min_jaccard)
 
 
 # --- SimHash ----------------------------------------------------------------
@@ -546,7 +623,8 @@ def simhash_candidate_pairs(
     """Near-dup candidates: docs sharing any (n_bits/bands)-bit band of
     their SimHash (catches pairs within small hamming distance), plus
     exact hamming. ``n_bits`` must match the ``simhash`` hash family
-    (64 for xxhash64, 60 for md5).
+    (64 for xxhash64, 60 for md5), and ``bands`` must divide it
+    (``ValueError`` otherwise).
 
     The signature table is PERSISTED here (``state.persist``, released
     when the caller's ``state.scope()`` exits): both self-join sides — and
@@ -559,56 +637,23 @@ def simhash_candidate_pairs(
     verbatim under both join sides). Signatures are one row per doc —
     the sketch, not the corpus.
 
-    ``max_bucket`` is the DEGENERACY GUARD for corpus regimes where
-    SimHash collapses: unweighted token votes concentrate when documents
-    share one narrow vocabulary/frequency profile (measured at the sf10
-    audit: a 31-word vocabulary put ~all 500k docs in ONE band bucket —
-    the candidate join degenerates to all-pairs and spills the disk).
-    With a cap, band buckets holding more than ``max_bucket`` ids are
-    EXCLUDED from candidate generation (standard LSH practice: an
-    oversized bucket carries no discriminative signal — emitting its
-    pairs is quadratic cost for near-zero precision); docs can still
-    pair through their other, non-degenerate bands. The bucket-count
-    aggregate shuffles on the same (band, band_val) key as the self-join
-    right after it, so the guard adds no new partitioning at scale.
-    Default None preserves exact uncapped semantics (the oracle-attested
-    catalog configuration)."""
-    band_width = n_bits // bands
+    ``max_bucket`` is the ``banded_pairs`` DEGENERACY GUARD for corpus
+    regimes where SimHash collapses: unweighted token votes concentrate
+    when documents share one narrow vocabulary/frequency profile
+    (measured at the sf10 audit: a 31-word vocabulary put ~all 500k docs
+    in ONE band bucket — the candidate join degenerates to all-pairs and
+    spills the disk). Default None preserves exact uncapped semantics
+    (the oracle-attested catalog configuration)."""
+    band_vals = band_codes(F.col("simhash"), n_bits, bands)
     hashes = persist(hashes, StorageLevel.MEMORY_AND_DISK)
-    band_vals = F.array(
-        *[
-            F.shiftright(F.col("simhash"), b * band_width).bitwiseAND(
-                F.lit((1 << band_width) - 1).cast("long")
-            )
-            for b in range(bands)
-        ]
-    )
     banded = hashes.select(
         F.col(id_col),
         F.col("simhash"),
         F.posexplode(band_vals).alias("band", "band_val"),
     )
-    if max_bucket is not None:
-        ok = (
-            banded.groupBy("band", "band_val")
-            .agg(F.count("*").alias("_bucket_n"))
-            .where(F.col("_bucket_n") <= max_bucket)
-            .select("band", "band_val")
-        )
-        banded = banded.join(ok, on=["band", "band_val"])
-    left = banded.select(
-        F.col(id_col).alias("id_1"), F.col("simhash").alias("sh_1"), "band", "band_val"
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_2"), F.col("simhash").alias("sh_2"), "band", "band_val"
-    )
-    hamming = F.bit_count(F.col("sh_1").bitwiseXOR(F.col("sh_2")))
-    return (
-        left.join(right, on=["band", "band_val"], how="inner")
-        .where(F.col("id_1") < F.col("id_2"))
-        .dropDuplicates(["id_1", "id_2"])
-        .select("id_1", "id_2", hamming.cast("int").alias("hamming"))
-    )
+    pairs = banded_pairs(banded, "band_val", id_col, max_bucket, carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_1").bitwiseXOR(F.col("simhash_2")))
+    return pairs.select("id_1", "id_2", hamming.cast("int").alias("hamming"))
 
 
 # --- exact n-gram Jaccard ---------------------------------------------------
@@ -634,15 +679,9 @@ def ngram_jaccard_pairs(
     from it — share one persisted copy instead of re-tokenizing the
     corpus per join side.
     """
-    if shingles_df is not None:
-        sh = shingles_df.select(F.col(id_col), F.col("shingles"))
-    else:
-        sh = spread_partitions(docs.select(id_col, text_col)).select(
-            F.col(id_col), words(text_col).alias("_w")
-        ).select(
-            F.col(id_col),
-            token_shingles(F.col("_w"), shingle_n).alias("shingles"),
-        )
+    if shingles_df is None:
+        shingles_df = shingle_table(docs, shingle_n, id_col, text_col)
+    sh = shingles_df.select(F.col(id_col), F.col("shingles"))
     left = sh.select(F.col(id_col).alias("id_1"), F.col("shingles").alias("sh_1"))
     right = sh.select(F.col(id_col).alias("id_2"), F.col("shingles").alias("sh_2"))
     if candidates is not None:
@@ -808,12 +847,7 @@ def prefix_jaccard_pairs(
     # same trade as ordering.global_row_index; the caller's
     # state.scope() releases it.
     sh = persist(
-        spread_partitions(docs.select(id_col, text_col))
-        .select(F.col(id_col), words(text_col).alias("_w"))
-        .select(
-            F.col(id_col), token_shingles(F.col("_w"), shingle_n).alias("shingles")
-        ),
-        StorageLevel.MEMORY_AND_DISK,
+        shingle_table(docs, shingle_n, id_col, text_col), StorageLevel.MEMORY_AND_DISK
     )
     # The prefix-postings index feeds BOTH sides of the candidate
     # self-join (and, under max_posting, the cap aggregate too). The two
@@ -904,8 +938,8 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Pairs of vectors with cosine similarity >= threshold (id_1 < id_2).
 
-    Brute-force all-pairs baseline; the LSH-bucketed scale path is
-    ``operators/similarity.py:lsh_near_dup_pairs``.
+    Brute-force all-pairs baseline; the banded-LSH scale path is
+    ``operators/similarity.py:srp_banded_near_dup_pairs``.
     """
     vecs = embeddings.select(
         F.col(id_col), to_double_array(vec_col).alias("vec")
@@ -1261,27 +1295,7 @@ def incremental_minhash_candidates(
         .select("id_new", "id_hist")
         .dropDuplicates(["id_new", "id_hist"])
     )
-    s_new = new_sigs.select(
-        F.col(id_col).alias("id_new"), F.col("signature").alias("sig_1")
-    )
-    s_hist = hist_sigs.select(
-        F.col(id_col).alias("id_hist"), F.col("signature").alias("sig_2")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_1"), F.col("sig_2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / F.size(F.col("sig_1"))
-    )
-    return (
-        pairs.join(s_new, on="id_new")
-        .join(s_hist, on="id_hist")
-        .select("id_new", "id_hist", floor_round(est, 4).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= F.lit(min_jaccard))
-    )
+    return _with_estimate(pairs, new_sigs, hist_sigs, id_col, min_jaccard)
 
 
 # content-defined chunking constants — shared with the SQL oracle builder

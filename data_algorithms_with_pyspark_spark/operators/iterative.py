@@ -8,7 +8,9 @@ transformations with ``localCheckpoint()`` every iteration to truncate the
 lineage (without it, plan depth grows linearly and both planning time and
 recovery cost blow up — the classic iterative-Spark failure mode). The
 checkpoints go through ``state.local_checkpoint``: the caller's
-``state.scope()`` frees their blocks when it exits.
+``state.scope()`` frees their blocks when it exits. An operator that runs
+an action every round releases round i-1 as soon as that action has
+materialized round i, so a scope holds two rounds, not all of them.
 
 Scale notes: each iteration is one shuffle keyed on vertex id. Ranks and
 labels are (id, value) pairs — the 100 TB-scale state is O(V), never O(E);
@@ -20,7 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_algorithms_with_pyspark_spark.operators.state import local_checkpoint
+from data_algorithms_with_pyspark_spark.operators.state import (
+    local_checkpoint,
+    release,
+)
 
 __all__ = [
     "connected_components",
@@ -35,6 +40,14 @@ def _undirected(edges: DataFrame) -> DataFrame:
     return edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+
+
+def _release_behind(prev: DataFrame, cur: DataFrame) -> None:
+    """Release round ``prev`` once ``cur``, the checkpointed round computed
+    from it, holds every partition (the round's action materialized it);
+    until then ``prev`` stays held for the scope."""
+    if cur._jdf.queryExecution().logical().rdd().isCheckpointed():
+        release(prev)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -56,7 +69,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         neighbor_labels = und.join(
             labels, und.src == labels.id, "inner"
         ).select(F.col("dst").alias("id"), "component")
-        labels = local_checkpoint(
+        prev, labels = labels, local_checkpoint(
             labels.union(neighbor_labels)
             .groupBy("id")
             .agg(F.min("component").alias("component")),
@@ -65,6 +78,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         # the convergence scalar below materializes the lazy checkpoint:
         # one job per round instead of checkpoint-pass + collect-pass
         cur_sum = labels.agg(F.sum("component")).collect()[0][0]
+        _release_behind(prev, labels)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -94,13 +108,24 @@ def pagerank(
     # avoided — everything stays keyed on id.
     deg = vertices.join(out_deg, on="id", how="left").fillna(0, subset=["out_deg"])
     ranks = vertices.select("id", F.lit(1.0 / n).alias("rank"))
+    prev = None
     for _ in range(iterations):
         with_deg = ranks.join(deg, on="id")
+        # summed over every joined row, not over a dangling-only filter:
+        # the join then cannot be pruned to empty, so this collect reads
+        # (and materializes) every partition of ``ranks``; non-dangling
+        # rows add NULL, which sum skips
         dangling = (
-            with_deg.where(F.col("out_deg") == 0)
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+            with_deg.agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))),
+                    F.lit(0.0),
+                )
+            )
             .collect()[0][0]
         )
+        if prev is not None:
+            _release_behind(prev, ranks)
         contribs = (
             edges.join(with_deg.where(F.col("out_deg") > 0), edges.src == F.col("id"))
             .select(
@@ -110,7 +135,7 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("contrib").alias("in_rank"))
         )
-        ranks = local_checkpoint(
+        prev, ranks = ranks, local_checkpoint(
             vertices.join(contribs, on="id", how="left")
             .fillna(0.0, subset=["in_rank"])
             .select(
@@ -150,7 +175,7 @@ def shortest_paths(
         relaxed = dist.join(e, dist["id"] == e["src"]).select(
             F.col("dst").alias("id"), (F.col("distance") + 1).alias("distance")
         )
-        dist = local_checkpoint(
+        prev, dist = dist, local_checkpoint(
             dist.union(relaxed)
             .groupBy("id")
             .agg(F.min("distance").alias("distance")),
@@ -159,6 +184,7 @@ def shortest_paths(
         row = dist.agg(
             F.count("*").alias("n"), F.sum("distance").alias("s")
         ).collect()[0]
+        _release_behind(prev, dist)
         new_signature = (row["n"], row["s"])
         if new_signature == signature:
             break
@@ -185,7 +211,10 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     — a SortAggregate, measured FASTER than the rank-1-window rewrite for
     this shape (see tests/test_plan_lint.py); state is O(V), votes are
     O(E) in flight but never materialized. localCheckpoint each round
-    truncates the lineage (the iterative-Spark failure mode).
+    truncates the lineage (the iterative-Spark failure mode). No round
+    runs an action, so no round is known to be materialized before the
+    final one: every round's checkpoint stays held until the caller's
+    scope exits.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -316,6 +345,7 @@ def connected_components_star(
             eager=False,
         )
         new_sig = signature(small)
+        _release_behind(e, small)
         e = small
         if new_sig == sig:
             break

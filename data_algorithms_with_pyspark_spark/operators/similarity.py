@@ -33,7 +33,6 @@ from pyspark.sql.functions import pandas_udf
 from data_algorithms_with_pyspark_spark.functions.vectors import (
     cosine_similarity,
     cosine_with_norms,
-    dot_product,
     l2_norm,
     lit_long_array,
     to_double_array,
@@ -43,6 +42,10 @@ from data_algorithms_with_pyspark_spark.operators.clustering import (
     collect_centroids,
     literal_fits,
     with_nearest_centroid,
+)
+from data_algorithms_with_pyspark_spark.operators.dedup import (
+    band_codes,
+    banded_pairs,
 )
 from data_algorithms_with_pyspark_spark.operators.state import persist
 
@@ -62,7 +65,6 @@ __all__ = [
     "sigmoid_dot_scorer",
     "random_hyperplanes",
     "srp_codes",
-    "lsh_near_dup_pairs",
     "srp_banded_near_dup_pairs",
     "ivf_assign",
     "pq_codebook",
@@ -162,48 +164,6 @@ def srp_codes(
 
     vecs = embeddings.select(F.col(id_col), to_double_array(vec_col).alias("vec"))
     return vecs.select(F.col(id_col), F.col("vec"), _code("vec").alias("srp_code"))
-
-
-def lsh_near_dup_pairs(
-    embeddings: DataFrame,
-    dim: int,
-    threshold: float,
-    n_planes: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cosine near-dup pairs via SRP bucketing: exact cosine evaluated only
-    within equal-code buckets (plus nothing else — single-probe variant).
-
-    Compared with ``dedup.embedding_near_dup_pairs`` (exact all-pairs) this
-    trades a little recall for a join keyed on ``srp_code`` instead of a
-    cross join: shuffle O(n), compare O(sum bucket^2).
-    """
-    coded = srp_codes(embeddings, dim, n_planes, seed, id_col, vec_col).withColumn(
-        "_n", l2_norm(F.col("vec"))
-    )
-    left = coded.select(
-        F.col(id_col).alias("id_1"),
-        F.col("vec").alias("v_1"),
-        F.col("_n").alias("n_1"),
-        "srp_code",
-    )
-    right = coded.select(
-        F.col(id_col).alias("id_2"),
-        F.col("vec").alias("v_2"),
-        F.col("_n").alias("n_2"),
-        "srp_code",
-    )
-    cos = cosine_with_norms(
-        F.col("v_1"), F.col("v_2"), F.col("n_1"), F.col("n_2")
-    )
-    return (
-        left.join(right, on="srp_code", how="inner")
-        .where(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2", F.round(cos, 6).alias("cosine"))
-        .where(F.col("cosine") >= F.lit(threshold))
-    )
 
 
 @dataclass(frozen=True)
@@ -507,8 +467,8 @@ def srp_banded_near_dup_pairs(
     vec_col: str = "embedding",
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Banded SRP-LSH cosine near-dup pairs — the multi-probe recall fix
-    over single-bucket ``lsh_near_dup_pairs``.
+    """Banded SRP-LSH cosine near-dup pairs; ``bands=1`` is the
+    single-bucket join on the whole code (``n_planes < 64``).
 
     The ``n_planes``-bit SRP code is split into ``bands`` contiguous bands;
     vectors agreeing on ANY band become candidates (equi-join on
@@ -541,42 +501,15 @@ def srp_banded_near_dup_pairs(
     produce ~3e8 candidate pairs and spill out the disk; the RIGHT fix
     is raising the width with log2(n), the cap is the safety rail that
     bounds the damage when the corpus grows faster than the config).
-    The count aggregate shuffles on the (band, band_code) key the
-    self-join right after it already needs. Default None = exact
-    uncapped semantics (the oracle-attested catalog configuration).
+    Default None = exact uncapped semantics (the oracle-attested catalog
+    configuration). ``bands`` must divide ``n_planes``.
     """
-    if n_planes % bands:
-        raise ValueError("n_planes must divide evenly into bands")
-    width = n_planes // bands
-    mask = (1 << width) - 1
+    band_vals = band_codes(F.col("srp_code"), n_planes, bands)
     coded = persist(srp_codes(embeddings, dim, n_planes, seed, id_col, vec_col))
-    band_vals = F.array(
-        *[
-            F.shiftright(F.col("srp_code"), b * width).bitwiseAND(
-                F.lit(mask).cast("long")
-            )
-            for b in range(bands)
-        ]
-    )
     banded = coded.select(
         F.col(id_col), F.posexplode(band_vals).alias("band", "band_code")
     )
-    if max_bucket is not None:
-        ok = (
-            banded.groupBy("band", "band_code")
-            .agg(F.count("*").alias("_bucket_n"))
-            .where(F.col("_bucket_n") <= max_bucket)
-            .select("band", "band_code")
-        )
-        banded = banded.join(ok, on=["band", "band_code"])
-    left = banded.select(F.col(id_col).alias("id_1"), "band", "band_code")
-    right = banded.select(F.col(id_col).alias("id_2"), "band", "band_code")
-    pairs = (
-        left.join(right, on=["band", "band_code"], how="inner")
-        .where(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .dropDuplicates(["id_1", "id_2"])
-    )
+    pairs = banded_pairs(banded, "band_code", id_col, max_bucket)
     normed = coded.select(
         F.col(id_col), F.col("vec"), l2_norm(F.col("vec")).alias("norm")
     )
@@ -590,9 +523,8 @@ def srp_banded_near_dup_pairs(
         F.col("vec").alias("v_2"),
         F.col("norm").alias("n_2"),
     )
-    den = F.col("n_1") * F.col("n_2")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_product(F.col("v_1"), F.col("v_2")) / den
+    cos = cosine_with_norms(
+        F.col("v_1"), F.col("v_2"), F.col("n_1"), F.col("n_2")
     )
     return (
         pairs.join(v1, on="id_1")
@@ -766,22 +698,10 @@ def knn_join_srp(
     ``exclude_same_id``: same one-namespace contract as ``knn_join`` —
     pass False when query and corpus ids are independent.
     """
-    if n_planes % bands:
-        raise ValueError("n_planes must divide evenly into bands")
-    width = n_planes // bands
-    mask = (1 << width) - 1
+    band_vals = band_codes(F.col("srp_code"), n_planes, bands)
 
     def banded(df: DataFrame, side: str) -> DataFrame:
-        coded = srp_codes(df, dim, n_planes, seed, id_col, vec_col)
-        band_vals = F.array(
-            *[
-                F.shiftright(F.col("srp_code"), b * width).bitwiseAND(
-                    F.lit(mask).cast("long")
-                )
-                for b in range(bands)
-            ]
-        )
-        return coded.select(
+        return srp_codes(df, dim, n_planes, seed, id_col, vec_col).select(
             F.col(id_col).alias(side),
             F.posexplode(band_vals).alias("band", "band_code"),
         )

@@ -22,6 +22,12 @@ it fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
 Outside any scope ``persist`` and ``local_checkpoint`` just call the
 DataFrame method, and the relation stays pinned until the session's
 ``clearCache()`` (persists) or its end (checkpoints).
+
+Plan-identical persists share one cache entry, so a scope registers a
+``persist`` only when the plan was not cached before the call: a cache
+some other holder made stays that holder's. An iterative operator may
+``release`` a round's checkpoint early, once the next round no longer
+reads it.
 """
 
 from __future__ import annotations
@@ -33,10 +39,11 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-__all__ = ["scope", "persist", "local_checkpoint"]
+__all__ = ["scope", "persist", "local_checkpoint", "release"]
 
-_HELD: contextvars.ContextVar[list[Callable[[], object]] | None] = (
-    contextvars.ContextVar("operator_state_held", default=None)
+_Held = list[tuple[DataFrame, Callable[[], object]]]
+_HELD: contextvars.ContextVar[_Held | None] = contextvars.ContextVar(
+    "operator_state_held", default=None
 )
 
 
@@ -47,20 +54,20 @@ def scope() -> Iterator[None]:
     if _HELD.get() is not None:
         yield
         return
-    held: list[Callable[[], object]] = []
+    held: _Held = []
     token = _HELD.set(held)
     try:
         yield
     finally:
         _HELD.reset(token)
-        for release in reversed(held):
-            release()
+        for _, free in reversed(held):
+            free()
 
 
-def _held(df: DataFrame, release: Callable[[], object]) -> DataFrame:
+def _held(df: DataFrame, free: Callable[[], object]) -> DataFrame:
     held = _HELD.get()
     if held is not None:
-        held.append(release)
+        held.append((df, free))
     return df
 
 
@@ -68,9 +75,12 @@ def persist(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
 ) -> DataFrame:
     """``df.persist(level)`` (the default is ``DataFrame.persist``'s),
-    released with ``unpersist()`` when the open scope exits."""
+    released with ``unpersist()`` when the open scope exits — unless the
+    plan was already cached, in which case the cache is not this scope's
+    to drop."""
+    shared = _HELD.get() is None or df.storageLevel != StorageLevel.NONE
     out = df.persist(level)
-    return _held(out, out.unpersist)
+    return out if shared else _held(out, out.unpersist)
 
 
 def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -81,3 +91,17 @@ def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return _held(
         out, lambda: out._jdf.queryExecution().logical().rdd().unpersist(False)
     )
+
+
+def release(df: DataFrame) -> None:
+    """Release ``df`` — a result of ``persist`` or ``local_checkpoint`` —
+    now instead of at the scope's exit. Call it only once nothing lazy
+    still reads ``df``: for a checkpoint, once every relation built on it
+    has itself been materialized. Does nothing outside a scope or for a
+    relation the scope does not hold."""
+    held = _HELD.get() or []
+    for i, (pinned, free) in enumerate(held):
+        if pinned is df:
+            del held[i]
+            free()
+            return

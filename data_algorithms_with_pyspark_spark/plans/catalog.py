@@ -59,30 +59,42 @@ _QUERY_MODULES = (
 # attestation covers every catalog query (scripts/driver_sim.py always
 # verifies all of them regardless of order).
 _SAMPLE_PRIORITY = (
-    # Round 16 rotation: the rows whose persisted or checkpointed state
-    # the caller's scope (operators/state.py) now releases lead, so the
-    # sample window re-attests them first; the round-15 ANN, round-14
-    # classifier and round-13 tokenizer rows follow (minus the names
-    # already listed here).
+    # Round 17 rotation: the near-dup rows whose shingle table, band
+    # slicing, bucket cap, band self-join or MinHash estimate now come
+    # from one shared step each (operators/dedup.py), and the four graph
+    # rows whose operators now release round i-1 once round i is
+    # materialized, lead so the sample window re-attests them first; the
+    # round-16 rows follow (minus the names already listed here).
     "minhash_near_dup_candidates",
     "minhash_lsh_recall_report",
+    "near_dup_clusters",
+    "near_dup_keep_best",
     "simhash_near_dup_candidates",
     "simhash_guarded_near_dups",
     "simhash_shingle_near_dups",
-    "prefix_jaccard_near_dups",
-    "prefix_jaccard_guarded_near_dups",
-    "auto_routed_near_dups",
     "srp_lsh_cosine_near_dups",
     "srp_guarded_cosine_near_dups",
-    "embedding_semdedup_prune",
-    "near_dup_clusters",
-    "near_dup_keep_best",
+    "srp_degeneracy_preflight",
+    "corpus_curation_v2",
+    "ngram_jaccard_near_dups",
+    "prefix_jaccard_near_dups",
+    "prefix_jaccard_guarded_near_dups",
+    "dedup_degeneracy_preflight",
+    "dedup_lane_choice",
+    "auto_routed_near_dups",
     "incremental_near_dup_candidates",
     "incremental_near_dup_persisted_index",
     "graph_connected_components",
     "graph_pagerank",
     "graph_shortest_paths",
     "graph_cc_star_contraction",
+    #
+    # Round 16 rotation: the rows whose persisted or checkpointed state
+    # the caller's scope (operators/state.py) now releases lead, so the
+    # sample window re-attests them first; the round-15 ANN, round-14
+    # classifier and round-13 tokenizer rows follow (minus the names
+    # already listed here).
+    "embedding_semdedup_prune",
     "graph_label_propagation",
     "documents_global_row_index",
     "corpus_vocabulary_coverage",
@@ -90,7 +102,6 @@ _SAMPLE_PRIORITY = (
     "term_count_min_sketch",
     "bloom_term_membership",
     "corpus_dataset_card",
-    "corpus_curation_v2",
     "concurrent_session_pairs",
     "wordpiece_greedy_segmentation",
     "tokenizer_compression_comparison",
@@ -145,7 +156,6 @@ _SAMPLE_PRIORITY = (
     # postings/simhash/session persists, bm25 row-local filter, trainer
     # driver-argmax, literal/broadcast switch, single-collect ivf_pq):
     "embedding_kmeans_assign",
-    "dedup_degeneracy_preflight",
     # r7-stale block (staleness.py "last green r7"), alphabetical, minus
     # the touched names above; the window cut lands inside this block
     # and the remainder leads the r13 rotation.

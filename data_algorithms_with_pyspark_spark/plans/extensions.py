@@ -537,11 +537,7 @@ def dedup_degeneracy_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_algorithms_with_pyspark_spark.operators.dedup import (
         minhash_bands,
         prefix_postings,
-        spread_partitions,
-        token_shingles,
-    )
-    from data_algorithms_with_pyspark_spark.functions.text_functions import (
-        words,
+        shingle_table,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -561,16 +557,8 @@ def dedup_degeneracy_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(pair_bound).cast("long").alias("mh_cand_bound"),
         )
     )
-    shingles = (
-        spread_partitions(docs.select("doc_id", "text"))
-        .select(F.col("doc_id"), words("text").alias("_w"))
-        .select(
-            F.col("doc_id"),
-            token_shingles(F.col("_w"), _NGRAM_N).alias("shingles"),
-        )
-    )
     pp = (
-        prefix_postings(shingles, _PREFIX_JACCARD_THRESHOLD)
+        prefix_postings(shingle_table(docs, _NGRAM_N), _PREFIX_JACCARD_THRESHOLD)
         .groupBy("s")
         .agg(F.count("*").alias("c"))
         .agg(
@@ -640,27 +628,17 @@ def srp_degeneracy_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands*n^2/2^(w+1)) and the sf10 audit measured blowing up at a
     fixed 8-bit width; ``srp_over_cap`` counts the buckets the guarded
     row's cap would exclude. One coding pass + one keyed aggregate."""
+    from data_algorithms_with_pyspark_spark.operators.dedup import band_codes
     from data_algorithms_with_pyspark_spark.operators.similarity import (
         srp_codes,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    width = _SRP_N_PLANES // _SRP_BANDS
-    mask = (1 << width) - 1
-    coded = srp_codes(emb, _SRP_DIM, _SRP_N_PLANES, 42)
-    band_vals = F.array(
-        *[
-            F.shiftright(F.col("srp_code"), b * width).bitwiseAND(
-                F.lit(mask).cast("long")
-            )
-            for b in range(_SRP_BANDS)
-        ]
-    )
-    banded = coded.select(
-        F.col("vec_id"), F.posexplode(band_vals).alias("band", "band_code")
-    )
+    band_vals = band_codes(F.col("srp_code"), _SRP_N_PLANES, _SRP_BANDS)
     st = (
-        banded.groupBy("band", "band_code")
+        srp_codes(emb, _SRP_DIM, _SRP_N_PLANES, 42)
+        .select(F.posexplode(band_vals).alias("band", "band_code"))
+        .groupBy("band", "band_code")
         .agg(F.count("*").alias("c"))
         .agg(
             F.count("*").cast("long").alias("srp_n_buckets"),
@@ -1031,11 +1009,7 @@ def _collect_lane_plan(spark: SparkSession, sf_dir: str):
     and by ``auto_routed_near_dups`` (decision EXECUTED)."""
     from data_algorithms_with_pyspark_spark.operators.dedup import (
         prefix_postings,
-        spread_partitions,
-        token_shingles,
-    )
-    from data_algorithms_with_pyspark_spark.functions.text_functions import (
-        words,
+        shingle_table,
     )
     from data_algorithms_with_pyspark_spark.operators.planning import (
         choose_dedup_lane,
@@ -1046,16 +1020,8 @@ def _collect_lane_plan(spark: SparkSession, sf_dir: str):
 
     cap = _PREFIX_GUARD_POSTING
     docs = load_table(spark, sf_dir, "documents")
-    shingles = (
-        spread_partitions(docs.select("doc_id", "text"))
-        .select(F.col("doc_id"), words("text").alias("_w"))
-        .select(
-            F.col("doc_id"),
-            token_shingles(F.col("_w"), _NGRAM_N).alias("shingles"),
-        )
-    )
     stats = (
-        prefix_postings(shingles, _PREFIX_JACCARD_THRESHOLD)
+        prefix_postings(shingle_table(docs, _NGRAM_N), _PREFIX_JACCARD_THRESHOLD)
         .groupBy("s")
         .agg(F.count("*").alias("c"))
         .agg(
@@ -1310,16 +1276,12 @@ def auto_routed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.999 at J >= 0.8). The MinHash branch fails fast if the planner's
     (num_perm, bands) ever drifts from the frozen oracle coding — same
     re-attestation discipline as srp_guarded_cosine_near_dups."""
-    from data_algorithms_with_pyspark_spark.functions.text_functions import (
-        words,
-    )
     from data_algorithms_with_pyspark_spark.operators.dedup import (
         minhash_candidate_pairs,
         minhash_signatures,
         ngram_jaccard_pairs,
         prefix_jaccard_pairs,
-        spread_partitions,
-        token_shingles,
+        shingle_table,
     )
 
     _, _, plan = _collect_lane_plan(spark, sf_dir)
@@ -1360,13 +1322,7 @@ def auto_routed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark import StorageLevel
 
         sh = persist(
-            spread_partitions(docs.select("doc_id", "text"))
-            .select(F.col("doc_id"), words("text").alias("_w"))
-            .select(
-                F.col("doc_id"),
-                token_shingles(F.col("_w"), _NGRAM_N).alias("shingles"),
-            ),
-            StorageLevel.MEMORY_AND_DISK,
+            shingle_table(docs, _NGRAM_N), StorageLevel.MEMORY_AND_DISK
         ).hint("merge")
         pairs = ngram_jaccard_pairs(
             docs, t, shingle_n=_NGRAM_N, candidates=cand, shingles_df=sh

@@ -142,11 +142,15 @@ def test_persisted_band_index_scan_is_bucketed(spark):
     """The incremental near-dup index query reads history bands from the
     bucketed table: the scan must carry bucket metadata (pay-once shuffle)
     and sit under the band join with no Exchange of its own."""
+    from data_algorithms_with_pyspark_spark.operators.state import scope
     from data_algorithms_with_pyspark_spark.plans.catalog import get_query
     from tests.conftest import SF_SMOKE
 
-    df = get_query("incremental_near_dup_persisted_index").fn(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the scope releases the increment signatures the row persists: left
+    # cached, a later build of the same row would reuse them
+    with scope():
+        df = get_query("incremental_near_dup_persisted_index").fn(spark, SF_SMOKE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
     scan_lines = [
         ln
         for ln in plan.splitlines()

@@ -258,3 +258,37 @@ class TestStarContractionCC:
             for r in connected_components_star(df).collect()
         }
         assert got == {1: 1, 2: 1, 3: 1}
+
+
+class TestRoundRelease:
+    """Inside a scope the iterative operators hold two rounds, not one
+    checkpoint per round, and the values do not change."""
+
+    def test_pagerank_row_holds_at_most_four_checkpoints(self, spark):
+        from data_algorithms_with_pyspark_spark.operators.state import scope
+        from data_algorithms_with_pyspark_spark.plans.catalog import get_query
+        from tests.conftest import SF_SMOKE, persisted_rdd_ids
+
+        fn = get_query("graph_pagerank").fn
+        before = persisted_rdd_ids(spark)
+        with scope():
+            got = sorted(fn(spark, SF_SMOKE).collect())
+            # edges, vertices and the last two rounds (12 if every round
+            # stayed held)
+            assert len(persisted_rdd_ids(spark) - before) <= 4
+        with scope():
+            assert sorted(fn(spark, SF_SMOKE).collect()) == got
+
+    def test_chain_components_hold_two_rounds(self, spark):
+        from data_algorithms_with_pyspark_spark.operators.state import scope
+        from tests.conftest import persisted_rdd_ids
+
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(8)], ["src", "dst"]
+        )
+        before = persisted_rdd_ids(spark)
+        with scope():
+            out = {r.id: r.component for r in connected_components(edges).collect()}
+            # the undirected edges and the final labels
+            assert len(persisted_rdd_ids(spark) - before) <= 2
+        assert set(out.values()) == {0} and len(out) == 9

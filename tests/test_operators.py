@@ -4,6 +4,7 @@ windows, and text operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_algorithms_with_pyspark_spark.operators.dedup import (
@@ -515,7 +516,7 @@ def test_minhash_bucket_cap_drops_exact_dup_floods(spark):
     sigs = minhash_signatures(docs)
     capped = {
         (r["id_1"], r["id_2"])
-        for r in minhash_candidate_pairs(sigs, max_bucket_size=4).collect()
+        for r in minhash_candidate_pairs(sigs, max_bucket=4).collect()
     }
     assert (1, 2) in capped
     assert not any(a >= 100 and b >= 100 for a, b in capped)
@@ -1172,6 +1173,16 @@ def test_simhash_max_bucket_guards_degenerate_corpus(spark):
         for r in simhash_candidate_pairs(hd, max_bucket=29).collect()
     }
     assert capped == base
+
+
+def test_simhash_bands_must_divide_the_hash_width(spark):
+    """A band count that does not divide n_bits would drop the top
+    n_bits % bands bits from every band: it raises instead."""
+    h = simhash(
+        spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
+    )
+    with pytest.raises(ValueError, match="must divide"):
+        simhash_candidate_pairs(h, bands=5, n_bits=64)
 
 
 def test_srp_banded_max_bucket_guards_hot_bucket(spark):

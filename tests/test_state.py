@@ -10,6 +10,7 @@ import pytest
 from data_algorithms_with_pyspark_spark.operators.state import (
     local_checkpoint,
     persist,
+    release,
     scope,
 )
 from tests.conftest import persisted_rdd_ids
@@ -65,3 +66,29 @@ def test_scope_is_per_thread(spark):
         assert held[0].is_cached
     finally:
         held[0].unpersist()
+
+
+def test_scope_leaves_a_cache_it_did_not_make(spark):
+    """Plan-identical persists share one cache entry: a scope that
+    persists a plan someone else already cached must not drop it."""
+    rel = lambda: spark.range(17).selectExpr("id", "id * 3 AS x")  # noqa: E731
+    a = rel().persist()
+    try:
+        assert a.count() == 17
+        with scope():
+            assert persist(rel()).count() == 17
+        assert a.is_cached
+    finally:
+        a.unpersist()
+
+
+def test_release_frees_one_checkpoint_before_the_scope_exits(spark):
+    before = persisted_rdd_ids(spark)
+    with scope():
+        first = local_checkpoint(spark.range(8))
+        second = local_checkpoint(first.selectExpr("id + 1 AS id"))
+        release(first)
+        assert len(persisted_rdd_ids(spark) - before) == 1
+        assert second.count() == 8
+        release(first)  # no longer held: nothing to do
+    assert persisted_rdd_ids(spark) <= before
