@@ -4,9 +4,15 @@ The IVF / SemDeDup operators (``similarity.ivf_assign``,
 ``dedup.semdedup_prune``) coarse-quantize the corpus against centroids; this
 module TRAINS those centroids instead of relying on the deterministic
 first-k-ids stand-in. The reference has no clustering at all (its README
-stops at graph examples, ``/root/reference/src/chapter_06/README.md``);
-this is a north-star extension shaped for a 100 TB corpus:
+stops at graph examples); this is a north-star extension shaped for a
+100 TB corpus:
 
+* ``lloyd`` is the one Lloyd loop: it owns the persisted work table, the
+  per-round mean aggregate and its collect, the empty-cluster rule and
+  the shift/``tol`` stop. ``kmeans_train`` and
+  ``similarity.pq_train_codebook`` (per-subspace k-means, keyed by
+  ``(s, cid)``) differ only in their init, assignment, group keys and
+  quantizer.
 * per-iteration data motion is the k centroids out (a plan literal, or a
   broadcast past ``LITERAL_CELLS_MAX``) and ONE hash-aggregate shuffle of
   (cid, pos) partial sums back — the corpus never shuffles. This is
@@ -31,6 +37,7 @@ same rounding, giving trained k-means a full value oracle.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,6 +60,7 @@ __all__ = [
     "kmeans_train",
     "kmeans_fit_assign",
     "literal_fits",
+    "lloyd",
     "with_nearest_centroid",
 ]
 
@@ -70,6 +78,10 @@ CENTROID_QUANT = 6
 # payload moves as a broadcast relation, not a plan literal). 1e5 cells
 # ~ 800 KB of doubles ~ well under a second of parse/analysis.
 LITERAL_CELLS_MAX = 100_000
+
+# Centroid vectors keyed by their group key: (cid,) for k-means, (s, cid)
+# for PQ codebooks.
+Centroids = dict[tuple[int, ...], list[float]]
 
 
 def l2_norm_py(v: list[float]) -> float:
@@ -266,6 +278,70 @@ def assign_to_centroids(
     return with_nearest_centroid(vecs, pairs, n_cents, id_col, id_col=id_col)
 
 
+def lloyd(
+    work: DataFrame,
+    init: Callable[[DataFrame], Centroids],
+    assign: Callable[[DataFrame, Centroids], DataFrame],
+    keys: tuple[str, ...],
+    quantize: Callable[[float], float],
+    max_iter: int,
+    tol: float,
+) -> Centroids:
+    """Lloyd's rounds: the one loop behind ``kmeans_train`` and
+    ``similarity.pq_train_codebook``. Returns the trained centroids keyed
+    by their group key (the values of ``keys``), in ``init``'s order.
+
+    ``work`` is persisted for the rounds and unpersisted when the loop
+    returns or raises. ``init(work)`` gives the initial centroids; every
+    coordinate is then quantized. Each round ``assign(work, centroids)``
+    returns one row per member, ``(*keys, vec)``: the key of its nearest
+    centroid and the vector it adds to that centroid's mean. The keys
+    must be attributes of that result, not expressions: an expression
+    selected beside the ``posexplode`` below is evaluated once per
+    exploded element.
+
+    The new centroid is the elementwise mean: posexplode(vec) -> partial
+    and final HashAggregate on ``(*keys, pos)`` -> reassembled per key and
+    collected. The shuffle carries at most n_partitions x centroids x dim
+    pre-combined rows whatever the corpus size, and the driver holds only
+    the centroids. Means are quantized; a centroid with no members keeps
+    its vector. The loop stops after ``max_iter`` rounds, or earlier once
+    the largest centroid L2 shift is <= ``tol``.
+    """
+    work = work.persist()
+    try:
+        centroids = {k: [quantize(x) for x in v] for k, v in init(work).items()}
+        for _ in range(max_iter):
+            rows = (
+                assign(work, centroids)
+                .select(*keys, F.posexplode("vec").alias("pos", "val"))
+                .groupBy(*keys, "pos")
+                .agg(F.avg("val").alias("m"))
+                .groupBy(*keys)
+                .agg(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
+                )
+                .select(*keys, F.transform("pm", lambda s: s["m"]).alias("cvec"))
+                .collect()  # one row per non-empty centroid
+            )
+            updated = {
+                tuple(r[k] for k in keys): [quantize(x) for x in r["cvec"]]
+                for r in rows
+            }
+            # a centroid with no members keeps its vector
+            nxt = {key: updated.get(key, old) for key, old in centroids.items()}
+            shift = max(
+                math.sqrt(sum((a - b) ** 2 for a, b in zip(nxt[key], old)))
+                for key, old in centroids.items()
+            )
+            centroids = nxt
+            if shift <= tol:
+                break
+    finally:
+        work.unpersist()
+    return centroids
+
+
 def kmeans_train(
     vecs: DataFrame,
     k: int,
@@ -274,67 +350,41 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "vec",
 ) -> list[list[float]]:
-    """Lloyd's iterations; returns the trained centroids as a driver-side
-    list (row i = centroid of cluster i), the shape ``spark.createDataFrame``
-    and every assign call consume.
+    """Lloyd's iterations (``lloyd``); returns the trained centroids as a
+    driver-side list (row i = centroid of cluster i), the shape
+    ``spark.createDataFrame`` and every assign call consume.
 
-    Mean recomputation is elementwise: posexplode(vec) -> partial+final
-    HashAggregate on (cid, pos) -> reassemble per cid. The shuffle carries
-    at most n_partitions * k * dim pre-combined rows regardless of corpus
-    size. Empty clusters keep their previous centroid. Stops early when the
-    max centroid L2 shift <= tol.
+    Init is the k lowest-id vectors; assignment is
+    ``with_nearest_centroid``; centroids are rounded to ``CENTROID_QUANT``
+    decimal places. Empty clusters keep their previous centroid. Stops
+    early when the max centroid L2 shift <= tol.
     """
-    work = (
-        vecs.select(F.col(id_col), to_double_array(vec_col).alias("vec"))
-        .withColumn("_vn", l2_norm(F.col("vec")))
-        .persist()
-    )
-    init = work.orderBy(id_col).limit(k).select("vec").collect()
-    if len(init) < k:
-        raise ValueError(f"need at least k={k} vectors, got {len(init)}")
-    centroids = [[round(x, CENTROID_QUANT) for x in row["vec"]] for row in init]
 
-    for _ in range(max_iter):
-        # On the literal side (every catalog operating point) assignment
-        # rides the projection over the persisted corpus, so each Lloyd
-        # iteration is ONE fused pass — assign + posexplode + (cid, pos)
-        # partial means in a single stage, one k*dim-keyed exchange.
-        # cid MUST be staged as an attribute in its own Project BEFORE the
-        # generator: a non-attribute expression in a select alongside
-        # posexplode lands in the Project ABOVE the Generate and is
-        # re-evaluated once per EXPLODED row — dim x the argmax work
-        # (measured 5x on this trainer).
-        assigned = with_nearest_centroid(
-            work, list(enumerate(centroids)), k, "vec", id_col=id_col
-        )
-        rows = (
-            assigned
-            .select("cid", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
-            )
-            .select("cid", F.transform("pm", lambda s: s["m"]).alias("cvec"))
-            .collect()  # k rows — driver state is centroids only
-        )
-        updated = {
-            r["cid"]: [round(x, CENTROID_QUANT) for x in r["cvec"]] for r in rows
-        }
-        shift = 0.0
-        nxt = []
-        for cid, old in enumerate(centroids):
-            new = updated.get(cid, old)  # empty cluster keeps its centroid
-            shift = max(
-                shift, math.sqrt(sum((a - b) ** 2 for a, b in zip(new, old)))
-            )
-            nxt.append(new)
-        centroids = nxt
-        if shift <= tol:
-            break
-    work.unpersist()
-    return centroids
+    def init(work: DataFrame) -> Centroids:
+        rows = work.orderBy(id_col).limit(k).select("vec").collect()
+        if len(rows) < k:
+            raise ValueError(f"need at least k={k} vectors, got {len(rows)}")
+        return {(c,): r["vec"] for c, r in enumerate(rows)}
+
+    def assign(work: DataFrame, cents: Centroids) -> DataFrame:
+        # on the literal side (every catalog operating point) assignment
+        # rides the projection over the persisted corpus, so a round is
+        # ONE fused pass: assign + posexplode + (cid, pos) partial means
+        pairs = [(c, cv) for (c,), cv in cents.items()]
+        return with_nearest_centroid(work, pairs, k, "vec", id_col=id_col)
+
+    return list(
+        lloyd(
+            vecs.select(F.col(id_col), to_double_array(vec_col).alias("vec"))
+            .withColumn("_vn", l2_norm(F.col("vec"))),
+            init,
+            assign,
+            ("cid",),
+            lambda x: round(x, CENTROID_QUANT),
+            max_iter,
+            tol,
+        ).values()
+    )
 
 
 def kmeans_fit_assign(

@@ -39,8 +39,9 @@ from data_algorithms_with_pyspark_spark.functions.vectors import (
 )
 from data_algorithms_with_pyspark_spark.operators.clustering import (
     CENTROID_QUANT,
+    Centroids,
     collect_centroids,
-    literal_fits,
+    lloyd,
     with_nearest_centroid,
 )
 from data_algorithms_with_pyspark_spark.operators.dedup import (
@@ -817,9 +818,9 @@ def pq_codebook(
     the vector with the c-th lowest id (Jegou et al. 2011's codebooks are
     per-subspace k-means; the first-k-ids stand-in is the same
     deterministic substitution the IVF/SemDeDup queries use so the
-    catalog oracle can replay it — swap in ``clustering.kmeans_train``
-    per subspace for trained codebooks). Driver state: m * ksub * (d/m)
-    doubles = k*d, independent of corpus size."""
+    catalog oracle can replay it; ``pq_train_codebook`` trains them from
+    this init). Driver state: m * ksub * (d/m) doubles = k*d, independent
+    of corpus size."""
     rows = (
         vecs.select(F.col(id_col), to_double_array(vec_col).alias("v"))
         .orderBy(id_col)
@@ -864,215 +865,68 @@ def pq_train_codebook(
     ``pq_codebook``, so ``pq_encode``/``pq_adc_topk`` consume it
     unchanged.
 
-    All m subspaces train in ONE Lloyd loop over the exploded
-    ``(id, s, subvector)`` table — per iteration the data motion is one
-    broadcast of the m*ksub centroids out (joined on s) and one
-    (id, s)-keyed packed-argmax aggregate plus one (s, cid, pos) mean
-    aggregate back; the corpus never shuffles and the driver round-trips
-    per iteration are CONSTANT in m (the naive construction runs m
-    sequential k-means loops = m times the driver latency; identical
-    math, since the subspaces are independent).
+    All m subspaces train in ONE Lloyd loop (``clustering.lloyd``) keyed
+    by ``(s, cid)``: per round the corpus is encoded once and each
+    subspace's cid is sliced from ``pq_code``, so the driver round-trips
+    per round are CONSTANT in m (the naive construction runs m sequential
+    k-means loops = m times the driver latency; identical math, since the
+    subspaces are independent).
 
-    Determinism matches ``clustering.kmeans_train``'s recipe: init is the
-    ksub lowest-id subvectors, every codeword coordinate is quantized to
-    the ``CENTROID_QUANT`` FLOOR-grid per round (floor(x*1e6 + 0.5)/1e6 —
-    the same form on the trainer and the DuckDB oracle, ADVICE r8, never
-    a Python-round/duck-round pair), empty clusters keep their codeword,
+    Determinism matches ``clustering.kmeans_train``'s recipe: init is
+    ``pq_codebook`` (the ksub lowest-id subvectors, with its guards),
+    every codeword coordinate is quantized to the ``CENTROID_QUANT``
+    FLOOR-grid per round (floor(x*1e6 + 0.5)/1e6 — the same form on the
+    trainer and the DuckDB oracle, ADVICE r8, never a
+    Python-round/duck-round pair), empty clusters keep their codeword,
     and the loop stops early when the max codeword L2 shift <= ``tol`` —
     so a DuckDB oracle can unroll the identical iterations
     (``plans/extensions.pq_ann_trained_codebook``; pass ``tol=0.0`` so
     early-stop can only fire on an exact fixpoint, which replays
     identically).
 
-    Assignment is the squared-L2 argmin on ``pq_encode``'s 1e12 floor
-    grid (ties to the lower code) — TRAIN and ENCODE use the same metric,
+    Assignment is ``pq_encode``: the squared-L2 argmin on its 1e12 floor
+    grid (ties to the lower code) — TRAIN and ENCODE are the same code,
     per Jegou et al.'s L2 k-means construction (ADVICE r8: the previous
     cosine-argmax training mismatched the L2 encoder and depressed
-    trained-codebook recall). d2 is an index-order left-fold
-    (zip_with + aggregate), bit-identical to the encoder's
-    dim-sequential numpy loop and the oracle's ordered list sum. The
-    packed-argmin int64 grid wraps only beyond d2 ~ 5.8e5 (pq_encode
-    raises there; subvector distances of unit-scale embeddings sit
-    orders of magnitude below).
+    trained-codebook recall), and training raises ``pq_encode``'s
+    packable-bound error on inputs whose codes would wrap int64.
     """
-    import math as _math
-
-    if ksub < 2 or ksub & (ksub - 1):
-        raise ValueError("ksub must be a power of two >= 2 (bit-packed codes)")
     grid = 10.0**CENTROID_QUANT
 
-    def _fq(x: float) -> float:
-        # floor-grid quantization — the catalog-wide floor_round form
-        return _math.floor(x * grid + 0.5) / grid
+    def init(work: DataFrame) -> Centroids:
+        cb = pq_codebook(work, m, ksub, id_col, "vec")
+        return {(s, c): cw for s, cws in enumerate(cb) for c, cw in enumerate(cws)}
 
-    init = (
-        vecs.select(F.col(id_col).alias("vid"), to_double_array(vec_col).alias("v"))
-        .orderBy("vid")
-        .limit(ksub)
-        .collect()
-    )
-    if not init:
-        raise ValueError("empty vector table")
-    dim = len(init[0]["v"])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    if len(init) < ksub:
-        raise ValueError(f"need at least ksub={ksub} vectors, got {len(init)}")
-    w = dim // m
-    codebook = [
-        [[_fq(x) for x in r["v"][s * w : (s + 1) * w]] for r in init]
-        for s in range(m)
-    ]
-    sub = (
-        vecs.select(
-            F.col(id_col).alias("vid"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice(
-                                to_double_array(vec_col), s * w + 1, w
-                            ).alias("sv"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("e"),
-        )
-        .select("vid", F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
-        .persist()
-    )
-    # Size-based switch (clustering.literal_fits): the codebook literal is
-    # dim*ksub cells total; past the bound each iteration assigns via a
-    # broadcast join + (vid, s) argmin + join-back instead of riding a
-    # multi-megabyte literal through the analyzer. Same grid/tie packing
-    # either way.
-    use_literal = literal_fits(dim * ksub)
-    try:
-        for _ in range(max_iter):
-            # cid staged as an attribute BEFORE the generator — an inline
-            # expression next to posexplode is re-evaluated per exploded
-            # element (the clustering.kmeans_train lesson)
-            if use_literal:
-                # ROW-LOCAL packed argmin: the codebook is a single
-                # nested-array literal indexed by the row's subspace id;
-                # per (vid, s) row a transform computes pq_encode's exact
-                # grid/tie packing (floor(d2*1e12 + 0.5)*ksub + cid, min ->
-                # ties to the lower cid) with the identical index-order
-                # left-fold squared L2, and array_min replaces the
-                # per-(vid, s) aggregate — ONE fused pass over the
-                # persisted subvector table per Lloyd iteration.
-                cb_lit = F.expr(
-                    "array("
-                    + ",".join(
-                        "array("
-                        + ",".join(
-                            "array("
-                            + ",".join(f"{float(x)!r}D" for x in cw)
-                            + ")"
-                            for cw in codebook[s]
-                        )
-                        + ")"
-                        for s in range(m)
-                    )
-                    + ")"
-                )  # ONE parsed SQL string (lit_double_matrix rationale)
-                cands = F.element_at(cb_lit, F.col("s") + 1)
-                packed_arr = F.transform(
-                    cands,
-                    lambda cv, c: F.floor(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("sv"), cv, lambda a, b: (a - b) * (a - b)
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        * F.lit(1e12)
-                        + F.lit(0.5)
-                    ).cast("long")
-                    * F.lit(ksub)
-                    + c,
-                )
-                cid = (F.array_min(packed_arr) % ksub).cast("int")
-                staged = sub.select("s", cid.alias("cid"), "sv")
-            else:
-                cents = vecs.sparkSession.createDataFrame(
-                    [
-                        (s, c, codebook[s][c])
-                        for s in range(m)
-                        for c in range(ksub)
-                    ],
-                    "s int, cid int, cvec array<double>",
-                )
-                d2 = F.aggregate(
-                    F.zip_with(
-                        F.col("sv"), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                packed = (
-                    F.floor(d2 * F.lit(1e12) + F.lit(0.5)).cast("long")
-                    * F.lit(ksub)
-                    + F.col("cid")
-                )
-                assign = (
-                    sub.join(F.broadcast(cents), on="s")
-                    .groupBy("vid", "s")
-                    .agg(F.min(packed).alias("best"))
-                    .select(
-                        "vid",
-                        "s",
-                        (F.col("best") % ksub).cast("int").alias("cid"),
-                    )
-                )
-                staged = sub.join(assign, on=["vid", "s"]).select(
-                    "s", "cid", "sv"
-                )
-            rows = (
-                staged
-                .select("s", "cid", F.posexplode("sv").alias("pos", "val"))
-                .groupBy("s", "cid", "pos")
-                .agg(F.avg("val").alias("mv"))
-                .groupBy("s", "cid")
-                .agg(
-                    F.array_sort(F.collect_list(F.struct("pos", "mv"))).alias(
-                        "pm"
-                    )
-                )
-                .select(
-                    "s",
-                    "cid",
-                    F.transform("pm", lambda st: st["mv"]).alias("cvec"),
-                )
-                .collect()  # m * ksub rows — driver state is codewords only
+    def codebook(cents: Centroids) -> list[list[list[float]]]:
+        return [[cents[s, c] for c in range(ksub)] for s in range(m)]
+
+    def assign(work: DataFrame, cents: Centroids) -> DataFrame:
+        cb = codebook(cents)
+        w = len(cb[0][0])
+        coded = pq_encode(work, cb, id_col, "vec", keep_cols=("vec",))
+        # one (s, cid, subvector) row per subspace; cid is an attribute
+        # before lloyd's posexplode
+        subs = [
+            F.struct(
+                F.lit(s).alias("s"),
+                _pq_sub_code(s, ksub).alias("cid"),
+                F.slice("vec", s * w + 1, w).alias("vec"),
             )
-            updated = {
-                (r["s"], r["cid"]): [_fq(x) for x in r["cvec"]] for r in rows
-            }
-            shift = 0.0
-            for s in range(m):
-                nxt = []
-                for c in range(ksub):
-                    new = updated.get((s, c), codebook[s][c])
-                    shift = max(
-                        shift,
-                        _math.sqrt(
-                            sum(
-                                (a - b) ** 2
-                                for a, b in zip(new, codebook[s][c])
-                            )
-                        ),
-                    )
-                    nxt.append(new)
-                codebook[s] = nxt
-            if shift <= tol:
-                break
-    finally:
-        sub.unpersist()
-    return codebook
+            for s in range(m)
+        ]
+        return coded.select(F.inline(F.array(*subs)))
+
+    return codebook(
+        lloyd(
+            vecs.select(F.col(id_col), to_double_array(vec_col).alias("vec")),
+            init,
+            assign,
+            ("s", "cid"),
+            lambda x: math.floor(x * grid + 0.5) / grid,
+            max_iter,
+            tol,
+        )
+    )
 
 
 def _sub_d2(vec_col: Column, start: int, centroid: list[float]) -> Column:
@@ -1086,6 +940,17 @@ def _sub_d2(vec_col: Column, start: int, centroid: list[float]) -> Column:
         t = d * d
         terms = t if terms is None else terms + t
     return terms
+
+
+def _pq_sub_code(s: int, ksub: int) -> Column:
+    """Subspace ``s``'s codeword index in a packed ``pq_code`` column (its
+    ``log2(ksub)``-bit lane), as ``int``."""
+    nbits = max(1, (ksub - 1).bit_length())
+    return (
+        F.shiftright(F.col("pq_code"), s * nbits)
+        .bitwiseAND(F.lit(ksub - 1).cast("long"))
+        .cast("int")
+    )
 
 
 def pq_encode(
@@ -1197,7 +1062,6 @@ def pq_adc_topk(
 
     m = len(codebook)
     ksub = len(codebook[0])
-    nbits = max(1, (ksub - 1).bit_length())
     w = len(codebook[0][0])
     if len(query_vec) != m * w:
         raise ValueError(f"query dim {len(query_vec)} != {m * w}")
@@ -1222,12 +1086,7 @@ def pq_adc_topk(
         # Column-by-Column form cost 3 Py4J round trips per cell over
         # m*ksub cells per invocation
         lut_s = lit_long_array(lut[s])
-        code_s = (
-            F.shiftright(F.col("pq_code"), s * nbits)
-            .bitwiseAND(F.lit(ksub - 1).cast("long"))
-            .cast("int")
-        )
-        t = F.element_at(lut_s, code_s + F.lit(1))
+        t = F.element_at(lut_s, _pq_sub_code(s, ksub) + F.lit(1))
         adc = t if adc is None else adc + t
     return (
         encoded.select(

@@ -59,6 +59,16 @@ _QUERY_MODULES = (
 # attestation covers every catalog query (scripts/driver_sim.py always
 # verifies all of them regardless of order).
 _SAMPLE_PRIORITY = (
+    # Round 18 rotation: the rows whose k-means or PQ codebook training
+    # now runs through one Lloyd loop (operators/clustering.lloyd) lead,
+    # so the sample window re-attests them first; the round-17 rows
+    # follow (minus the names already listed here).
+    "embedding_kmeans_assign",
+    "ivf_trained_recall_report",
+    "ivf_pq_residual_ann_topk",
+    "pq_ann_trained_codebook",
+    "pq_trained_recall_report",
+    #
     # Round 17 rotation: the near-dup rows whose shingle table, band
     # slicing, bucket cap, band self-join or MinHash estimate now come
     # from one shared step each (operators/dedup.py), and the four graph
@@ -110,7 +120,6 @@ _SAMPLE_PRIORITY = (
     "unigram_corpus_compression",
     "unigram_persisted_tokenizer_encode",
     "doc_quality_classifier",
-    "ivf_pq_residual_ann_topk",
     "streaming_cdc_sink_parity",
     #
     # Round 15 rotation: the 14 ANN rows, whose query fetch, probe
@@ -118,12 +127,9 @@ _SAMPLE_PRIORITY = (
     # path (operators/ann.py), lead so the sample window re-attests them
     # first; the round-14 classifier and round-13 tokenizer rows follow.
     "ivf_ann_topk",
-    "ivf_trained_recall_report",
     "ivf_nprobe_recall_curve",
     "pq_ann_topk",
     "pq_recall_report",
-    "pq_ann_trained_codebook",
-    "pq_trained_recall_report",
     "ivf_pq_ann_topk",
     "ivf_pq_recall_report",
     "ivf_pq_ann_persisted_index",
@@ -155,7 +161,7 @@ _SAMPLE_PRIORITY = (
     # Touched block (r11 ANN/trainer/sketch rewrites + r12's prefix-
     # postings/simhash/session persists, bm25 row-local filter, trainer
     # driver-argmax, literal/broadcast switch, single-collect ivf_pq):
-    "embedding_kmeans_assign",
+    # its one name, embedding_kmeans_assign, now leads the round-18 block.
     # r7-stale block (staleness.py "last green r7"), alphabetical, minus
     # the touched names above; the window cut lands inside this block
     # and the remainder leads the r13 rotation.

@@ -2466,7 +2466,8 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 16 first-id codewords tile the space badly. That is the finding
     the report exists to surface: on this data you ship IVF/SRP (whose
     recall tests pass planted-neighbor checks), or train real codebooks
-    per subspace (``clustering.kmeans_train``) on clustered embeddings."""
+    per subspace (``similarity.pq_train_codebook``, the lane below) on
+    clustered embeddings."""
     vecs = _ann_vecs(spark, sf_dir)
     q = ann.fetch_query(vecs, _ANN_QUERY_ID)
     cb = pq_codebook(vecs, m=_PQ_M, ksub=_PQ_KSUB, vec_col="vec")
@@ -2483,7 +2484,8 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # grid each round (the embedding_kmeans_assign determinism recipe), so the
 # oracle below unrolls the identical iterations with the subspace index s
 # riding along as a plain group key — one unrolled loop trains all 8
-# codebooks, mirroring the grouped single-loop Spark trainer.
+# codebooks, mirroring the Spark trainer: operators/clustering.lloyd keyed
+# by (s, cid), assigning through pq_encode.
 
 _PQ_TRAIN_ITERS = 2
 
@@ -2496,7 +2498,8 @@ def _pq_trained_cb_ctes() -> str:
     the lower cid — train and encode share the metric, ADVICE r8), means
     quantized on the CENTROID_QUANT FLOOR-grid on both engines (never a
     Python-round/duck-round pair, ADVICE r8), empty codewords retained.
-    The d2 list sum replays the trainer's index-order left-fold."""
+    The d2 list sum replays pq_encode's dim-sequential left-fold, which
+    the trainer assigns through."""
     from data_algorithms_with_pyspark_spark.operators.clustering import (
         CENTROID_QUANT,
     )
@@ -2658,9 +2661,10 @@ def _pq_trained(vecs: DataFrame) -> list[list[list[float]]]:
 def pq_ann_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production PQ lane: codebooks TRAINED by per-subspace k-means
     (Jegou et al. 2011) rather than substituted from the first ksub ids.
-    Training is one grouped Lloyd loop — all 8 subspaces per iteration,
-    one broadcast out + two aggregates back, corpus never shuffles —
-    and the determinism recipe (CENTROID_QUANT floor-grid per round,
+    Training is one grouped Lloyd loop (clustering.lloyd) — all 8
+    subspaces per round, one pq_encode pass with the codebook in the
+    encoder's closure and one (s, cid, pos) mean aggregate back, corpus
+    never shuffles — and the determinism recipe (CENTROID_QUANT floor-grid per round,
     pq_encode's 1e12-grid L2 argmin — train and encode share the metric)
     makes the whole train->encode->ADC pipeline replayable by the DuckDB
     oracle, closing the 'trained path has no value oracle' gap. tol=0.0

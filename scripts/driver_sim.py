@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import sys
+import time
 from datetime import datetime
 
 import duckdb
@@ -77,40 +78,53 @@ def main() -> int:
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    print("entry rows:", entry_mod.entry(spark).count())
+    print("entry rows:", entry_mod.entry(spark).count(), flush=True)
     queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     if only is not None:
         unknown = only - queries.keys()
         if unknown:
             raise SystemExit(f"--only names not in catalog: {sorted(unknown)}")
         queries = {n: f for n, f in queries.items() if n in only}
-    print(f"{len(queries)} queries, {len(oracles)} with oracles, sf_dir={sf_dir}")
+    print(
+        f"{len(queries)} queries, {len(oracles)} with oracles, sf_dir={sf_dir}",
+        flush=True,
+    )
 
     failures = []
     for name, fn in sorted(queries.items()):
         # the scope releases what the query pinned once its rows are in
+        t0 = time.perf_counter()
         with scope():
             sdf = fn(spark, sf_dir)
             if name not in oracles:
-                print(f"  {name}: rows-only, {sdf.count()} rows")
+                print(f"  {name}: rows-only, {sdf.count()} rows", flush=True)
                 continue
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+        spark_s = time.perf_counter() - t0
+        # named before the oracle runs, so a stalled oracle shows its row
+        print(f"  {name}: spark {spark_s:.2f} s, oracle running", flush=True)
+        t0 = time.perf_counter()
         res = con.execute(oracles[name])
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()
+        oracle_s = time.perf_counter() - t0
         so = sorted(range(len(scols)), key=lambda i: scols[i])
         do = sorted(range(len(dcols)), key=lambda i: dcols[i])
         s_set = sorted([tuple(_norm(r[i]) for i in so) for r in srows], key=repr)
         d_set = sorted([tuple(_norm(r[i]) for i in do) for r in drows], key=repr)
         ok = sorted(scols) == sorted(dcols) and s_set == d_set
-        print(f"  {name}: {'MATCH' if ok else 'MISMATCH'} ({len(srows)} rows)")
+        print(
+            f"  {name}: {'MATCH' if ok else 'MISMATCH'} ({len(srows)} rows; "
+            f"spark {spark_s:.2f} s, oracle {oracle_s:.2f} s)",
+            flush=True,
+        )
         if not ok:
             failures.append(name)
             for a, b in list(zip(s_set, d_set))[:5]:
                 if a != b:
-                    print("    spark:", a, "\n    duck :", b)
-    print("FAILURES:", failures if failures else "none")
+                    print("    spark:", a, "\n    duck :", b, flush=True)
+    print("FAILURES:", failures if failures else "none", flush=True)
     spark.stop()
     return 1 if failures else 0
 

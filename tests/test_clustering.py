@@ -14,6 +14,7 @@ from data_algorithms_with_pyspark_spark.operators.clustering import (
     kmeans_fit_assign,
     kmeans_train,
 )
+from tests.conftest import persisted_rdd_ids
 
 
 def _blob_rows():
@@ -103,11 +104,15 @@ def test_assign_matches_brute_force(spark, blobs):
 
 
 def test_kmeans_requires_k_vectors(spark):
+    """Too few vectors raise, and the failed trainer leaves no persisted
+    relation behind."""
     df = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, vec array<double>"
     )
+    before = persisted_rdd_ids(spark)
     with pytest.raises(ValueError, match="at least k=3"):
         kmeans_train(df, k=3, vec_col="vec")
+    assert persisted_rdd_ids(spark) - before == set()
 
 
 def test_semdedup_with_trained_centroids(spark, blobs):

@@ -606,6 +606,63 @@ def test_pq_codebook_rejects_non_power_of_two_ksub(spark):
         pq_codebook(vecs, m=2, ksub=12, vec_col="vec")
 
 
+def _pq_lloyd_reference(vecs, m, ksub, rounds):
+    """Plain Lloyd reference for ``pq_train_codebook`` over ``vecs`` in id
+    order: init = the ksub first subvectors, assignment = L2 argmin on the
+    1e12 floor grid with ties to the lower code, means on the 1e-6 floor
+    grid, a codeword with no members keeps its value. Returns the codebook
+    and the (s, c) codewords that were empty in some round."""
+    import math
+
+    import numpy as np
+
+    def fq(x):
+        return math.floor(x * 1e6 + 0.5) / 1e6
+
+    x = np.array(vecs, dtype=np.float64)
+    w = x.shape[1] // m
+    cb = [[[fq(v) for v in x[c, s * w : (s + 1) * w]] for c in range(ksub)]
+          for s in range(m)]
+    empty = set()
+    for _ in range(rounds):
+        for s in range(m):
+            members = [[] for _ in range(ksub)]
+            for v in x[:, s * w : (s + 1) * w]:
+                d2 = [sum((float(a) - b) ** 2 for a, b in zip(v, cw)) for cw in cb[s]]
+                best = min(range(ksub), key=lambda c: (math.floor(d2[c] * 1e12 + 0.5), c))
+                members[best].append(v)
+            for c in range(ksub):
+                if members[c]:
+                    cb[s][c] = [fq(v) for v in np.mean(members[c], axis=0)]
+                else:
+                    empty.add((s, c))
+    return cb, empty
+
+
+def test_pq_train_codebook_matches_lloyd_reference(spark):
+    """pq_train_codebook equals the plain Lloyd reference, round by round.
+    Ids 0 and 1 share subvector 0, so codeword (0, 1) ties with (0, 0),
+    loses the tie and keeps its initial value. Integer coordinates keep
+    every mean sum exact in any order."""
+    from data_algorithms_with_pyspark_spark.operators.similarity import (
+        pq_train_codebook,
+    )
+
+    vecs = [
+        [0.0, 0.0, 0.0, 0.0],
+        [0.0, 0.0, 9.0, 9.0],
+        [9.0, 0.0, 0.0, 9.0],
+        [0.0, 9.0, 9.0, 0.0],
+    ] + [[float((i * 5 + d * 3) % 7) for d in range(4)] for i in range(4, 24)]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, vec array<double>")
+    for rounds in (1, 3):
+        want, empty = _pq_lloyd_reference(vecs, 2, 4, rounds)
+        got = pq_train_codebook(df, m=2, ksub=4, max_iter=rounds, tol=0.0)
+        assert got == want, rounds
+        assert (0, 1) in empty
+    assert pq_train_codebook(df, m=2, ksub=4, max_iter=1)[0][1] == [0.0, 0.0]
+
+
 def test_pq_trained_codebook_beats_first_ids_on_clustered_data(spark):
     """On CLUSTERED vectors (PQ's intended regime) trained per-subspace
     codebooks must reconstruct better than the first-k-ids stand-in:
@@ -1390,11 +1447,13 @@ def test_scan_partition_estimate_matches_decision(spark, tmp_path):
 
 def test_ivf_and_pq_literal_broadcast_paths_identical(spark, monkeypatch):
     """The size-based switch (clustering.LITERAL_CELLS_MAX, VERDICT r11
-    #6): ivf_assign and pq_train_codebook must produce bit-identical
-    results through the row-local literal form and the broadcast form —
-    same grid, same tie packing, same cid type, which also matches the
-    k-means family's — and the literal expression must refuse a literal
-    past the bound instead of riding it into the analyzer."""
+    #6): ivf_assign must produce bit-identical results through the
+    row-local literal form and the broadcast form — same grid, same tie
+    packing, same cid type, which also matches the k-means family's — and
+    the literal expression must refuse a literal past the bound instead of
+    riding it into the analyzer. pq_train_codebook has one path (it
+    assigns through pq_encode), so moving LITERAL_CELLS_MAX cannot move
+    its result."""
     import pytest as _pytest
 
     import data_algorithms_with_pyspark_spark.operators.clustering as cl
